@@ -5,7 +5,8 @@ The reference posts flat docs to Solr and lets Lucene build the index
 same artifacts natively as Spark tables:
 
 - ``postings(tid, bucket, block_id, n, block_max_tf, block_min_dl,
-  blob|plist)`` — keyed by ``tid = xxhash64(term)``; exact term strings
+  blob)`` — keyed by ``tid = xxhash64(term)``; ``blob`` is the
+  varint-encoded doc-range block (index/codec.py); exact term strings
   live in dfreq (build verifies tid injectivity per corpus)
 - ``doclen(doc_id, repo, path, lang, dl, content_sha256, seg)``  (doc
   store + length norms + the per-row sha256 invariant from BASELINE.json)
@@ -97,7 +98,6 @@ class IndexConfig:
     n_buckets: int = 32
     seg_blocks: int = 8192
     analyzer: str = "code"
-    compress: bool = True
     meta_cols: tuple[str, ...] = ("repo", "path", "lang")
     # v5: store each posting's within-doc token positions (Lucene text
     # fields index positions by default — required for phrase queries,
@@ -126,13 +126,21 @@ def _cfg_from_meta(meta: dict, path: str) -> IndexConfig:
     """Validate the on-disk format version and decode IndexConfig from
     index metadata. EVERY reader/mutator of an existing index goes
     through this — appending v3-layout files into a v1/v2 index would
-    silently corrupt it, so a version mismatch fails loudly here."""
+    silently corrupt it, so a version mismatch fails loudly here. The
+    same holds for the uncompressed (``"compress": false``) layout, which
+    this engine no longer reads."""
     fmt = meta.get("format", 1)
     if fmt not in (INDEX_FORMAT_VERSION, POSITIONS_FORMAT_VERSION):
         raise ValueError(
             f"index at {path} has on-disk format v{fmt}; this engine reads "
             f"v{INDEX_FORMAT_VERSION}/v{POSITIONS_FORMAT_VERSION} — rebuild "
             "with build_to_path"
+        )
+    if meta.get("compress", True) is not True:
+        raise ValueError(
+            f"index at {path} uses the uncompressed (compress=false) postings "
+            "layout, which this engine no longer reads — rebuild with "
+            "build_to_path"
         )
     return IndexConfig(
         k1=meta["k1"],
@@ -141,7 +149,6 @@ def _cfg_from_meta(meta: dict, path: str) -> IndexConfig:
         n_buckets=meta["n_buckets"],
         seg_blocks=meta["seg_blocks"],
         analyzer=meta["analyzer"],
-        compress=meta["compress"],
         positions=(fmt == POSITIONS_FORMAT_VERSION),
     )
 
@@ -364,8 +371,8 @@ def _postings_blocks(tf: DataFrame, cfg: IndexConfig) -> DataFrame:
     per-block score bound even after later appends shift avgdl — appended
     segments never invalidate existing pruning metadata.
 
-    Compressed path (default): shuffle-sort slim (tid, doc_id, tf, dl)
-    rows by (tid, doc_id) and run one linear numpy pass per partition
+    Shuffle-sort slim (tid, doc_id, tf, dl) rows by (tid, doc_id) and
+    run one linear numpy pass per partition
     (sort-based grouping — Lucene's segment flush is the same shape).
     Rows leave the encoder already sorted, so the parquet row groups get
     tid-clustered min/max stats for free. The term STRING never enters
@@ -373,8 +380,6 @@ def _postings_blocks(tf: DataFrame, cfg: IndexConfig) -> DataFrame:
     live in the dfreq table, and build_to_path verifies tid uniqueness
     against it, so a (cosmically unlikely, 2^-64/pair) hash collision
     fails the build loudly instead of silently merging two terms.
-    The agg path (collect_list + sort_array) remains for
-    ``compress=False`` debug builds.
     """
     cols = ["doc_id", "tf", "dl"] + (["positions"] if cfg.positions else [])
     slim = tf.select(F.xxhash64("term").alias("tid"), *cols)
@@ -391,27 +396,8 @@ def _postings_blocks_tid(slim: DataFrame, cfg: IndexConfig) -> DataFrame:
     has_pos = "positions" in slim.columns
     if cfg.positions and not has_pos:
         raise ValueError("positional index: encoder input must carry positions")
-    if cfg.positions and not cfg.compress:
-        raise NotImplementedError("positions require compress=True (v5 blobs)")
     bucket = F.pmod(F.col("tid"), F.lit(cfg.n_buckets)).cast("int").alias("bucket")
     seg = F.floor(F.col("block_id") / cfg.seg_blocks).cast("long").alias("seg")
-    if not cfg.compress:
-        return (
-            slim.withColumn(
-                "block_id", F.floor(F.col("doc_id") / cfg.block_size).cast("long")
-            )
-            .groupBy("tid", "block_id")
-            .agg(
-                F.sort_array(F.collect_list(F.struct("doc_id", "tf", "dl"))).alias("plist"),
-                F.count(F.lit(1)).cast("int").alias("n"),
-                F.max("tf").cast("int").alias("block_max_tf"),
-                F.min("dl").cast("int").alias("block_min_dl"),
-            )
-            .select(
-                "tid", "block_id", "n", "block_max_tf", "block_min_dl", "plist",
-                bucket, seg,
-            )
-        )
     pre = slim.repartition(
         F.col("tid"), F.floor(F.col("doc_id") / cfg.block_size)
     ).sortWithinPartitions("tid", "doc_id")
@@ -425,6 +411,34 @@ def _postings_blocks_tid(slim: DataFrame, cfg: IndexConfig) -> DataFrame:
 def _dfreq_table(tf: DataFrame) -> DataFrame:
     return tf.groupBy("term", "bucket").agg(
         F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf")
+    )
+
+
+def _merge_dfreq(
+    dfreq_old: DataFrame, killed: DataFrame, tf_new: DataFrame | None = None
+) -> DataFrame:
+    """The exact dfreq after a mutation, one row per term: the old rows
+    (an appended index holds one per segment of a term) plus the added
+    docs' ``tf_new`` rows are SUMMED per term first, then the removed
+    docs' decoded postings ``killed`` are subtracted once; terms whose
+    df reaches 0 are dropped. Shared by overwrite_docs and delete_docs."""
+    rows = dfreq_old if tf_new is None else dfreq_old.unionByName(_dfreq_table(tf_new))
+    dec = killed.groupBy("tid").agg(
+        F.count(F.lit(1)).alias("df_dec"), F.sum("tf").alias("cf_dec")
+    )
+    zero = F.lit(0)
+    return (
+        rows.groupBy("term", "bucket")
+        .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
+        .withColumn("tid", F.xxhash64("term"))
+        .join(dec, "tid", "left")
+        .select(
+            "term",
+            "bucket",
+            (F.col("df") - F.coalesce(F.col("df_dec"), zero)).alias("df"),
+            (F.col("cf") - F.coalesce(F.col("cf_dec"), zero)).alias("cf"),
+        )
+        .where(F.col("df") > 0)
     )
 
 
@@ -641,9 +655,6 @@ def build_to_path(
                 t0 = lin.start(stage)
                 tf_g = tf_staged.where(F.col("bucket").isin(group))
                 pobs = Observation(f"postings_metrics_{stage}")
-                size_metric = (
-                    F.sum(F.length("blob")) if cfg.compress else F.lit(0).cast("long")
-                )
                 # No repartition-by-bucket before the write: that made ONE
                 # task per bucket and head-term buckets are heavy
                 # (measured: postings stage nearly thread-count-
@@ -653,7 +664,7 @@ def build_to_path(
                 # bucket directories, at the cost of more files per
                 # bucket.
                 blocks = _postings_blocks(tf_g, cfg).observe(
-                    pobs, F.sum("n").alias("np"), size_metric.alias("nb")
+                    pobs, F.sum("n").alias("np"), F.sum(F.length("blob")).alias("nb")
                 )
                 dfreq_fut = pool.submit(_dfreq_write, tf_g)
                 # Dynamic partition overwrite (per-write option — never
@@ -697,7 +708,9 @@ def build_to_path(
             "n_buckets": cfg.n_buckets,
             "seg_blocks": cfg.seg_blocks,
             "analyzer": cfg.analyzer,
-            "compress": cfg.compress,
+            # always true; kept so engines that still check the key open
+            # indexes written by this one
+            "compress": True,
         }
     )
 
@@ -890,36 +903,9 @@ def overwrite_docs(
 
     # --- dfreq: exact decrement/increment, staged then swapped
     tf_new = _tf_table(docs_new, cfg).persist(StorageLevel.MEMORY_AND_DISK)
-    dec = killed.groupBy("tid").agg(
-        F.count(F.lit(1)).alias("df_dec"), F.sum("tf").alias("cf_dec")
-    )
-    inc = tf_new.groupBy("term", "bucket").agg(
-        F.count(F.lit(1)).alias("df_inc"), F.sum("tf").alias("cf_inc")
-    )
-    dfreq_old = spark.read.parquet(f"{path}/dfreq").withColumn(
-        "tid", F.xxhash64("term")
-    )
-    merged_df = (
-        dfreq_old.join(inc, ["term", "bucket"], "full_outer")
-        .withColumn("tid", F.coalesce(F.col("tid"), F.xxhash64("term")))
-        .join(dec, "tid", "left")
-        .select(
-            "term",
-            "bucket",
-            (
-                F.coalesce(F.col("df"), F.lit(0))
-                - F.coalesce(F.col("df_dec"), F.lit(0))
-                + F.coalesce(F.col("df_inc"), F.lit(0))
-            ).alias("df"),
-            (
-                F.coalesce(F.col("cf"), F.lit(0))
-                - F.coalesce(F.col("cf_dec"), F.lit(0))
-                + F.coalesce(F.col("cf_inc"), F.lit(0))
-            ).alias("cf"),
-        )
-        .where(F.col("df") > 0)
-    )
-    merged_df.write.mode("overwrite").partitionBy("bucket").parquet(f"{path}/dfreq.next")
+    _merge_dfreq(spark.read.parquet(f"{path}/dfreq"), killed, tf_new).write.mode(
+        "overwrite"
+    ).partitionBy("bucket").parquet(f"{path}/dfreq.next")
 
     # --- postings + doclen: stage the merged affected segs side-by-side.
     # NOT dynamic-overwrite on the live dirs: a (bucket, seg) dir whose
@@ -1071,25 +1057,9 @@ def delete_docs(
     killed = old_rows.join(changed, "doc_id", "left_semi")
 
     # dfreq: exact decrement (the subtractive half of overwrite's merge)
-    dec = killed.groupBy("tid").agg(
-        F.count(F.lit(1)).alias("df_dec"), F.sum("tf").alias("cf_dec")
-    )
-    dfreq_old = spark.read.parquet(f"{path}/dfreq").withColumn(
-        "tid", F.xxhash64("term")
-    )
-    merged_df = (
-        dfreq_old.join(dec, "tid", "left")
-        .select(
-            "term",
-            "bucket",
-            (F.col("df") - F.coalesce(F.col("df_dec"), F.lit(0))).alias("df"),
-            (F.col("cf") - F.coalesce(F.col("cf_dec"), F.lit(0))).alias("cf"),
-        )
-        .where(F.col("df") > 0)
-    )
-    merged_df.write.mode("overwrite").partitionBy("bucket").parquet(
-        f"{path}/dfreq.next"
-    )
+    _merge_dfreq(spark.read.parquet(f"{path}/dfreq"), killed).write.mode(
+        "overwrite"
+    ).partitionBy("bucket").parquet(f"{path}/dfreq.next")
 
     pos_cols = ["positions"] if cfg.positions else []
     blocks = _postings_blocks_tid(

@@ -27,12 +27,13 @@ Physical shape of a query (see ``.explain`` audit in tests/bench):
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from oni_indexer_spark.analyzer import query_terms, tokens_col
-from oni_indexer_spark.index.build import IndexConfig, IndexTables, term_bucket
+from oni_indexer_spark.analyzer import query_terms
+from oni_indexer_spark.index.build import IndexConfig, IndexTables
 
 
 def idf_expr(df_col: Column, n_docs: int) -> Column:
@@ -42,89 +43,6 @@ def idf_expr(df_col: Column, n_docs: int) -> Column:
 
 def tfn_expr(tf: Column, dl: Column, avgdl: float, k1: float, b: float) -> Column:
     return (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * dl / F.lit(avgdl)))
-
-
-def _make_decode_map_arrow(block_size: int):
-    """mapInArrow decoder factory: one vectorized numpy pass per Arrow
-    batch, emitting already-EXPLODED (tid, doc_id, tf, dl) rows — no
-    pandas conversion, no JVM-side arrays_zip/explode. v4 blobs store
-    doc/dl relative to (block_id * block_size, block_min_dl); both base
-    columns ride in the row (2 small ints per BLOCK, repaid many times
-    over by the shorter varints per POSTING)."""
-
-    def _decode(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        from oni_indexer_spark.index.codec import decode_postings_flat
-
-        for b in batches:
-            idx = {n: i for i, n in enumerate(b.schema.names)}
-            blobs = b.column(idx["blob"]).to_pylist()
-            base_docs = (
-                b.column(idx["block_id"]).to_numpy(zero_copy_only=False).astype(np.int64)
-                * block_size
-            )
-            base_dls = b.column(idx["block_min_dl"]).to_numpy(zero_copy_only=False).astype(np.int64)
-            doc_ids, tfs, dls, counts = decode_postings_flat(blobs, base_docs, base_dls)
-            tid_idx = np.repeat(np.arange(len(blobs), dtype=np.int64), counts)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    b.column(idx["tid"]).take(pa.array(tid_idx)),
-                    pa.array(doc_ids, type=pa.int64()),
-                    pa.array(tfs, type=pa.int32()),
-                    pa.array(dls, type=pa.int32()),
-                ],
-                names=["tid", "doc_id", "tf", "dl"],
-            )
-
-    return _decode
-
-
-def _make_decode_map_pos_arrow(block_size: int):
-    """Positional (v5) decoder: like :func:`_make_decode_map_arrow` but
-    consumes the row's ``n`` column (the v5 stream is self-delimiting
-    only given the posting count) and emits each posting's positions as
-    a list column — the shape overwrite/compaction need to re-encode a
-    positional index losslessly."""
-
-    def _decode(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        from oni_indexer_spark.index.codec import decode_postings_pos_flat
-
-        for b in batches:
-            idx = {n: i for i, n in enumerate(b.schema.names)}
-            blobs = b.column(idx["blob"]).to_pylist()
-            ns = b.column(idx["n"]).to_numpy(zero_copy_only=False).astype(np.int64)
-            base_docs = (
-                b.column(idx["block_id"]).to_numpy(zero_copy_only=False).astype(np.int64)
-                * block_size
-            )
-            base_dls = b.column(idx["block_min_dl"]).to_numpy(zero_copy_only=False).astype(np.int64)
-            doc_ids, tfs, dls, counts, pos_flat = decode_postings_pos_flat(
-                blobs, ns, base_docs, base_dls
-            )
-            tid_idx = np.repeat(np.arange(len(blobs), dtype=np.int64), counts)
-            pos_offsets = np.concatenate(
-                ([0], np.cumsum(tfs.astype(np.int64)))
-            ).astype(np.int32)
-            pos_list = pa.ListArray.from_arrays(
-                pa.array(pos_offsets), pa.array(pos_flat, type=pa.int32())
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    b.column(idx["tid"]).take(pa.array(tid_idx)),
-                    pa.array(doc_ids, type=pa.int64()),
-                    pa.array(tfs, type=pa.int32()),
-                    pa.array(dls, type=pa.int32()),
-                    pos_list,
-                ],
-                names=["tid", "doc_id", "tf", "dl", "positions"],
-            )
-
-    return _decode
 
 
 def _fq_condition(col: str, v) -> Column:
@@ -172,70 +90,211 @@ def _membership_filter(allowed, doc_ids, *arrs):
     return (doc_ids[ok], *[a[ok] for a in arrs])
 
 
-def _make_decode_score_topk_arrow(
-    block_size: int, idf_val: float, avgdl: float, k1: float, b: float, k: int,
-    positions: bool = False,
+def _whole_block_batches(batches):
+    """Regroup block_id-SORTED Arrow batches so each yielded batch holds
+    only whole blocks: the trailing block of every batch is held back
+    and prepended to the next one, because a co-located partition's
+    block may continue across an Arrow batch boundary (a doc's total
+    must never be computed from part of its block)."""
+    import numpy as np
+    import pyarrow as pa
+
+    carry = None
+    for bt in batches:
+        if carry is not None:
+            bt = pa.Table.from_batches([carry, bt]).combine_chunks().to_batches()[0]
+            carry = None
+        n = len(bt)
+        if n == 0:
+            continue
+        blk = bt.column("block_id").to_numpy(zero_copy_only=False)
+        last_start = int(np.searchsorted(blk, blk[n - 1], side="left"))
+        carry = bt.slice(last_start)
+        if last_start > 0:
+            yield bt.slice(0, last_start)
+    if carry is not None:
+        yield carry
+
+
+class DecodedUnit(NamedTuple):
+    """One decoded unit of block rows: per-ROW ``tids`` (None when the
+    input has no tid column), ``blk`` and ``base_docs``; per-POSTING
+    ``doc_ids``, ``tfs`` and ``dls``; per-row posting ``counts``; and
+    the flat ``positions`` stream when it was asked for."""
+
+    tids: object
+    blk: object
+    base_docs: object
+    doc_ids: object
+    tfs: object
+    dls: object
+    counts: object
+    positions: object
+
+
+def _block_stream(
+    batches,
+    block_size: int,
+    positional: bool = False,
+    with_positions: bool = False,
+    whole_blocks: bool = False,
+):
+    """The one decode core under every kernel: Arrow batches of block
+    rows ``([tid,] block_id, block_min_dl[, n], blob)`` → one
+    :class:`DecodedUnit` per batch, decoded in one vectorized pass
+    against the v4 per-row bases (doc relative to ``block_id *
+    block_size``, dl relative to ``block_min_dl``). ``positional``
+    reads v5 blobs (which need the row's ``n``); positions are only
+    materialized with ``with_positions``. ``whole_blocks`` is for
+    block-sorted (co-located) input: units then hold whole blocks
+    (:func:`_whole_block_batches`). Unsorted scans stream batch by
+    batch with no carry copy."""
+    import numpy as np
+
+    from oni_indexer_spark.index.codec import (
+        decode_postings_flat,
+        decode_postings_pos_flat,
+    )
+
+    def ints(b, name):
+        return b.column(name).to_numpy(zero_copy_only=False).astype(np.int64)
+
+    for b in _whole_block_batches(batches) if whole_blocks else batches:
+        if len(b) == 0:
+            continue
+        blobs = b.column("blob").to_pylist()
+        blk = ints(b, "block_id")
+        base_docs = blk * block_size
+        base_dls = ints(b, "block_min_dl")
+        pos = None
+        if positional:
+            doc_ids, tfs, dls, counts, pos = decode_postings_pos_flat(
+                blobs, ints(b, "n"), base_docs, base_dls, with_positions=with_positions
+            )
+        else:
+            doc_ids, tfs, dls, counts = decode_postings_flat(blobs, base_docs, base_dls)
+        tids = ints(b, "tid") if "tid" in b.schema.names else None
+        yield DecodedUnit(tids, blk, base_docs, doc_ids, tfs, dls, counts, pos)
+
+
+def _slot_grid(u: DecodedUnit, block_size: int):
+    """Dense (block-group × block_size) slot of every posting of a
+    block-sorted unit, so per-doc sums are scatter-adds. Returns
+    ``(slot per posting, number of slots, slot → doc_id function)``."""
+    import numpy as np
+
+    new_grp = np.concatenate(([True], u.blk[1:] != u.blk[:-1]))
+    grp_of_row = np.cumsum(new_grp) - 1
+    grp_base = u.base_docs[new_grp]
+    grp_rep = np.repeat(grp_of_row, u.counts)
+    slot = grp_rep * block_size + (u.doc_ids - grp_base[grp_rep])
+    n_slots = (int(grp_of_row[-1]) + 1) * block_size
+
+    def slot_docs(sel):
+        return grp_base[sel // block_size] + (sel % block_size)
+
+    return slot, n_slots, slot_docs
+
+
+def _conservative_topk(doc_ids, scores, k: int | None):
+    """Per-unit candidate selection that cannot change the global top-k
+    after rounding: every row with score >= round(kth_unit_score, 6) -
+    1e-6 survives. The unit's kth is <= the global kth, so a dropped row
+    rounds strictly below the global kth and cannot enter the final
+    top-k even via the doc_id tie-break (the same rounding-grid guard
+    as the block-max pruner)."""
+    import numpy as np
+
+    if k is None or scores.size <= k:
+        return doc_ids, scores
+    kth = np.partition(scores, scores.size - k)[scores.size - k]
+    keep = scores >= (np.round(kth, 6) - 1e-6)
+    return doc_ids[keep], scores[keep]
+
+
+def _tfn_np(tfs, dls, avgdl: float, k1: float, b: float):
+    """numpy twin of :func:`tfn_expr`: the same IEEE-double ops in the
+    same order as the JVM and DuckDB forms, so scores agree exactly."""
+    import numpy as np
+
+    tf = np.asarray(tfs, dtype=np.float64)
+    dl = np.asarray(dls, dtype=np.float64)
+    return (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * dl / avgdl))
+
+
+def _scoring_kernel(
+    block_size: int,
+    score_unit,
+    positional: bool,
+    with_positions: bool = False,
+    whole_blocks: bool = True,
+    k: int | None = None,
+    floor: float | None = None,
     allowed_bc=None,
 ):
-    """Single-term fast path: decode + BM25 score + per-batch candidate
-    top-k in ONE numpy pass. A single term hits each doc at most once
-    (tid, doc_id is unique across segments), so per-posting scores ARE
-    the final per-doc scores — no cross-term sum, hence no groupBy, and
-    each Arrow batch can pre-select its own top candidates, so a hot
-    term's ~n_docs postings never leave the Python worker (measured 1M
-    docs: the dominant cost of q_hot_single was pushing 1M decoded rows
-    through Arrow + a JVM hash aggregate).
+    """mapInArrow body shared by every scorer: ``score_unit(unit)`` maps
+    one :func:`_block_stream` unit to exact ``(doc_ids, scores)`` (or
+    None), then the shared tail runs inside the worker:
 
-    Exactness: the score expression evaluates the same IEEE-double ops
-    in the same order as the JVM/tfn_expr/DuckDB forms. Selection is
-    conservative against the rank-rounding grid: every row with
-    score >= round(kth_batch_score, 6) - 1e-6 survives (same guard as
-    the block-max pruner), so the global top-k after rounding is
-    unchanged."""
+    - ``allowed_bc`` (a broadcast SORTED doc_id array) applies a pushed
+      fq BEFORE selection, so the output stays O(k) per unit;
+    - ``floor`` (a pass-1 τ of the pruned path) drops docs below
+      round(τ,6)-1e-6 — τ <= the true kth score;
+    - ``k`` keeps the conservative per-unit top-k candidates.
 
-    def _decode(batches):
-        import numpy as np
+    Output rows are ``(doc_id long, score double)``."""
+
+    def _run(batches):
         import pyarrow as pa
 
-        from oni_indexer_spark.index.codec import (
-            decode_postings_flat,
-            decode_postings_pos_flat,
-        )
-
-        for batch in batches:
-            idx = {n: i for i, n in enumerate(batch.schema.names)}
-            blobs = batch.column(idx["blob"]).to_pylist()
-            base_docs = (
-                batch.column(idx["block_id"]).to_numpy(zero_copy_only=False).astype(np.int64)
-                * block_size
-            )
-            base_dls = (
-                batch.column(idx["block_min_dl"]).to_numpy(zero_copy_only=False).astype(np.int64)
-            )
-            if positions:
-                ns = batch.column(idx["n"]).to_numpy(zero_copy_only=False).astype(np.int64)
-                doc_ids, tfs, dls, _, _p = decode_postings_pos_flat(
-                    blobs, ns, base_docs, base_dls, with_positions=False
-                )
-            else:
-                doc_ids, tfs, dls, _ = decode_postings_flat(blobs, base_docs, base_dls)
+        guard = None if floor is None else (round(floor, 6) - 1e-6)
+        for u in _block_stream(
+            batches, block_size, positional, with_positions, whole_blocks
+        ):
+            out = score_unit(u)
+            if out is None:
+                continue
+            docs, s = out
             if allowed_bc is not None:
-                doc_ids, tfs, dls = _membership_filter(
-                    allowed_bc.value, doc_ids, tfs, dls
+                docs, s = _membership_filter(allowed_bc.value, docs, s)
+            if guard is not None:
+                keep = s >= guard
+                docs, s = docs[keep], s[keep]
+            docs, s = _conservative_topk(docs, s, k)
+            if s.size:
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(docs, type=pa.int64()), pa.array(s, type=pa.float64())],
+                    names=["doc_id", "score"],
                 )
-            tf = tfs.astype(np.float64)
-            dl = dls.astype(np.float64)
-            s = idf_val * ((tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * dl / avgdl)))
-            if s.size > k:
-                kth = np.partition(s, s.size - k)[s.size - k]
-                keep = s >= (np.round(kth, 6) - 1e-6)
-                doc_ids, s = doc_ids[keep], s[keep]
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(doc_ids, type=pa.int64()), pa.array(s, type=pa.float64())],
-                names=["doc_id", "score"],
-            )
 
-    return _decode
+    return _run
+
+
+def _make_decode_score_topk_arrow(
+    block_size: int, idf_val: float, avgdl: float, k1: float, b: float,
+    k: int | None,
+    positions: bool = False,
+    allowed_bc=None,
+    floor: float | None = None,
+):
+    """Single-term scorer: decode + BM25 score + per-batch candidate
+    top-k in ONE numpy pass over an unsorted scan. A single term hits
+    each doc at most once (tid, doc_id is unique across segments), so
+    per-posting scores ARE the final per-doc scores — no cross-term sum,
+    hence no groupBy and no block co-location, and each Arrow batch can
+    pre-select its own top candidates, so a hot term's ~n_docs postings
+    never leave the Python worker (measured 1M docs: the dominant cost
+    of q_hot_single was pushing 1M decoded rows through Arrow + a JVM
+    hash aggregate). ``k=None`` (boolean clauses, paging, unselective
+    fq) emits every posting's score."""
+
+    def score(u):
+        return u.doc_ids, idf_val * _tfn_np(u.tfs, u.dls, avgdl, k1, b)
+
+    return _scoring_kernel(
+        block_size, score, positions, whole_blocks=False, k=k, floor=floor,
+        allowed_bc=allowed_bc,
+    )
 
 
 def _make_decode_score_group_arrow(
@@ -250,131 +309,43 @@ def _make_decode_score_group_arrow(
     positions: bool = False,
     allowed_bc=None,
 ):
-    """Multi-term scorer factory: rows are (tid, block_id, block_min_dl,
-    blob), hash-partitioned by block_id and sorted by block_id within the
+    """Multi-term scorer: rows are (tid, block_id, block_min_dl, blob),
+    hash-partitioned by block_id and sorted by block_id within the
     partition, so ALL query terms' postings for a given doc-range block
     arrive together (doc-range blocks are global across terms — a doc's
     block_id is doc_id // block_size for every term). One numpy pass per
-    batch of complete blocks:
+    unit of whole blocks:
 
       decode blobs → per-posting BM25 contribution → scatter-add into a
       dense (block-group × block_size) score grid → per-doc EXACT totals
       + term-hit counts, entirely inside the Python worker.
 
-    This replaces the decoded-row shuffle + JVM hash aggregate of the
-    legacy path: the only shuffle is of the COMPRESSED block rows
-    (~2-4 B/posting vs ~16 B/posting partial-aggregated), and per-batch
-    candidate selection means a hot term's postings never leave the
-    worker (same trick as the single-term fast path, r3 VERDICT #2).
+    The only shuffle is of the COMPRESSED block rows (~2-4 B/posting vs
+    ~16 B/posting for decoded rows), and per-unit candidate selection
+    means a hot term's postings never leave the worker.
 
     ``n_terms_and``: when set, keep only docs hit by exactly that many
     terms (AND mode; (tid, doc) is unique so hits == terms matched).
-    ``k``: per-batch conservative top-k selection — every doc with
-    score >= round(kth_batch_score, 6) - 1e-6 survives; the batch kth is
-    <= the global kth, so any dropped doc rounds strictly below the
-    global kth and cannot enter the final top-k even via the doc_id
-    tie-break (same rounding-grid guard as the block pruner).
-    ``floor``: a PASS-1 τ (pruned path) — docs with total <
-    round(τ,6)-1e-6 are dropped for the same reason (τ <= true kth).
-    Blocks split across Arrow batches are carried over so a doc's total
-    is never computed partially.
+    ``k`` / ``floor`` / ``allowed_bc``: see :func:`_scoring_kernel`.
     """
 
-    def _decode(batches):
+    def score(u):
         import numpy as np
-        import pyarrow as pa
 
-        from oni_indexer_spark.index.codec import (
-            decode_postings_flat,
-            decode_postings_pos_flat,
-        )
+        idf_row = np.array([idf_by_tid[int(t)] for t in u.tids], dtype=np.float64)
+        s = np.repeat(idf_row, u.counts) * _tfn_np(u.tfs, u.dls, avgdl, k1, b)
+        slot, n_slots, slot_docs = _slot_grid(u, block_size)
+        tot = np.zeros(n_slots, dtype=np.float64)
+        np.add.at(tot, slot, s)
+        hits = np.zeros(n_slots, dtype=np.int32)
+        np.add.at(hits, slot, 1)
+        mask = (hits == n_terms_and) if n_terms_and is not None else (hits > 0)
+        sel = np.nonzero(mask)[0]
+        return slot_docs(sel), tot[sel]
 
-        guard = None if floor is None else (round(floor, 6) - 1e-6)
-
-        def process(tb):
-            idx = {n: i for i, n in enumerate(tb.schema.names)}
-            blobs = tb.column(idx["blob"]).to_pylist()
-            if not blobs:
-                return None
-            tids = tb.column(idx["tid"]).to_numpy(zero_copy_only=False).astype(np.int64)
-            blk = tb.column(idx["block_id"]).to_numpy(zero_copy_only=False).astype(np.int64)
-            base_docs = blk * block_size
-            base_dls = (
-                tb.column(idx["block_min_dl"]).to_numpy(zero_copy_only=False).astype(np.int64)
-            )
-            if positions:
-                ns = tb.column(idx["n"]).to_numpy(zero_copy_only=False).astype(np.int64)
-                doc_ids, tfs, dls, counts, _p = decode_postings_pos_flat(
-                    blobs, ns, base_docs, base_dls, with_positions=False
-                )
-            else:
-                doc_ids, tfs, dls, counts = decode_postings_flat(blobs, base_docs, base_dls)
-            idf_row = np.array([idf_by_tid[int(t)] for t in tids], dtype=np.float64)
-            tf = tfs.astype(np.float64)
-            dl = dls.astype(np.float64)
-            s = np.repeat(idf_row, counts) * (
-                (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * dl / avgdl))
-            )
-            # dense (group, in-block offset) slots; rows sorted by block_id
-            new_grp = np.concatenate(([True], blk[1:] != blk[:-1]))
-            grp_of_row = np.cumsum(new_grp) - 1
-            n_grp = int(grp_of_row[-1]) + 1
-            grp_base = base_docs[new_grp]
-            grp_rep = np.repeat(grp_of_row, counts)
-            slot = grp_rep * block_size + (doc_ids - grp_base[grp_rep])
-            tot = np.zeros(n_grp * block_size, dtype=np.float64)
-            np.add.at(tot, slot, s)
-            hits = np.zeros(n_grp * block_size, dtype=np.int32)
-            np.add.at(hits, slot, 1)
-            mask = (hits == n_terms_and) if n_terms_and is not None else (hits > 0)
-            sel = np.nonzero(mask)[0]
-            out_docs = grp_base[sel // block_size] + (sel % block_size)
-            out_s = tot[sel]
-            if allowed_bc is not None:
-                # fq pushed into the worker: filtering BEFORE candidate
-                # selection keeps the per-batch output O(k) instead of
-                # ~n_docs (r4 VERDICT "what's wrong" #1)
-                out_docs, out_s = _membership_filter(
-                    allowed_bc.value, out_docs, out_s
-                )
-            if guard is not None and out_s.size:
-                keep = out_s >= guard
-                out_docs, out_s = out_docs[keep], out_s[keep]
-            if k is not None and out_s.size > k:
-                kth = np.partition(out_s, out_s.size - k)[out_s.size - k]
-                keep = out_s >= (np.round(kth, 6) - 1e-6)
-                out_docs, out_s = out_docs[keep], out_s[keep]
-            if out_s.size == 0:
-                return None
-            return pa.RecordBatch.from_arrays(
-                [pa.array(out_docs, type=pa.int64()), pa.array(out_s, type=pa.float64())],
-                names=["doc_id", "score"],
-            )
-
-        carry: pa.RecordBatch | None = None
-        for bt in batches:
-            if carry is not None:
-                bt = pa.Table.from_batches([carry, bt]).combine_chunks().to_batches()[0]
-                carry = None
-            n = len(bt)
-            if n == 0:
-                continue
-            idx = {nm: i for i, nm in enumerate(bt.schema.names)}
-            blk = bt.column(idx["block_id"]).to_numpy(zero_copy_only=False)
-            # hold back the trailing block group: it may continue in the
-            # next batch of this partition
-            last_start = int(np.searchsorted(blk, blk[n - 1], side="left"))
-            carry = bt.slice(last_start)
-            if last_start > 0:
-                out = process(bt.slice(0, last_start))
-                if out is not None:
-                    yield out
-        if carry is not None and len(carry) > 0:
-            out = process(carry)
-            if out is not None:
-                yield out
-
-    return _decode
+    return _scoring_kernel(
+        block_size, score, positions, k=k, floor=floor, allowed_bc=allowed_bc
+    )
 
 
 def _make_decode_phrase_group_arrow(
@@ -392,7 +363,7 @@ def _make_decode_phrase_group_arrow(
     v5 positional blobs): rows are (tid, block_id, block_min_dl, n,
     blob), hash-partitioned and sorted by block_id like the multi-term
     scorer, so every phrase term's postings for a doc-range block arrive
-    together. One numpy pass per batch of complete blocks:
+    together. One numpy pass per unit of whole blocks:
 
       decode (with positions) → for each query offset j holding term
       t_j, form keys ``slot * P + (pos − j)`` over t_j's positions →
@@ -404,9 +375,8 @@ def _make_decode_phrase_group_arrow(
 
     ``tid_offsets``: [(tid, offset)] for every query position (a term
     appearing twice in the phrase contributes two offsets). ``k``:
-    per-batch conservative candidate selection, same rounding-grid guard
-    as the OR scorer. Blocks split across Arrow batches are carried over
-    so no doc's positions are seen partially.
+    per-unit conservative candidate selection, same rounding-grid guard
+    as the OR scorer.
 
     ``slop > 0`` switches to the sloppy matcher (Solr ``"a b"~N``):
     ORDERED proximity with a TOTAL gap budget — an anchor occurrence of
@@ -422,183 +392,138 @@ def _make_decode_phrase_group_arrow(
     brute-force oracle. slop=0 degenerates to the exact matcher and
     uses the faster key-grid path.)
     """
+    m = len(tid_offsets)
+
+    def score(u):
+        import numpy as np
+
+        if u.doc_ids.size == 0:
+            return None
+        slot, n_slots, slot_docs = _slot_grid(u, block_size)
+        slot_dl = np.zeros(n_slots, dtype=np.float64)
+        slot_dl[slot] = u.dls  # same dl for every term of a doc
+        # positions → their posting, term, slot
+        tfs64 = u.tfs.astype(np.int64)
+        tid_of_post = np.repeat(u.tids, u.counts)
+        # doc-level presence intersection BEFORE position expansion:
+        # a phrase occurrence needs every distinct term present in
+        # the doc, so only slots hit by all dts.size tids can match.
+        # Counting term-presence per slot costs a few bincount-style
+        # passes over the POSTINGS (cheap); it shrinks the expensive
+        # position-key build + np.unique from Σ tf positions to just
+        # the intersected docs' positions — on hot multi-term
+        # phrases the intersection is a few % of the corpus.
+        dts = np.unique(np.array([t for t, _ in tid_offsets], dtype=np.int64))
+        post_of_pos = np.repeat(np.arange(u.doc_ids.size, dtype=np.int64), tfs64)
+        pos_use = u.positions
+        if dts.size > 1:
+            pres = np.zeros(n_slots, dtype=np.int8)
+            hit = np.zeros(n_slots, dtype=bool)
+            for t in dts:
+                hit[:] = False
+                hit[slot[tid_of_post == t]] = True
+                pres += hit
+            keep_post = pres[slot] == dts.size
+            if not keep_post.any():
+                return None
+            kp = keep_post[post_of_pos]
+            post_of_pos = post_of_pos[kp]
+            pos_use = pos_use[kp]
+        tid_of_p = tid_of_post[post_of_pos]
+        P = np.int64(int(pos_use.max()) + m + 2 + slop) if pos_use.size else np.int64(
+            m + 2 + slop
+        )
+        if slop == 0:
+            keys_parts = []
+            for tid_j, j in tid_offsets:
+                pmask = tid_of_p == tid_j
+                adj = pos_use[pmask] - j
+                ok = adj >= 0  # a phrase can't start before the doc
+                keys_parts.append(slot[post_of_pos[pmask]][ok] * P + adj[ok])
+            keys = np.concatenate(keys_parts) if keys_parts else np.empty(0, np.int64)
+            if keys.size == 0:
+                return None
+            uk, cnt = np.unique(keys, return_counts=True)
+            full = uk[cnt == m]  # start positions hit by ALL offsets
+            if full.size == 0:
+                return None
+            hit_slots, pf = np.unique(full // P, return_counts=True)
+        else:
+            # greedy ordered chain: per term, sorted slot·P+pos keys;
+            # per step one searchsorted finds the smallest next
+            # position in the same slot, then the total-budget check
+            slot_of_p = slot[post_of_pos]
+            term_keys = {}
+            for tid_j, _ in tid_offsets:
+                if tid_j not in term_keys:
+                    pm = tid_of_p == tid_j
+                    term_keys[tid_j] = np.sort(slot_of_p[pm] * P + pos_use[pm])
+            t0, _ = tid_offsets[0]
+            ak = term_keys[t0]
+            a_slot, a_p0 = ak // P, ak % P
+            cur = a_p0.copy()
+            alive = np.ones(a_p0.size, dtype=bool)
+            for step, (tid_j, _) in enumerate(tid_offsets[1:], 1):
+                kt = term_keys[tid_j]
+                ix = np.searchsorted(kt, a_slot * P + cur, side="right")
+                ok = alive & (ix < kt.size)
+                cand = kt[np.minimum(ix, kt.size - 1)]
+                ok &= (cand // P == a_slot) & (
+                    cand % P <= a_p0 + step + slop
+                )
+                cur = np.where(ok, cand % P, cur)
+                alive = ok
+                if not alive.any():
+                    return None
+            hit_slots, pf = np.unique(a_slot[alive], return_counts=True)
+        s = idf_sum * _tfn_np(pf, slot_dl[hit_slots], avgdl, k1, b)
+        return slot_docs(hit_slots), s
+
+    return _scoring_kernel(
+        block_size, score, True, with_positions=True, k=k, allowed_bc=allowed_bc
+    )
+
+
+def _make_decode_map_arrow(block_size: int, positions: bool = False):
+    """mapInArrow decoder: block rows → already-EXPLODED (tid, doc_id,
+    tf, dl) rows — no pandas conversion, no JVM-side arrays_zip/explode.
+    On a positional index each posting also carries its positions as a
+    list column — the shape overwrite/compaction need to re-encode a
+    positional index losslessly."""
 
     def _decode(batches):
         import numpy as np
         import pyarrow as pa
 
-        from oni_indexer_spark.index.codec import decode_postings_pos_flat
-
-        m = len(tid_offsets)
-
-        def process(tb):
-            idx = {n: i for i, n in enumerate(tb.schema.names)}
-            blobs = tb.column(idx["blob"]).to_pylist()
-            if not blobs:
-                return None
-            tids = tb.column(idx["tid"]).to_numpy(zero_copy_only=False).astype(np.int64)
-            blk = tb.column(idx["block_id"]).to_numpy(zero_copy_only=False).astype(np.int64)
-            ns = tb.column(idx["n"]).to_numpy(zero_copy_only=False).astype(np.int64)
-            base_docs = blk * block_size
-            base_dls = (
-                tb.column(idx["block_min_dl"]).to_numpy(zero_copy_only=False).astype(np.int64)
+        for u in _block_stream(batches, block_size, positions, with_positions=positions):
+            cols = [
+                pa.array(np.repeat(u.tids, u.counts), type=pa.int64()),
+                pa.array(u.doc_ids, type=pa.int64()),
+                pa.array(u.tfs, type=pa.int32()),
+                pa.array(u.dls, type=pa.int32()),
+            ]
+            if positions:
+                offsets = np.concatenate(([0], np.cumsum(u.tfs.astype(np.int64))))
+                cols.append(pa.ListArray.from_arrays(
+                    pa.array(offsets.astype(np.int32)),
+                    pa.array(u.positions, type=pa.int32()),
+                ))
+            yield pa.RecordBatch.from_arrays(
+                cols, names=["tid", "doc_id", "tf", "dl", "positions"][: len(cols)]
             )
-            doc_ids, tfs, dls, counts, pos_flat = decode_postings_pos_flat(
-                blobs, ns, base_docs, base_dls
-            )
-            if doc_ids.size == 0:
-                return None
-            # dense (group, in-block offset) slots — same grid as the OR
-            # scorer (rows sorted by block_id within the partition)
-            new_grp = np.concatenate(([True], blk[1:] != blk[:-1]))
-            grp_of_row = np.cumsum(new_grp) - 1
-            n_grp = int(grp_of_row[-1]) + 1
-            grp_base = base_docs[new_grp]
-            grp_rep = np.repeat(grp_of_row, counts)
-            slot = grp_rep * block_size + (doc_ids - grp_base[grp_rep])
-            n_slots = n_grp * block_size
-            slot_dl = np.zeros(n_slots, dtype=np.float64)
-            slot_dl[slot] = dls  # same dl for every term of a doc
-            # positions → their posting, term, slot
-            tfs64 = tfs.astype(np.int64)
-            tid_of_post = np.repeat(tids, counts)
-            # doc-level presence intersection BEFORE position expansion:
-            # a phrase occurrence needs every distinct term present in
-            # the doc, so only slots hit by all dts.size tids can match.
-            # Counting term-presence per slot costs a few bincount-style
-            # passes over the POSTINGS (cheap); it shrinks the expensive
-            # position-key build + np.unique from Σ tf positions to just
-            # the intersected docs' positions — on hot multi-term
-            # phrases the intersection is a few % of the corpus.
-            dts = np.unique(np.array([t for t, _ in tid_offsets], dtype=np.int64))
-            if dts.size > 1:
-                pres = np.zeros(n_slots, dtype=np.int8)
-                hit = np.zeros(n_slots, dtype=bool)
-                for t in dts:
-                    hit[:] = False
-                    hit[slot[tid_of_post == t]] = True
-                    pres += hit
-                keep_post = pres[slot] == dts.size
-                if not keep_post.any():
-                    return None
-            else:
-                keep_post = None
-            post_of_pos = np.repeat(np.arange(doc_ids.size, dtype=np.int64), tfs64)
-            if keep_post is not None:
-                kp = keep_post[post_of_pos]
-                post_of_pos = post_of_pos[kp]
-                pos_use = pos_flat[kp]
-            else:
-                pos_use = pos_flat
-            tid_of_p = tid_of_post[post_of_pos]
-            P = np.int64(int(pos_use.max()) + m + 2 + slop) if pos_use.size else np.int64(
-                m + 2 + slop
-            )
-            if slop == 0:
-                keys_parts = []
-                for tid_j, j in tid_offsets:
-                    pmask = tid_of_p == tid_j
-                    adj = pos_use[pmask] - j
-                    ok = adj >= 0  # a phrase can't start before the doc
-                    keys_parts.append(slot[post_of_pos[pmask]][ok] * P + adj[ok])
-                keys = np.concatenate(keys_parts) if keys_parts else np.empty(0, np.int64)
-                if keys.size == 0:
-                    return None
-                uk, cnt = np.unique(keys, return_counts=True)
-                full = uk[cnt == m]  # start positions hit by ALL offsets
-                if full.size == 0:
-                    return None
-                hit_slots, pf = np.unique(full // P, return_counts=True)
-            else:
-                # greedy ordered chain: per term, sorted slot·P+pos keys;
-                # per step one searchsorted finds the smallest next
-                # position in the same slot, then the total-budget check
-                slot_of_p = slot[post_of_pos]
-                term_keys = {}
-                for tid_j, _ in tid_offsets:
-                    if tid_j not in term_keys:
-                        pm = tid_of_p == tid_j
-                        term_keys[tid_j] = np.sort(slot_of_p[pm] * P + pos_use[pm])
-                t0, _ = tid_offsets[0]
-                ak = term_keys[t0]
-                a_slot, a_p0 = ak // P, ak % P
-                cur = a_p0.copy()
-                alive = np.ones(a_p0.size, dtype=bool)
-                for step, (tid_j, _) in enumerate(tid_offsets[1:], 1):
-                    kt = term_keys[tid_j]
-                    ix = np.searchsorted(kt, a_slot * P + cur, side="right")
-                    ok = alive & (ix < kt.size)
-                    cand = kt[np.minimum(ix, kt.size - 1)]
-                    ok &= (cand // P == a_slot) & (
-                        cand % P <= a_p0 + step + slop
-                    )
-                    cur = np.where(ok, cand % P, cur)
-                    alive = ok
-                    if not alive.any():
-                        return None
-                hit_slots, pf = np.unique(a_slot[alive], return_counts=True)
-            pff = pf.astype(np.float64)
-            dl = slot_dl[hit_slots]
-            s = idf_sum * ((pff * (k1 + 1.0)) / (pff + k1 * (1.0 - b + b * dl / avgdl)))
-            out_docs = grp_base[hit_slots // block_size] + (hit_slots % block_size)
-            if allowed_bc is not None:
-                # fq pushed into the worker: filter BEFORE candidate
-                # selection (same contract as the OR scorer)
-                out_docs, s = _membership_filter(allowed_bc.value, out_docs, s)
-                if out_docs.size == 0:
-                    return None
-            if k is not None and s.size > k:
-                kth = np.partition(s, s.size - k)[s.size - k]
-                keep = s >= (np.round(kth, 6) - 1e-6)
-                out_docs, s = out_docs[keep], s[keep]
-            return pa.RecordBatch.from_arrays(
-                [pa.array(out_docs, type=pa.int64()), pa.array(s, type=pa.float64())],
-                names=["doc_id", "score"],
-            )
-
-        carry: pa.RecordBatch | None = None
-        for bt in batches:
-            if carry is not None:
-                bt = pa.Table.from_batches([carry, bt]).combine_chunks().to_batches()[0]
-                carry = None
-            n = len(bt)
-            if n == 0:
-                continue
-            idx = {nm: i for i, nm in enumerate(bt.schema.names)}
-            blk = bt.column(idx["block_id"]).to_numpy(zero_copy_only=False)
-            last_start = int(np.searchsorted(blk, blk[n - 1], side="left"))
-            carry = bt.slice(last_start)
-            if last_start > 0:
-                out = process(bt.slice(0, last_start))
-                if out is not None:
-                    yield out
-        if carry is not None and len(carry) > 0:
-            out = process(carry)
-            if out is not None:
-                yield out
 
     return _decode
 
 
 def _decoded(postings: DataFrame, cfg: IndexConfig) -> DataFrame:
-    """(tid, doc_id, tf, dl [, positions]) rows from (possibly
-    compressed) block rows; positional indexes decode their positions
-    list so re-encoding consumers (overwrite, compaction) stay
-    lossless."""
-    if cfg.compress and cfg.positions:
-        return postings.select(
-            "tid", "block_id", "block_min_dl", "n", "blob"
-        ).mapInArrow(
-            _make_decode_map_pos_arrow(cfg.block_size),
-            "tid long, doc_id long, tf int, dl int, positions array<int>",
-        )
-    if cfg.compress:
-        return postings.select("tid", "block_id", "block_min_dl", "blob").mapInArrow(
-            _make_decode_map_arrow(cfg.block_size),
-            "tid long, doc_id long, tf int, dl int",
-        )
-    return postings.select("tid", F.explode("plist").alias("p")).select(
-        "tid", F.col("p.doc_id").alias("doc_id"), F.col("p.tf").alias("tf"), F.col("p.dl").alias("dl")
+    """(tid, doc_id, tf, dl [, positions]) rows from block rows;
+    positional indexes decode their positions list so re-encoding
+    consumers (overwrite, compaction) stay lossless."""
+    pos_in = ["n"] if cfg.positions else []
+    pos_out = ", positions array<int>" if cfg.positions else ""
+    return postings.select("tid", "block_id", "block_min_dl", *pos_in, "blob").mapInArrow(
+        _make_decode_map_arrow(cfg.block_size, cfg.positions),
+        "tid long, doc_id long, tf int, dl int" + pos_out,
     )
 
 
@@ -677,6 +602,32 @@ SCORER_COALESCE_MAX_POSTINGS = 65_536
 SCORER_COALESCE_MAX_SCAN_POSTINGS = 2_000_000
 
 
+def _scan_est(n_docs: int, avgdl: float, buckets: list[int], n_buckets: int) -> int:
+    """Upper estimate of the postings resident in the touched buckets
+    (avgdl ≥ distinct terms per doc) — the coalesce gate's scan side.
+
+    Skew: the estimate assumes postings spread uniformly over the
+    buckets. A hot bucket can hold more than its share, and coalesce(1)
+    then serializes a larger parquet scan than the gate intends — a
+    cost, never a wrong answer. Per-bucket row counts (or file sizes)
+    would remove the assumption; the index records neither yet."""
+    return int(n_docs * avgdl * len(buckets) / n_buckets)
+
+
+def _term_postings(tables: IndexTables, terms: list[str]) -> tuple[DataFrame, list[int]]:
+    """The postings scan for ``terms`` — pruned by bucket directory
+    (PartitionFilters) and by row-group min/max stats on tid (pushed
+    In) — plus the buckets it touches."""
+    from oni_indexer_spark.hashing import xxhash64_str
+
+    buckets = _buckets_for(tables, terms)
+    tids = [xxhash64_str(t) for t in terms]
+    return (
+        tables.postings.where(F.col("bucket").isin(buckets) & F.col("tid").isin(tids)),
+        buckets,
+    )
+
+
 def _scorer_nparts(spark, est_postings: int | None) -> int:
     conf_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     if est_postings is None:
@@ -744,45 +695,42 @@ def _scores(
     per-batch selection (every matching doc's total leaves the workers)
     and is applied by a doclen semi-join afterwards."""
     cfg = tables.cfg
-    single_small = len(idf) == 1 and (
+    # an fq runs in-worker only as a broadcast doc set; without one,
+    # fq filters AFTER scoring — a selected candidate set could lose
+    # its top rows to the filter, so selection is off and every matching
+    # doc's total leaves the workers for the doclen semi-join below
+    k_sel = k if (fq is None or allowed_bc is not None) else None
+    pos_cols = ["n"] if cfg.positions else []
+    if len(idf) == 1 and (
         est_postings is None or est_postings < SINGLE_TERM_REPARTITION_MIN_POSTINGS
-    )
-    fq_in_worker = fq is None or allowed_bc is not None
-    if single_small and fq_in_worker and cfg.compress and k is not None:
-        # single-term fast path: per-posting score IS the per-doc score;
-        # decode+score+candidate-select in one numpy pass, no shuffle,
-        # no aggregate. (an fq rides along as a broadcast doc filter
-        # when selective; an unselective fq needs the full score set —
-        # filtered docs could pull sub-candidate rows into the top-k —
-        # so it takes the slow path; terms over the repartition
-        # threshold take the block-aligned path below for decode
-        # parallelism.)
+    ):
+        # single term: per-posting score IS the per-doc score, so the
+        # unsorted scan decodes+scores in one numpy pass — no shuffle,
+        # no aggregate (terms over the repartition threshold take the
+        # block-aligned path below for decode parallelism)
         (idf_val,) = idf.values()
-        pos_cols = ["n"] if cfg.positions else []
-        return postings_subset.select(
+        scored = postings_subset.select(
             "block_id", "block_min_dl", *pos_cols, "blob"
         ).mapInArrow(
             _make_decode_score_topk_arrow(
-                cfg.block_size, float(idf_val), float(avgdl), cfg.k1, cfg.b, k,
-                positions=cfg.positions,
-                allowed_bc=allowed_bc,
+                cfg.block_size, float(idf_val), float(avgdl), cfg.k1, cfg.b, k_sel,
+                positions=cfg.positions, allowed_bc=allowed_bc, floor=floor,
             ),
             "doc_id long, score double",
         )
-    if cfg.compress and (len(idf) > 1 or (len(idf) == 1 and not single_small)):
-        # multi-term block-aligned path: ONE shuffle of the compressed
-        # block rows co-locates every term's postings per doc-range
-        # block; exact per-doc totals + AND/τ/top-k selection happen in
-        # numpy inside the worker (no decoded-row shuffle, no JVM agg).
-        # EXPLICIT partition count: repartition(col) alone is an
-        # AQE-coalescible shuffle, and the blob shuffle is only a few MB
-        # per query — AQE would collapse it to ~1 post-shuffle partition
-        # and serialize the decode (measured at 1M docs: 3-4-term
-        # latency went linear in decoded volume). The count is derived
-        # from Σ df (SCORER_POSTINGS_PER_PARTITION) so small corpora
-        # don't pay 32 near-empty reduce tasks of pure scheduling and
-        # large ones still fan the decode across the cores.
-        pos_cols = ["n"] if cfg.positions else []
+    else:
+        # block-aligned path: ONE shuffle of the compressed block rows
+        # co-locates every term's postings per doc-range block; exact
+        # per-doc totals + AND/τ/top-k selection happen in numpy inside
+        # the worker (no decoded-row shuffle, no JVM agg). EXPLICIT
+        # partition count: repartition(col) alone is an AQE-coalescible
+        # shuffle, and the blob shuffle is only a few MB per query — AQE
+        # would collapse it to ~1 post-shuffle partition and serialize
+        # the decode (measured at 1M docs: 3-4-term latency went linear
+        # in decoded volume). The count is derived from Σ df
+        # (SCORER_POSTINGS_PER_PARTITION) so small corpora don't pay 32
+        # near-empty reduce tasks and large ones still fan the decode
+        # across the cores.
         co = _colocate_blocks(
             postings_subset.select("tid", "block_id", "block_min_dl", *pos_cols, "blob"),
             est_postings,
@@ -797,34 +745,14 @@ def _scores(
                 cfg.k1,
                 cfg.b,
                 len(idf) if mode == "and" else None,
-                # without a pushed-down filter, fq filters AFTER scoring:
-                # a selected candidate set could lose its top rows to the
-                # filter, so emit all doc totals; with allowed_bc the
-                # filter runs in-worker BEFORE selection, so selection
-                # stays on and the output is O(k · batches)
-                k if fq_in_worker else None,
+                k_sel,
                 floor,
                 positions=cfg.positions,
                 allowed_bc=allowed_bc,
             ),
             "doc_id long, score double",
         )
-        if fq and allowed_bc is None:
-            keep = _fq_keep(tables.doclen, fq)
-            scored = scored.join(keep.select("doc_id"), "doc_id", "left_semi")
-        return scored
-    rows = _decoded(postings_subset, cfg)
-    idf_map = F.create_map(*[F.lit(x) for kv in idf.items() for x in kv])
-    per_term = rows.withColumn(
-        "s", idf_map[F.col("tid")] * tfn_expr(F.col("tf"), F.col("dl"), avgdl, cfg.k1, cfg.b)
-    )
-    agg = per_term.groupBy("doc_id").agg(
-        F.sum("s").alias("score"), F.count(F.lit(1)).alias("n_terms_hit")
-    )
-    if mode == "and":
-        agg = agg.where(F.col("n_terms_hit") == len(idf))
-    scored = agg.select("doc_id", "score")
-    if fq:
+    if fq and allowed_bc is None:
         keep = _fq_keep(tables.doclen, fq)
         scored = scored.join(keep.select("doc_id"), "doc_id", "left_semi")
     return scored
@@ -1022,22 +950,12 @@ class Searcher:
         when it is selective enough to prune with, else None — the
         shared engine behind the conjunctive prefilter and the boolean
         compositor's cross-clause MUST-block pushdown."""
-        from oni_indexer_spark.hashing import xxhash64_str
-
-        tables = self.tables
         min_term = min(dfs, key=lambda t: dfs[t])
         min_df = dfs[min_term]
-        n_blocks_est = max(1, n_docs // tables.cfg.block_size)
+        n_blocks_est = max(1, n_docs // self.tables.cfg.block_size)
         if min_df >= n_blocks_est // 2 or min_df > self.RARE_BLOCK_MAX_DF:
             return None
-        return (
-            tables.postings.where(
-                F.col("bucket").isin(_buckets_for(tables, [min_term]))
-                & (F.col("tid") == xxhash64_str(min_term))
-            )
-            .select("block_id")
-            .distinct()
-        )
+        return _term_postings(self.tables, [min_term])[0].select("block_id").distinct()
 
     def topk(
         self,
@@ -1070,6 +988,24 @@ class Searcher:
             return _empty_result(tables)
         return self._topk_from_dfs(dfs, k=k, mode=mode, fq=fq, prune=prune)
 
+    def _idf_by_tid(
+        self, dfs: dict[str, int], weights: dict[str, float] | None = None
+    ) -> dict[int, float]:
+        """Lucene idf per present term, scaled by its weight (expansion
+        boosts), keyed by tid — postings are tid-keyed, and term → tid is
+        the driver-side xxhash64 twin (tests/test_hashing.py), no Spark
+        job."""
+        import math
+
+        from oni_indexer_spark.hashing import xxhash64_str
+
+        n_docs, _ = self.stats()
+        return {
+            xxhash64_str(t): (weights[t] if weights else 1.0)
+            * math.log(1.0 + (n_docs - d + 0.5) / (d + 0.5))
+            for t, d in dfs.items()
+        }
+
     def _topk_from_dfs(
         self,
         dfs: dict[str, int],
@@ -1087,28 +1023,12 @@ class Searcher:
         untouched, a weighted query is just a different idf dict.
         ``exclude_doc_id`` drops one doc before ranking (MLT excludes its
         source doc) — a plain filter, no join."""
-        import math
-
         tables = self.tables
         n_docs, avgdl = self.stats()
-        from oni_indexer_spark.hashing import xxhash64_str
-
-        present = list(dfs)
-        # postings are tid-keyed; term → tid driver-side (exact xxhash64
-        # twin, tests/test_hashing.py), no Spark job
-        idf = {
-            xxhash64_str(t): (weights[t] if weights else 1.0)
-            * math.log(1.0 + (n_docs - d + 0.5) / (d + 0.5))
-            for t, d in dfs.items()
-        }
-        buckets = _buckets_for(tables, present)
-        p = tables.postings.where(
-            F.col("bucket").isin(buckets) & F.col("tid").isin(list(idf))
-        )
+        idf = self._idf_by_tid(dfs, weights)
+        p, buckets = _term_postings(tables, list(dfs))
         est = sum(dfs.values())
-        # upper estimate of postings RESIDENT in the touched buckets
-        # (avgdl ≥ distinct terms per doc) — the coalesce scan gate
-        scan_est = int(n_docs * avgdl * len(buckets) / tables.cfg.n_buckets)
+        scan_est = _scan_est(n_docs, avgdl, buckets, tables.cfg.n_buckets)
         if mode == "and":
             p = self._rare_block_prefilter(p, dfs, n_docs)
         if prune == "auto":
@@ -1148,21 +1068,10 @@ class Searcher:
         with OTHER clauses downstream, so every matching doc's total
         must leave the workers). Single-clause queries should use the
         k-bounded ``_topk_from_dfs`` instead."""
-        import math
-
         tables = self.tables
         n_docs, avgdl = self.stats()
-        from oni_indexer_spark.hashing import xxhash64_str
-
-        idf = {
-            xxhash64_str(t): (weights[t] if weights else 1.0)
-            * math.log(1.0 + (n_docs - d + 0.5) / (d + 0.5))
-            for t, d in dfs.items()
-        }
-        clause_buckets = _buckets_for(tables, list(dfs))
-        p = tables.postings.where(
-            F.col("bucket").isin(clause_buckets) & F.col("tid").isin(list(idf))
-        )
+        idf = self._idf_by_tid(dfs, weights)
+        p, clause_buckets = _term_postings(tables, list(dfs))
         if mode == "and":
             p = self._rare_block_prefilter(p, dfs, n_docs)
         if block_filter is not None:
@@ -1175,9 +1084,7 @@ class Searcher:
         return _scores(
             p, tables, idf, avgdl, mode, fq, k=None,
             est_postings=sum(dfs.values()), allowed_bc=allowed_bc,
-            scan_est=int(
-                n_docs * avgdl * len(clause_buckets) / tables.cfg.n_buckets
-            ),
+            scan_est=_scan_est(n_docs, avgdl, clause_buckets, tables.cfg.n_buckets),
         )
 
     def _expansion(
@@ -1557,14 +1464,8 @@ class Searcher:
         the decode touches ≤ k·|terms| blobs at ANY corpus size. (An fq
         invalidates the ≥k-docs guarantee — filtered docs don't count —
         so the bound is applied only when fq is None.)"""
-        from oni_indexer_spark.hashing import xxhash64_str
-
         tables = self.tables
-        tids = [xxhash64_str(t) for t in terms]
-        p = tables.postings.where(
-            F.col("bucket").isin(_buckets_for(tables, terms))
-            & F.col("tid").isin(tids)
-        )
+        p, _ = _term_postings(tables, terms)
         if fq is None:
             low_blocks = (
                 p.select("block_id").distinct().orderBy(F.asc("block_id")).limit(k)
@@ -1761,11 +1662,7 @@ class Searcher:
         }
         idf_sum = float(sum(idf[t] for t in qtoks)) * boost
         tid_offsets = [(xxhash64_str(t), j) for j, t in enumerate(qtoks)]
-        buckets = _buckets_for(tables, distinct)
-        tids = sorted({t for t, _ in tid_offsets})
-        p = tables.postings.where(
-            F.col("bucket").isin(buckets) & F.col("tid").isin(tids)
-        )
+        p, buckets = _term_postings(tables, distinct)
         p = self._rare_block_prefilter(p, dfs, n_docs)
         if block_filter is not None:
             p = p.join(F.broadcast(block_filter), "block_id", "left_semi")
@@ -1774,7 +1671,7 @@ class Searcher:
         co = _colocate_blocks(
             p.select("tid", "block_id", "block_min_dl", "n", "blob"),
             sum(dfs.values()),
-            int(n_docs * avgdl * len(buckets) / cfg.n_buckets),
+            _scan_est(n_docs, avgdl, buckets, cfg.n_buckets),
         )
         scored = co.mapInArrow(
             _make_decode_phrase_group_arrow(

@@ -241,55 +241,25 @@ def _make_facet_count_arrow(
     """Fused facet.query counter: consumes (tid, block_id, block_min_dl
     [, n], blob) rows hash-partitioned and sorted by block_id (every
     query term's postings for a doc-range block arrive together, same
-    contract as the bm25 scorers). One numpy pass per batch of complete
-    blocks builds a per-term presence mask over the dense (group ×
-    block_size) slot grid, combines masks per bucket (AND/OR), and
-    accumulates ``count(main_hit & bucket_hit)`` — each partition emits
-    ONE tiny (name, count) partial batch. No per-doc row ever leaves
-    the worker, vs the join formulation's |match set|-sized clause
-    outputs + semi-join shuffle."""
+    contract as the bm25 scorers). One numpy pass per unit of whole
+    blocks builds a per-term presence mask over the dense slot grid,
+    combines masks per bucket (AND/OR), and accumulates
+    ``count(main_hit & bucket_hit)`` — each partition emits ONE tiny
+    (name, count) partial batch. No per-doc row ever leaves the
+    worker."""
 
     def _count(batches):
         import numpy as np
         import pyarrow as pa
 
-        from oni_indexer_spark.index.codec import (
-            decode_postings_flat,
-            decode_postings_pos_flat,
-        )
+        from oni_indexer_spark.query.bm25 import _block_stream, _slot_grid
 
         acc = np.zeros(len(buckets), dtype=np.int64)
-
-        def process(tb):
-            idx = {n: i for i, n in enumerate(tb.schema.names)}
-            blobs = tb.column(idx["blob"]).to_pylist()
-            if not blobs:
-                return
-            tids = tb.column(idx["tid"]).to_numpy(zero_copy_only=False).astype(np.int64)
-            blk = tb.column(idx["block_id"]).to_numpy(zero_copy_only=False).astype(np.int64)
-            base_docs = blk * block_size
-            base_dls = (
-                tb.column(idx["block_min_dl"]).to_numpy(zero_copy_only=False).astype(np.int64)
-            )
-            if positions:
-                ns = tb.column(idx["n"]).to_numpy(zero_copy_only=False).astype(np.int64)
-                doc_ids, _tf, _dl, counts, _p = decode_postings_pos_flat(
-                    blobs, ns, base_docs, base_dls, with_positions=False
-                )
-            else:
-                doc_ids, _tf, _dl, counts = decode_postings_flat(
-                    blobs, base_docs, base_dls
-                )
-            if doc_ids.size == 0:
-                return
-            new_grp = np.concatenate(([True], blk[1:] != blk[:-1]))
-            grp_of_row = np.cumsum(new_grp) - 1
-            n_grp = int(grp_of_row[-1]) + 1
-            grp_base = base_docs[new_grp]
-            grp_rep = np.repeat(grp_of_row, counts)
-            slot = grp_rep * block_size + (doc_ids - grp_base[grp_rep])
-            n_slots = n_grp * block_size
-            tid_of_post = np.repeat(tids, counts)
+        for u in _block_stream(batches, block_size, positions, whole_blocks=True):
+            if u.doc_ids.size == 0:
+                continue
+            slot, n_slots, _ = _slot_grid(u, block_size)
+            tid_of_post = np.repeat(u.tids, u.counts)
             masks: dict[int, "np.ndarray"] = {}
 
             def mask_of(t: int) -> "np.ndarray":
@@ -312,23 +282,6 @@ def _make_facet_count_arrow(
             main_m = combo(main_tids, main_all)
             for bi, (_name, btids, ball) in enumerate(buckets):
                 acc[bi] += int(np.count_nonzero(main_m & combo(btids, ball)))
-
-        carry = None
-        for bt in batches:
-            if carry is not None:
-                bt = pa.Table.from_batches([carry, bt]).combine_chunks().to_batches()[0]
-                carry = None
-            n = len(bt)
-            if n == 0:
-                continue
-            idx = {nm: i for i, nm in enumerate(bt.schema.names)}
-            blk = bt.column(idx["block_id"]).to_numpy(zero_copy_only=False)
-            last_start = int(np.searchsorted(blk, blk[n - 1], side="left"))
-            carry = bt.slice(last_start)
-            if last_start > 0:
-                process(bt.slice(0, last_start))
-        if carry is not None and len(carry) > 0:
-            process(carry)
         yield pa.RecordBatch.from_arrays(
             [
                 pa.array([name for name, _t, _a in buckets], type=pa.string()),
@@ -372,18 +325,17 @@ def facet_query(
     mask pass counts every bucket inside the worker; each partition
     emits B partial counts, one tiny groupBy(name) sums them, and
     missing buckets zero-fill from the driver-built name list. Nothing
-    doc-sized ever leaves the workers — vs the previous formulation's
-    per-clause |match set|-sized outputs + semi-joins (measured 1M:
-    4.6s r5 → see OPTIMIZATION_r06.md). The join formulation remains
-    for the uncompressed debug layout."""
+    doc-sized ever leaves the workers (measured 1M: 4.6s with per-clause
+    match sets + semi-joins before the fusion → see
+    OPTIMIZATION_r06.md)."""
     from oni_indexer_spark.analyzer import query_terms
     from oni_indexer_spark.hashing import xxhash64_str
     from oni_indexer_spark.query.bm25 import (
-        _buckets_for,
         _colocate_blocks,
+        _scan_est,
+        _term_postings,
         searcher_for,
     )
-    from oni_indexer_spark.query.paging import _full_scores
 
     s = searcher_for(tables)
     spark = tables.doclen.sparkSession
@@ -398,36 +350,6 @@ def facet_query(
         "name", F.lit(0).cast("long").alias("count")
     ).orderBy(F.asc("name"))
     cfg = tables.cfg
-
-    if not cfg.compress:
-        # legacy join formulation over the uncompressed plist layout
-        base = _full_scores(s, query, mode, None, 0)
-        if base is None:
-            return zero
-        tagged = []
-        for name in names:
-            sub = _full_scores(s, named[name], sub_mode, None, 0)
-            if sub is not None:
-                tagged.append(sub.select(F.lit(name).alias("name"), "doc_id"))
-        if not tagged:
-            return zero
-        union = tagged[0]
-        for t in tagged[1:]:
-            union = union.unionByName(t)
-        counts = (
-            union.join(base.select("doc_id"), "doc_id", "left_semi")
-            .groupBy("name")
-            .agg(F.count(F.lit(1)).cast("long").alias("count"))
-        )
-        return (
-            names_df.join(F.broadcast(counts), "name", "left")
-            .select(
-                "name",
-                F.coalesce(F.col("count"), F.lit(0)).cast("long").alias("count"),
-            )
-            .orderBy(F.asc("name"))
-        )
-
     s._check_external_staleness()
     main_terms = query_terms(query, cfg.analyzer)
     main_dfs = s.term_dfs(main_terms) if main_terms else {}
@@ -452,14 +374,12 @@ def facet_query(
     terms = sorted(scan_terms)
     est = sum(s.term_dfs(terms).values())
     pos_cols = ["n"] if cfg.positions else []
-    fq_buckets = _buckets_for(tables, terms)
-    p = tables.postings.where(
-        F.col("bucket").isin(fq_buckets)
-        & F.col("tid").isin([xxhash64_str(t) for t in terms])
-    ).select("tid", "block_id", "block_min_dl", *pos_cols, "blob")
+    p, fq_buckets = _term_postings(tables, terms)
     n_docs, avgdl = s.stats()
     co = _colocate_blocks(
-        p, est, int(n_docs * avgdl * len(fq_buckets) / cfg.n_buckets)
+        p.select("tid", "block_id", "block_min_dl", *pos_cols, "blob"),
+        est,
+        _scan_est(n_docs, avgdl, fq_buckets, cfg.n_buckets),
     )
     partials = co.mapInArrow(
         _make_facet_count_arrow(

@@ -155,10 +155,9 @@ def _full_scores(
 
     ``allowed_bc`` / ``block_filter`` (only meaningful with ``fq=None``)
     push a caller-known bounded doc set into the pass — the rerank
-    window pushdown: the scorer decodes only the window's blocks and
-    emits only window docs. Callers using them must ALSO bound their
-    final result to that doc set (e.g. join from the window side): the
-    uncompressed/legacy scorer path treats both as advisory."""
+    window pushdown: the scorer decodes only the window's blocks
+    (``block_filter`` semi-joins the scan) and emits only window docs
+    (``allowed_bc`` filters inside the worker)."""
     from oni_indexer_spark.analyzer import analyzer_tokenize_py
 
     tables = s.tables

@@ -37,6 +37,17 @@ def ship_package(spark: SparkSession) -> None:
     _shipped.add(key)
 
 
+def _default_driver_memory() -> str:
+    """Driver heap when ``SPARK_DRIVER_MEMORY`` is unset: min(48g, half
+    of physical memory). A fixed 48g heap on a smaller host lets the JVM
+    grow past what the machine has, and the OS kills it."""
+    try:
+        half_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // (2 << 20)
+    except (AttributeError, OSError, ValueError):
+        return "48g"
+    return f"{max(1024, min(48 * 1024, half_mb))}m"
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "oni-indexer-spark",
@@ -70,25 +81,24 @@ def get_spark(
         # must scale with thread count (32 concurrent tasks × sort/agg
         # buffers starve an 8g heap into GC thrash — measured: local[32]
         # slower than local[8] at 1M docs before this was raised)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
+        )
         # Throughput collector: tokenization/split expressions allocate one
         # UTF8String per token, and the default G1 collapses under that
         # churn at high thread counts (measured on 1M docs, local[32]:
         # regex tokenize 99s with G1 → 7.8s with ParallelGC; ZGC similar).
         .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
         .config("spark.ui.enabled", "false")
+        # zstd for shuffle + parquet: trades bytes for CPU — measured at
+        # 1M docs the build dropped 227.6s -> 204.7s at local[4] on a
+        # memory-bandwidth-limited host, and at 100 TB the smaller
+        # shuffle/storage footprint is standard practice anyway
+        .config("spark.io.compression.codec", "zstd")
+        .config("spark.sql.parquet.compression.codec", "zstd")
+        .config("spark.shuffle.mapStatus.compression.codec", "zstd")
     )
-    # zstd for shuffle + parquet (default; SPARK_GRAFT_ZSTD=0 reverts to
-    # snappy/lz4): trades bytes for CPU — measured at 1M docs the build
-    # dropped 227.6s -> 204.7s at local[4] on this bandwidth-limited box,
-    # and at 100 TB the smaller shuffle/storage footprint is standard
-    # practice anyway.
-    if os.environ.get("SPARK_GRAFT_ZSTD", "1") != "0":
-        builder = (
-            builder.config("spark.io.compression.codec", "zstd")
-            .config("spark.sql.parquet.compression.codec", "zstd")
-            .config("spark.shuffle.mapStatus.compression.codec", "zstd")
-        )
     spark = builder.getOrCreate()
     ship_package(spark)
     return spark

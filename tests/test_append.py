@@ -200,3 +200,59 @@ def test_stream_auto_compaction(spark, docs, split_docs, tmp_path):
     full = build_index(docs, CFG)
     for qq in QUERIES:
         assert _rows(topk(merged, qq, k=10)) == _rows(topk(full, qq, k=10)), qq
+
+
+def _dfreq_by_term(tables):
+    return {
+        r["term"]: (int(r["df"]), int(r["cf"]))
+        for r in tables.dfreq.groupBy("term")
+        .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
+        .collect()
+    }
+
+
+def _appended_index(docs_a, docs_b, docs_c, prefix):
+    p = tempfile.mkdtemp(prefix=prefix) + "/idx"
+    build_to_path(docs_a, p, CFG, bucket_group_size=8)
+    append_to_index(docs_b, p)
+    append_to_index(docs_c, p)
+    return p
+
+
+def test_append_then_delete_matches_rebuild(spark, docs, split_docs):
+    """delete_docs after appends, before any compaction: dfreq holds one
+    row per segment of a term, and the decrement must apply once per
+    term — the result equals a fresh build of the survivors, exact dfreq
+    and same top-k."""
+    from oni_indexer_spark.index import delete_docs
+
+    p = _appended_index(*split_docs, prefix="appdelidx_")
+    gone = [3, 150, 310, 399, 420, 470]
+    assert delete_docs(p, spark, doc_ids=gone) == len(gone)
+    got = read_index(spark, p)
+    fresh = build_index(docs.where(~F.col("doc_id").isin(gone)), CFG)
+    assert _dfreq_by_term(got) == _dfreq_by_term(fresh)
+    for q in QUERIES:
+        assert _rows(topk(got, q, k=10)) == _rows(topk(fresh, q, k=10)), q
+
+
+def test_append_then_overwrite_matches_rebuild(spark, docs, split_docs):
+    """overwrite_docs after appends, before any compaction: the old
+    per-segment dfreq rows merge with the increment and decrement once
+    per term — the result equals a fresh build of the updated corpus,
+    exact dfreq and same top-k."""
+    from oni_indexer_spark.index import overwrite_docs
+
+    p = _appended_index(*split_docs, prefix="appovridx_")
+    ids = [5, 150, 320, 410, 480]
+    changed = docs.where(F.col("doc_id").isin(ids)).withColumn(
+        "content", F.concat(F.col("content"), F.lit(" hash overwritemark"))
+    )
+    overwrite_docs(changed, p)
+    got = read_index(spark, p)
+    fresh = build_index(
+        docs.where(~F.col("doc_id").isin(ids)).unionByName(changed), CFG
+    )
+    assert _dfreq_by_term(got) == _dfreq_by_term(fresh)
+    for q in QUERIES + ["overwritemark hash"]:
+        assert _rows(topk(got, q, k=10)) == _rows(topk(fresh, q, k=10)), q

@@ -37,7 +37,7 @@ def _oracle(query, k, mode, fq_lang):
 
 @pytest.fixture(scope="module")
 def tables(docs):
-    t = build_index(docs, IndexConfig(block_size=64, n_buckets=8, compress=True))
+    t = build_index(docs, IndexConfig(block_size=64, n_buckets=8))
     t.postings.cache().count()
     t.dfreq.cache().count()
     return t
@@ -68,13 +68,6 @@ def test_direct_path_matches_index_path(docs, tables, query, k, mode, fq_lang):
     assert [(x[0], x[1]) for x in a] == [(x[0], x[1]) for x in b]
     for x, y in zip(a, b):
         assert abs(x[2] - y[2]) < 1e-9
-
-
-def test_uncompressed_mode_identical(docs):
-    t2 = build_index(docs, IndexConfig(block_size=64, n_buckets=8, compress=False))
-    a = _rows(topk(t2, "hash join", k=10))
-    exp = [(r[0], r[1], round(r[2], 6)) for r in _oracle("hash join", 10, "or", None)]
-    assert [(x[0], x[1]) for x in a] == [(e[0], e[1]) for e in exp]
 
 
 def test_index_invariants(docs, tables):

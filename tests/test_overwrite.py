@@ -180,6 +180,15 @@ def test_mutators_reject_old_format(spark):
         append_to_index(extra, p)
     with pytest.raises(ValueError, match="on-disk format v2"):
         overwrite_docs(_corpus(spark).where(F.col("doc_id") == 0), p)
+    # the removed uncompressed layout: refused with a rebuild message
+    meta["format"] = 4
+    meta["compress"] = False
+    with open(meta_path, "w") as fh:
+        json.dump(meta, fh)
+    with pytest.raises(ValueError, match="compress=false.*build_to_path"):
+        read_index(spark, p)
+    with pytest.raises(ValueError, match="compress=false.*build_to_path"):
+        append_to_index(extra, p)
     shutil.rmtree(base, ignore_errors=True)
 
 

@@ -3,11 +3,17 @@
 
 Query plan contract (query/bm25.py docstring):
   - postings scan is directory-pruned (PartitionFilters on bucket) and
-    row-group-pruned (PushedFilters In(term, ...)), reading ONLY
-    (term, blob) — no block metadata unless pruning needs it
+    row-group-pruned (PushedFilters In(tid, ...)), reading ONLY
+    (tid, block_id, block_min_dl, blob) — no block metadata beyond the
+    two decode bases unless pruning needs it
   - idf enters as a literal map: NO join against dfreq
   - dl travels inside postings: NO join against doclen
-  - exactly one shuffle (the doc_id hash aggregation)
+  - no JVM hash aggregate and no decoded-row shuffle: per-doc totals are
+    scatter-added inside the Arrow worker (MapInArrow)
+  - shuffles depend on the query's size: a single term never shuffles;
+    a multi-term query has ZERO exchanges below the coalesce crossover
+    (coalesce(1) co-locates its blocks) and exactly ONE exchange above
+    it — the hash repartition of the compressed block rows by block_id
   - top-k is TakeOrderedAndProject (heap per partition + merge)
 """
 
@@ -132,48 +138,44 @@ def test_single_term_fastpath_no_exchange(disk_index):
     assert "HashAggregate" not in plan
 
 
-def test_single_term_fastpath_matches_slow_path(spark, disk_index):
-    """Fast path is rank- and score-exact vs the aggregate path (the
-    slow branch is forced by passing k=None to _scores): same rounded
-    scores, same order, for hot, mid and rare terms."""
-    from pyspark.sql import functions as F
+def test_single_term_fastpath_matches_oracle(spark, disk_index):
+    """The single-term kernel is rank- and score-exact vs the DuckDB
+    oracle, for hot, mid and rare terms."""
+    import duckdb
 
-    from oni_indexer_spark.query.bm25 import _ranked, _scores, searcher_for
+    from oni_indexer_spark.oracle import bm25_topk_sql
+    from tests.conftest import SF_SMOKE
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{SF_SMOKE}/documents.parquet'"
+    )
+    for t in ["hash", "the", "scan"]:
+        got = [
+            (r[0], r[1], round(r[2], 6))
+            for r in topk(disk_index, t, k=10, prune=False).collect()
+        ]
+        exp = [
+            (r[0], r[1], round(r[2], 6))
+            for r in con.execute(bm25_topk_sql(t, k=10)).fetchall()
+        ]
+        assert got, t
+        assert [g[:2] for g in got] == [e[:2] for e in exp], t
+        for g, e in zip(got, exp):
+            assert abs(g[2] - e[2]) < 1e-6, t
+
+
+def test_single_term_clause_scores_no_aggregate(disk_index):
+    """A single-term boolean clause (k=None: every matching doc's score
+    leaves the workers) runs the single-term kernel, not a JVM hash
+    aggregate over decoded rows."""
+    from oni_indexer_spark.query.bm25 import searcher_for
 
     s = searcher_for(disk_index)
-
-    terms = ["hash", "the", "scan"]
-    for t in terms:
-        fast = [tuple(r) for r in topk(disk_index, t, k=10, prune=False).collect()]
-        # slow path: force via the aggregate branch (k=None disables the
-        # fast path inside _scores)
-        n_docs, avgdl = s.stats()
-        dfs = s.term_dfs([t])
-        if not dfs:
-            continue
-        import math
-
-        from oni_indexer_spark.hashing import xxhash64_str
-
-        idf = {
-            xxhash64_str(tt): math.log(1.0 + (n_docs - d + 0.5) / (d + 0.5))
-            for tt, d in dfs.items()
-        }
-        from oni_indexer_spark.query.bm25 import _buckets_for
-
-        p = disk_index.postings.where(
-            F.col("bucket").isin(_buckets_for(disk_index, [t]))
-            & F.col("tid").isin(list(idf))
-        )
-        slow = [
-            tuple(r)
-            for r in _ranked(
-                _scores(p, disk_index, idf, avgdl, "or", None, k=None), 10
-            ).collect()
-        ]
-        fast_r = [(r[0], r[1], round(r[2], 6)) for r in fast]
-        slow_r = [(r[0], r[1], round(r[2], 6)) for r in slow]
-        assert fast_r == slow_r, t
+    plan = _plan(s._clause_scores(s.term_dfs(["hash"])))
+    assert "MapInArrow" in plan
+    assert "HashAggregate" not in plan
+    assert "Exchange" not in plan
 
 
 def test_constant_score_prefix_bounded_decode(disk_index):
