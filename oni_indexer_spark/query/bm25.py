@@ -8,21 +8,32 @@ OR-of-terms over ``main_search`` (``config.json:38``,
 same posting join with a match-all-terms constraint; facet drill-down
 filters (Solr ``fq``) compose as metadata predicates.
 
-Physical shape of a query (see ``.explain`` audit in tests/bench):
+Physical shape of a query (see ``.explain`` audit in tests/test_plans.py):
 
   scan postings WHERE bucket IN (term buckets) AND tid IN (tids)
       [directory-partition pruning + parquet row-group stats on tid]
   → [block-max prune: drop (term, block) rows that cannot reach the
      pass-1 threshold τ — lossless, tests/test_wand.py]
-  → single term: decode+score+candidate-select in one numpy pass, no
-    shuffle at all (per-posting score IS the per-doc score)
-  → multi term: repartition the COMPRESSED block rows by block_id (the
-    only shuffle — doc-range blocks are global, so every term's postings
-    for a doc share one block_id), then one numpy pass per co-located
-    group decodes, scatter-adds exact per-doc totals, applies AND/τ
+  → one numpy kernel pass (:func:`_run_kernel`) decodes, scores exact
+    per-doc totals (single term: per-posting score IS the per-doc
+    score; multi term: scatter-add over co-located doc-range blocks —
+    every term's postings for a doc share one block_id), applies AND/τ
     bounds and per-batch conservative top-k selection — no decoded-row
     shuffle, no JVM hash aggregate
-  → TakeOrdered(k).
+  → top-k on (round(score, 6) desc, doc_id asc).
+
+Three regimes, chosen driver-side from Σ df (known for free):
+
+  - empty: a term or filter matches nothing → an empty literal
+    LocalRelation, 0 jobs.
+  - local (Σ df ≤ ``LOCAL_KERNEL_MAX_POSTINGS``): the pruned scan is
+    collected as Arrow (one JVM-only job, no Python worker), sorted by
+    block_id and scored on the driver; the top-k (or facet count) is
+    reduced there too and handed back as an Arrow LocalRelation.
+  - exchange(n): the kernel runs in ``mapInArrow`` tasks; multi-term
+    kernels first hash-repartition the COMPRESSED block rows by
+    block_id (the only shuffle) at a width derived from Σ df, then
+    TakeOrdered(k).
 """
 
 from __future__ import annotations
@@ -230,14 +241,15 @@ def _scoring_kernel(
     whole_blocks: bool = True,
     k: int | None = None,
     floor: float | None = None,
-    allowed_bc=None,
+    allowed=None,
 ):
-    """mapInArrow body shared by every scorer: ``score_unit(unit)`` maps
+    """Kernel body shared by every scorer: ``score_unit(unit)`` maps
     one :func:`_block_stream` unit to exact ``(doc_ids, scores)`` (or
-    None), then the shared tail runs inside the worker:
+    None), then the shared tail runs in the same pass:
 
-    - ``allowed_bc`` (a broadcast SORTED doc_id array) applies a pushed
-      fq BEFORE selection, so the output stays O(k) per unit;
+    - ``allowed`` (a SORTED doc_id array on the driver, its broadcast in
+      a Spark task — see :class:`_DocSet`) applies a pushed fq BEFORE
+      selection, so the output stays O(k) per unit;
     - ``floor`` (a pass-1 τ of the pruned path) drops docs below
       round(τ,6)-1e-6 — τ <= the true kth score;
     - ``k`` keeps the conservative per-unit top-k candidates.
@@ -247,6 +259,7 @@ def _scoring_kernel(
     def _run(batches):
         import pyarrow as pa
 
+        ids = getattr(allowed, "value", allowed)
         guard = None if floor is None else (round(floor, 6) - 1e-6)
         for u in _block_stream(
             batches, block_size, positional, with_positions, whole_blocks
@@ -255,8 +268,8 @@ def _scoring_kernel(
             if out is None:
                 continue
             docs, s = out
-            if allowed_bc is not None:
-                docs, s = _membership_filter(allowed_bc.value, docs, s)
+            if ids is not None:
+                docs, s = _membership_filter(ids, docs, s)
             if guard is not None:
                 keep = s >= guard
                 docs, s = docs[keep], s[keep]
@@ -274,7 +287,7 @@ def _make_decode_score_topk_arrow(
     block_size: int, idf_val: float, avgdl: float, k1: float, b: float,
     k: int | None,
     positions: bool = False,
-    allowed_bc=None,
+    allowed=None,
     floor: float | None = None,
 ):
     """Single-term scorer: decode + BM25 score + per-batch candidate
@@ -293,7 +306,7 @@ def _make_decode_score_topk_arrow(
 
     return _scoring_kernel(
         block_size, score, positions, whole_blocks=False, k=k, floor=floor,
-        allowed_bc=allowed_bc,
+        allowed=allowed,
     )
 
 
@@ -307,26 +320,26 @@ def _make_decode_score_group_arrow(
     k: int | None,
     floor: float | None,
     positions: bool = False,
-    allowed_bc=None,
+    allowed=None,
 ):
     """Multi-term scorer: rows are (tid, block_id, block_min_dl, blob),
-    hash-partitioned by block_id and sorted by block_id within the
-    partition, so ALL query terms' postings for a given doc-range block
-    arrive together (doc-range blocks are global across terms — a doc's
-    block_id is doc_id // block_size for every term). One numpy pass per
-    unit of whole blocks:
+    co-located by block_id (:func:`_run_kernel`), so ALL query terms'
+    postings for a given doc-range block arrive together (doc-range
+    blocks are global across terms — a doc's block_id is doc_id //
+    block_size for every term). One numpy pass per unit of whole blocks:
 
       decode blobs → per-posting BM25 contribution → scatter-add into a
       dense (block-group × block_size) score grid → per-doc EXACT totals
-      + term-hit counts, entirely inside the Python worker.
+      + term-hit counts, entirely inside the kernel.
 
-    The only shuffle is of the COMPRESSED block rows (~2-4 B/posting vs
-    ~16 B/posting for decoded rows), and per-unit candidate selection
-    means a hot term's postings never leave the worker.
+    The only shuffle (exchange regime) is of the COMPRESSED block rows
+    (~2-4 B/posting vs ~16 B/posting for decoded rows), and per-unit
+    candidate selection means a hot term's postings never leave the
+    kernel.
 
     ``n_terms_and``: when set, keep only docs hit by exactly that many
     terms (AND mode; (tid, doc) is unique so hits == terms matched).
-    ``k`` / ``floor`` / ``allowed_bc``: see :func:`_scoring_kernel`.
+    ``k`` / ``floor`` / ``allowed``: see :func:`_scoring_kernel`.
     """
 
     def score(u):
@@ -344,7 +357,7 @@ def _make_decode_score_group_arrow(
         return slot_docs(sel), tot[sel]
 
     return _scoring_kernel(
-        block_size, score, positions, k=k, floor=floor, allowed_bc=allowed_bc
+        block_size, score, positions, k=k, floor=floor, allowed=allowed
     )
 
 
@@ -356,14 +369,14 @@ def _make_decode_phrase_group_arrow(
     k1: float,
     b: float,
     k: int | None,
-    allowed_bc=None,
+    allowed=None,
     slop: int = 0,
 ):
     """Phrase scorer factory (Lucene ``PhraseQuery`` semantics over the
     v5 positional blobs): rows are (tid, block_id, block_min_dl, n,
-    blob), hash-partitioned and sorted by block_id like the multi-term
-    scorer, so every phrase term's postings for a doc-range block arrive
-    together. One numpy pass per unit of whole blocks:
+    blob), co-located by block_id like the multi-term scorer, so every
+    phrase term's postings for a doc-range block arrive together. One
+    numpy pass per unit of whole blocks:
 
       decode (with positions) → for each query offset j holding term
       t_j, form keys ``slot * P + (pos − j)`` over t_j's positions →
@@ -480,7 +493,7 @@ def _make_decode_phrase_group_arrow(
         return slot_docs(hit_slots), s
 
     return _scoring_kernel(
-        block_size, score, True, with_positions=True, k=k, allowed_bc=allowed_bc
+        block_size, score, True, with_positions=True, k=k, allowed=allowed
     )
 
 
@@ -535,28 +548,35 @@ def _buckets_for(tables: IndexTables, terms: list[str]) -> list[int]:
     return sorted({term_bucket_py(t, tables.cfg.n_buckets) for t in terms})
 
 
-_EMPTY_SQL_TYPES = {
-    "int": "INT",
-    "long": "BIGINT",
-    "bigint": "BIGINT",
-    "double": "DOUBLE",
-    "string": "STRING",
-}
+def _arrow_schema(ddl: str):
+    """Arrow schema for a simple DDL string (``"doc_id long, score
+    double"``) — the kernels' output schemas and the query results'."""
+    import pyarrow as pa
+
+    types = {"int": pa.int32(), "long": pa.int64(), "double": pa.float64(),
+             "string": pa.string()}
+    return pa.schema([(n, types[t]) for n, t in (f.split() for f in ddl.split(","))])
+
+
+def _local_df(spark, table) -> DataFrame:
+    """A driver-held Arrow table as a LocalRelation: no job to build or
+    to collect, doubles bit-exact. (``createDataFrame`` of Python rows
+    parallelizes defaultParallelism slices — a 32-task job per collect,
+    0.3s at local[32]; SQL ``VALUES`` text pays a parse per row.)"""
+    return spark.createDataFrame(table)
+
+
+def _as_df(spark, scored) -> DataFrame:
+    """Either regime's scores as a DataFrame, for compositions with
+    other tables (boolean joins, paging, grouping, fq semi-joins)."""
+    return scored if isinstance(scored, DataFrame) else _local_df(spark, scored)
 
 
 def _empty_literal(spark, schema: str) -> DataFrame:
-    """Empty DataFrame with the given simple DDL schema as a literal
-    LocalRelation — NOT ``createDataFrame([], ddl)``: the latter
-    parallelizes defaultParallelism empty slices, so every collect of an
-    empty result ran a 32-task job (measured 0.3s at local[32] — the
-    entire cost of a zero-result query); this folds to an empty
-    LocalRelation and collects driver-only (~10ms). Used by every
-    zero-result fallback across the query surface."""
-    cols = []
-    for field in schema.split(","):
-        name, typ = field.strip().split()
-        cols.append(f"CAST(NULL AS {_EMPTY_SQL_TYPES[typ.lower()]}) AS {name}")
-    return spark.sql("SELECT " + ", ".join(cols) + " WHERE 1=0")
+    """Empty DataFrame with the given simple DDL schema — an empty
+    LocalRelation that collects driver-only. Used by every zero-result
+    fallback across the query surface."""
+    return _local_df(spark, _arrow_schema(schema).empty_table())
 
 
 def _empty_result(tables: IndexTables) -> DataFrame:
@@ -584,48 +604,28 @@ SINGLE_TERM_REPARTITION_MIN_POSTINGS = 200_000
 # scale-adaptive, not tuned to either local mode or the cluster).
 SCORER_POSTINGS_PER_PARTITION = 65_536
 
-# Shuffle-free co-location crossover (guide §2.4 "remove shuffles
-# outright"): when Σ df fits one scorer partition anyway (the derived
-# width is 1), the block_id exchange buys nothing — the decode was
-# already serial in its single reduce task — so a coalesce(1) feeds the
-# kernel the identical single sorted partition while removing the
-# exchange and its extra AQE stage job (~0.05-0.15s of pure scheduling
-# on the measured host; interleaved A/B at 5k docs: multi-term medians
-# -7-20%). A HIGHER crossover was measured and rejected: at 262k the
-# coalesce also serialized decodes the old path ran 2-4-wide, and 50k-doc
-# 3-4-term queries regressed ~20%. Gated ALSO on the scan side (postings
-# resident in the touched buckets, estimated driver-side as
-# n_docs*avgdl*buckets_touched/n_buckets): coalesce(1) collapses the
-# parquet scan to one task, which must stay cheap — a rare term in a
-# huge corpus keeps the parallel-scan + exchange path.
-SCORER_COALESCE_MAX_POSTINGS = 65_536
-SCORER_COALESCE_MAX_SCAN_POSTINGS = 2_000_000
+# Local-regime gate: a query whose Σ df fits one scorer partition runs
+# its kernel ON THE DRIVER, not in a Python worker task. Every Python
+# task pays PySpark's per-task ``importlib.invalidate_caches()``, which
+# re-reads every zip on the worker path (166-356 ms per task on a
+# 4-vCPU host, against ~1 ms of decode); no ``spark.python.*`` setting
+# removes it. Only the ≤ Σ df pruned block rows reach the driver, and
+# their scan keeps its normal parallelism. The gate stays at one
+# partition because a local decode is serial: a 262k gate, measured for
+# the single-task regime this one replaced, serialized decodes the
+# exchange ran 2-4-wide (50k-doc 3-4-term queries regressed ~20%).
+LOCAL_KERNEL_MAX_POSTINGS = 65_536
 
 
-def _scan_est(n_docs: int, avgdl: float, buckets: list[int], n_buckets: int) -> int:
-    """Upper estimate of the postings resident in the touched buckets
-    (avgdl ≥ distinct terms per doc) — the coalesce gate's scan side.
-
-    Skew: the estimate assumes postings spread uniformly over the
-    buckets. A hot bucket can hold more than its share, and coalesce(1)
-    then serializes a larger parquet scan than the gate intends — a
-    cost, never a wrong answer. Per-bucket row counts (or file sizes)
-    would remove the assumption; the index records neither yet."""
-    return int(n_docs * avgdl * len(buckets) / n_buckets)
-
-
-def _term_postings(tables: IndexTables, terms: list[str]) -> tuple[DataFrame, list[int]]:
+def _term_postings(tables: IndexTables, terms: list[str]) -> DataFrame:
     """The postings scan for ``terms`` — pruned by bucket directory
     (PartitionFilters) and by row-group min/max stats on tid (pushed
-    In) — plus the buckets it touches."""
+    In)."""
     from oni_indexer_spark.hashing import xxhash64_str
 
     buckets = _buckets_for(tables, terms)
     tids = [xxhash64_str(t) for t in terms]
-    return (
-        tables.postings.where(F.col("bucket").isin(buckets) & F.col("tid").isin(tids)),
-        buckets,
-    )
+    return tables.postings.where(F.col("bucket").isin(buckets) & F.col("tid").isin(tids))
 
 
 def _scorer_nparts(spark, est_postings: int | None) -> int:
@@ -635,36 +635,68 @@ def _scorer_nparts(spark, est_postings: int | None) -> int:
     return max(1, min(conf_parts, -(-int(est_postings) // SCORER_POSTINGS_PER_PARTITION)))
 
 
-def _colocate_blocks(
-    sel: DataFrame,
-    est_postings: int | None,
-    scan_est: int | None,
-    nparts: int | None = None,
-) -> DataFrame:
-    """Arrange the compressed block rows so every doc-range block's rows
-    for all query terms are contiguous (sorted) within one partition —
-    the input contract of every block-aligned scorer kernel. Two plans:
+class _DocSet:
+    """A SORTED doc_id array that filters inside a kernel (a selective
+    fq's matches, a rerank window). A driver-side kernel reads the
+    array in place; Spark kernels read one broadcast of it, built on
+    first use."""
 
-    - tiny queries over small scans (both gates above): ``coalesce(1)``
-      + sort — NO exchange; the kernels already tolerate a block split
-      across Arrow batches (carry-over), and one partition trivially
-      co-locates, so this is input-identical to the shuffle plan while
-      running the whole query as ONE job instead of two AQE stage jobs.
-    - everything else: hash-repartition by block_id at the scale-adaptive
-      width (see ``_scorer_nparts``; explicit ``nparts`` overrides, e.g.
-      the block-max pruner's ≤k-block candidate pass).
-    """
-    if (
-        nparts is None
-        and est_postings is not None
-        and est_postings <= SCORER_COALESCE_MAX_POSTINGS
-        and scan_est is not None
-        and scan_est <= SCORER_COALESCE_MAX_SCAN_POSTINGS
-    ):
-        return sel.coalesce(1).sortWithinPartitions("block_id")
-    if nparts is None:
-        nparts = _scorer_nparts(sel.sparkSession, est_postings)
-    return sel.repartition(nparts, F.col("block_id")).sortWithinPartitions("block_id")
+    def __init__(self, ids):
+        self.ids = ids
+        self._bc = None
+
+    def broadcast(self, sc):
+        if self._bc is None:
+            self._bc = sc.broadcast(self.ids)
+        return self._bc
+
+
+def _run_kernel(
+    sel: DataFrame,
+    make_kernel,
+    schema: str,
+    est_postings: int | None,
+    allowed: _DocSet | None = None,
+    colocate: bool = True,
+    nparts: int | None = None,
+):
+    """The one place a query-time kernel meets Spark. ``sel`` is the
+    pruned block-row scan; ``make_kernel(allowed)`` builds the kernel
+    (Arrow batches → ``schema`` batches) around the doc-set filter in
+    the form its regime reads; ``colocate`` says the kernel needs each
+    doc-range block's rows for all terms contiguous (every kernel but
+    the single-term scorer).
+
+    - local — Σ df (``est_postings``) ≤ ``LOCAL_KERNEL_MAX_POSTINGS``
+      and no explicit width: ``toArrow()`` (one JVM-only job), a
+      block_id sort in pyarrow, the kernel on the driver. Returns its
+      output as a ``pa.Table`` (reduce it on the driver too, or hand it
+      to Spark with :func:`_as_df`).
+    - exchange(n) — otherwise: ``mapInArrow`` tasks, after (when
+      ``colocate``) a hash repartition by block_id at the Σ df-derived
+      width (:func:`_scorer_nparts`; an explicit ``nparts`` picks this
+      regime and the width, e.g. the pruner's ≤k-block pass). The
+      width is EXPLICIT: AQE would coalesce a plain repartition(col) of
+      a few MB of blobs to ~1 partition and serialize the decode
+      (measured at 1M docs). Returns a DataFrame."""
+    if nparts is None and est_postings is not None and est_postings <= LOCAL_KERNEL_MAX_POSTINGS:
+        import pyarrow as pa
+
+        rows = sel.toArrow()
+        if colocate:
+            rows = rows.sort_by("block_id")
+        kernel = make_kernel(None if allowed is None else allowed.ids)
+        return pa.Table.from_batches(
+            list(kernel(rows.to_batches())), schema=_arrow_schema(schema)
+        )
+    spark = sel.sparkSession
+    if allowed is not None:
+        allowed = allowed.broadcast(spark.sparkContext)
+    if colocate:
+        if nparts is None:
+            nparts = _scorer_nparts(spark, est_postings)
+        sel = sel.repartition(nparts, F.col("block_id")).sortWithinPartitions("block_id")
+    return sel.mapInArrow(make_kernel(allowed), schema)
 
 
 def _scores(
@@ -678,28 +710,28 @@ def _scores(
     floor: float | None = None,
     est_postings: int | None = None,
     nparts: int | None = None,
-    allowed_bc=None,
-    scan_est: int | None = None,
-) -> DataFrame:
-    """Exact (doc_id, score) for every doc present in the postings subset.
-    ``idf`` is keyed by tid (the postings key). ``k`` (when given)
-    enables per-batch conservative candidate selection — it must be the
-    query's final top-k. ``floor`` is the pruned path's pass-1 τ (docs
-    provably below it round under the kth score and may be dropped).
-    ``est_postings`` (Σ df, known driver-side for free) routes large
-    single-term queries through the repartition path; ``nparts``
-    overrides the repartition width (the pruner's tiny candidate sets
-    don't need the full fan-out). ``allowed_bc`` (a broadcast SORTED
-    doc_id array — Searcher._fq_allowed) pushes a selective fq INTO the
-    workers so candidate selection stays on; without it an fq disables
-    per-batch selection (every matching doc's total leaves the workers)
-    and is applied by a doclen semi-join afterwards."""
+    allowed: _DocSet | None = None,
+):
+    """Exact (doc_id, score) for every doc present in the postings
+    subset — a ``pa.Table`` in the local regime, else a DataFrame (see
+    :func:`_run_kernel`). ``idf`` is keyed by tid (the postings key).
+    ``k`` (when given) enables per-batch conservative candidate
+    selection — it must be the query's final top-k. ``floor`` is the
+    pruned path's pass-1 τ (docs provably below it round under the kth
+    score and may be dropped). ``est_postings`` (Σ df, known
+    driver-side for free) picks the regime and routes large single-term
+    queries through the repartition path; ``nparts`` forces the
+    exchange regime at that width. ``allowed`` (Searcher._fq_docs)
+    pushes a selective fq INTO the kernel so candidate selection stays
+    on; without it an fq disables per-batch selection (every matching
+    doc's total leaves the kernel) and is applied by a doclen semi-join
+    afterwards."""
     cfg = tables.cfg
-    # an fq runs in-worker only as a broadcast doc set; without one,
-    # fq filters AFTER scoring — a selected candidate set could lose
-    # its top rows to the filter, so selection is off and every matching
-    # doc's total leaves the workers for the doclen semi-join below
-    k_sel = k if (fq is None or allowed_bc is not None) else None
+    # an fq runs in-kernel only as a doc set; without one, fq filters
+    # AFTER scoring — a selected candidate set could lose its top rows
+    # to the filter, so selection is off and every matching doc's total
+    # leaves the kernel for the doclen semi-join below
+    k_sel = k if (fq is None or allowed is not None) else None
     pos_cols = ["n"] if cfg.positions else []
     if len(idf) == 1 and (
         est_postings is None or est_postings < SINGLE_TERM_REPARTITION_MIN_POSTINGS
@@ -709,36 +741,22 @@ def _scores(
         # no aggregate (terms over the repartition threshold take the
         # block-aligned path below for decode parallelism)
         (idf_val,) = idf.values()
-        scored = postings_subset.select(
-            "block_id", "block_min_dl", *pos_cols, "blob"
-        ).mapInArrow(
-            _make_decode_score_topk_arrow(
+        scored = _run_kernel(
+            postings_subset.select("block_id", "block_min_dl", *pos_cols, "blob"),
+            lambda allowed: _make_decode_score_topk_arrow(
                 cfg.block_size, float(idf_val), float(avgdl), cfg.k1, cfg.b, k_sel,
-                positions=cfg.positions, allowed_bc=allowed_bc, floor=floor,
+                positions=cfg.positions, allowed=allowed, floor=floor,
             ),
             "doc_id long, score double",
+            est_postings, allowed, colocate=False, nparts=nparts,
         )
     else:
-        # block-aligned path: ONE shuffle of the compressed block rows
-        # co-locates every term's postings per doc-range block; exact
+        # block-aligned path: co-located compressed block rows; exact
         # per-doc totals + AND/τ/top-k selection happen in numpy inside
-        # the worker (no decoded-row shuffle, no JVM agg). EXPLICIT
-        # partition count: repartition(col) alone is an AQE-coalescible
-        # shuffle, and the blob shuffle is only a few MB per query — AQE
-        # would collapse it to ~1 post-shuffle partition and serialize
-        # the decode (measured at 1M docs: 3-4-term latency went linear
-        # in decoded volume). The count is derived from Σ df
-        # (SCORER_POSTINGS_PER_PARTITION) so small corpora don't pay 32
-        # near-empty reduce tasks and large ones still fan the decode
-        # across the cores.
-        co = _colocate_blocks(
+        # the kernel (no decoded-row shuffle, no JVM agg)
+        scored = _run_kernel(
             postings_subset.select("tid", "block_id", "block_min_dl", *pos_cols, "blob"),
-            est_postings,
-            scan_est,
-            nparts=nparts,
-        )
-        scored = co.mapInArrow(
-            _make_decode_score_group_arrow(
+            lambda allowed: _make_decode_score_group_arrow(
                 cfg.block_size,
                 {int(t): float(v) for t, v in idf.items()},
                 float(avgdl),
@@ -748,24 +766,66 @@ def _scores(
                 k_sel,
                 floor,
                 positions=cfg.positions,
-                allowed_bc=allowed_bc,
+                allowed=allowed,
             ),
             "doc_id long, score double",
+            est_postings, allowed, nparts=nparts,
         )
-    if fq and allowed_bc is None:
+    if fq and allowed is None:
         keep = _fq_keep(tables.doclen, fq)
-        scored = scored.join(keep.select("doc_id"), "doc_id", "left_semi")
+        scored = _as_df(tables.postings.sparkSession, scored).join(
+            keep.select("doc_id"), "doc_id", "left_semi"
+        )
     return scored
 
 
-def _ranked(scored: DataFrame, k: int) -> DataFrame:
+def _ranked_arrow(scored, k: int):
+    """Driver twin of the Spark top-k in :func:`_ranked` over a local
+    (Arrow) result: the first ``k`` rows on (round(score, 6) desc,
+    doc_id asc), numbered from 1."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    import numpy as np
+    import pyarrow as pa
+
+    docs = scored.column("doc_id").to_numpy()
+    s = scored.column("score").to_numpy()
+    if s.size > k:
+        # the exact key below is per-row Python: first drop rows that
+        # cannot reach the top k (numpy's rounding is within 1e-6 of the
+        # exact key, so every top-k row is within 3e-6 of the kth)
+        approx = np.round(s, 6)
+        kth = np.partition(approx, s.size - k)[s.size - k]
+        keep = approx >= kth - 3e-6
+        docs, s = docs[keep], s[keep]
+    # Spark's round(x, 6) is BigDecimal.valueOf(x).setScale(6, HALF_UP):
+    # the SHORTEST decimal form rounded half-up, not the binary value
+    # half-even as in Python and numpy (they differ at 7th-decimal
+    # half-way points such as 5e-7)
+    q = Decimal("0.000001")
+    keys = [Decimal(repr(float(x))).quantize(q, rounding=ROUND_HALF_UP) for x in s]
+    order = sorted(range(s.size), key=lambda i: (-keys[i], docs[i]))[:k]
+    return pa.table(
+        [
+            pa.array(np.arange(1, len(order) + 1), type=pa.int32()),
+            pa.array(docs[order], type=pa.int64()),
+            pa.array(s[order], type=pa.float64()),
+        ],
+        schema=_arrow_schema("rank int, doc_id long, score double"),
+    )
+
+
+def _ranked(spark, scored, k: int) -> DataFrame:
     """Top-k with deterministic tie-break: rank on (round(score,6) desc,
     doc_id asc). Rounding first makes ranking robust to non-associative
     float summation (engine vs oracle agree bit-for-bit after round).
-    Fused to 3 DataFrame ops (orderBy/limit/select) — the previous
-    withColumn/window/select chain cost ~20ms of extra driver-side plan
-    construction per query (py4j roundtrips dominate small-query
-    latency; profiled r6)."""
+    A local (Arrow) result is ranked on the driver
+    (:func:`_ranked_arrow`) and comes back as a LocalRelation; a
+    DataFrame is ranked by Spark, fused to 3 DataFrame ops
+    (orderBy/limit/select — each extra op costs driver-side py4j plan
+    construction)."""
+    if not isinstance(scored, DataFrame):
+        return _local_df(spark, _ranked_arrow(scored, k))
     from pyspark.sql import Window as W
 
     order = [F.desc(F.round("score", 6)), F.asc("doc_id")]
@@ -798,12 +858,20 @@ class Searcher:
     mutator commits a new lineage record) against the listing memoized
     with the caches, and self-invalidates on any change (r3 VERDICT #5).
     One FileSystem.listStatus per query — driver-side, ~ms.
+
+    WHEN A QUERY RUNS: a local-regime query (Σ df ≤
+    ``LOCAL_KERNEL_MAX_POSTINGS`` — see the module docstring) does its
+    work when :meth:`topk` (or any query method) is CALLED: the scan is
+    collected and scored then, and the returned DataFrame is a
+    LocalRelation whose ``collect()`` runs no job. Exchange-regime
+    queries stay lazy until ``collect()``. Either way a result
+    describes the index as of the call.
     """
 
-    # an fq matching at most this many docs ships as a broadcast sorted
-    # doc_id array into the scorers (8 B/doc → ≤16 MB at the default);
-    # above it, the scorer emits all matching totals and a doclen
-    # semi-join applies the filter (the pre-r5 behavior)
+    # an fq matching at most this many docs ships as a sorted doc_id
+    # array into the kernels (8 B/doc → ≤16 MB broadcast at the
+    # default); above it, the kernel emits all matching totals and a
+    # doclen semi-join applies the filter (the pre-r5 behavior)
     FQ_PUSHDOWN_MAX_DOCS = 2_000_000
 
     # rarest-term block prefilter bound (AND/phrase queries): the
@@ -817,34 +885,34 @@ class Searcher:
         self.fq_pushdown_max_docs = self.FQ_PUSHDOWN_MAX_DOCS
         self._stats: tuple[int, float] | None = None
         self._df_cache: dict[str, int] = {}
-        self._fq_cache: dict[tuple, tuple[int, object]] = {}
+        self._fq_cache: dict[tuple, tuple[int, _DocSet | None]] = {}
         self._lineage_sig: tuple | None = None
 
-    def _fq_allowed(self, fq: dict[str, str]) -> tuple[int, object]:
-        """(match_count, broadcast sorted doc_id array | None) for an fq,
-        memoized per filter (r4 VERDICT #4: fq selectivity is knowable
-        driver-side from the doclen metadata for the cost of one count).
-        The broadcast form is only built when the filter is selective
-        enough to ship (≤ fq_pushdown_max_docs)."""
+    def _fq_docs(self, fq: dict | None) -> tuple[DataFrame | None, _DocSet | None]:
+        """``(empty, allowed)`` for an optional fq. ``empty`` is the empty
+        result when the filter matches no doc (callers return it as is),
+        else None. ``allowed`` is the filter's :class:`_DocSet` when it
+        is selective enough to ship into the kernels (≤
+        fq_pushdown_max_docs), else None. Memoized per filter (r4
+        VERDICT #4: fq selectivity is knowable driver-side from the
+        doclen metadata for the cost of one count)."""
+        if fq is None:
+            return None, None
         key = tuple(sorted(fq.items()))
         hit = self._fq_cache.get(key)
         if hit is None:
             keep = _fq_keep(self.tables.doclen, fq)
             cnt = keep.count()
-            bc = None
+            docs = None
             if 0 < cnt <= self.fq_pushdown_max_docs:
                 import numpy as np
 
-                ids = np.sort(
-                    np.array(
-                        [r["doc_id"] for r in keep.select("doc_id").collect()],
-                        dtype=np.int64,
-                    )
-                )
-                bc = self.tables.doclen.sparkSession.sparkContext.broadcast(ids)
-            hit = (cnt, bc)
+                ids = keep.select("doc_id").toArrow().column("doc_id").to_numpy()
+                docs = _DocSet(np.sort(ids))
+            hit = (cnt, docs)
             self._fq_cache[key] = hit
-        return hit
+        cnt, docs = hit
+        return (_empty_result(self.tables) if cnt == 0 else None), docs
 
     def _lineage_signature(self) -> tuple | None:
         if self.tables.path is None:
@@ -955,7 +1023,7 @@ class Searcher:
         n_blocks_est = max(1, n_docs // self.tables.cfg.block_size)
         if min_df >= n_blocks_est // 2 or min_df > self.RARE_BLOCK_MAX_DF:
             return None
-        return _term_postings(self.tables, [min_term])[0].select("block_id").distinct()
+        return _term_postings(self.tables, [min_term]).select("block_id").distinct()
 
     def topk(
         self,
@@ -1023,35 +1091,41 @@ class Searcher:
         untouched, a weighted query is just a different idf dict.
         ``exclude_doc_id`` drops one doc before ranking (MLT excludes its
         source doc) — a plain filter, no join."""
+        empty, allowed = self._fq_docs(fq)
+        if empty is not None:
+            return empty
         tables = self.tables
+        spark = tables.postings.sparkSession
         n_docs, avgdl = self.stats()
         idf = self._idf_by_tid(dfs, weights)
-        p, buckets = _term_postings(tables, list(dfs))
+        p = _term_postings(tables, list(dfs))
         est = sum(dfs.values())
-        scan_est = _scan_est(n_docs, avgdl, buckets, tables.cfg.n_buckets)
         if mode == "and":
             p = self._rare_block_prefilter(p, dfs, n_docs)
         if prune == "auto":
             prune = est > self.prune_cost_threshold
-        allowed_bc = None
-        if fq is not None:
-            fq_count, allowed_bc = self._fq_allowed(fq)
-            if fq_count == 0:
-                return _empty_result(tables)
         # excluding a doc means the (k+1)-th candidate can rise into the
         # top-k, so every k-bounded stage (pass-1 τ, per-batch candidate
         # selection) must run at k+1 before the filter drops the doc
         k_eff = k + 1 if exclude_doc_id is not None else k
-        floor = None
+        floor = nparts = None
         if prune and mode == "or" and fq is None:
             p, floor = _blockmax_prune(p, tables, idf, avgdl, k_eff)
+            # pruning is the large-query plan ('auto' prunes far above
+            # the local gate), so a pruned query keeps the exchange
+            nparts = _scorer_nparts(spark, est)
         scored = _scores(
             p, tables, idf, avgdl, mode, fq, k=k_eff, floor=floor,
-            est_postings=est, allowed_bc=allowed_bc, scan_est=scan_est,
+            est_postings=est, nparts=nparts, allowed=allowed,
         )
         if exclude_doc_id is not None:
-            scored = scored.where(F.col("doc_id") != F.lit(exclude_doc_id))
-        return _ranked(scored, k)
+            if isinstance(scored, DataFrame):
+                scored = scored.where(F.col("doc_id") != F.lit(exclude_doc_id))
+            else:
+                import pyarrow.compute as pc
+
+                scored = scored.filter(pc.not_equal(scored["doc_id"], exclude_doc_id))
+        return _ranked(spark, scored, k)
 
     def _clause_scores(
         self,
@@ -1059,19 +1133,20 @@ class Searcher:
         mode: str = "or",
         weights: dict[str, float] | None = None,
         fq: dict | None = None,
-        allowed_bc=None,
+        allowed: _DocSet | None = None,
         block_filter: DataFrame | None = None,
     ) -> DataFrame:
         """Unranked exact (doc_id, score) for one term-set clause of a
         boolean query — the k=None twin of ``_topk_from_dfs`` (no τ
         pruning, no per-batch candidate selection: clause totals combine
         with OTHER clauses downstream, so every matching doc's total
-        must leave the workers). Single-clause queries should use the
-        k-bounded ``_topk_from_dfs`` instead."""
+        must leave the kernel). Single-clause queries should use the
+        k-bounded ``_topk_from_dfs`` instead. Always a DataFrame: a
+        local result is handed back as a LocalRelation."""
         tables = self.tables
         n_docs, avgdl = self.stats()
         idf = self._idf_by_tid(dfs, weights)
-        p, clause_buckets = _term_postings(tables, list(dfs))
+        p = _term_postings(tables, list(dfs))
         if mode == "and":
             p = self._rare_block_prefilter(p, dfs, n_docs)
         if block_filter is not None:
@@ -1081,11 +1156,10 @@ class Searcher:
             # because its scores only survive the downstream join/filter
             # against the MUST set anyway
             p = p.join(F.broadcast(block_filter), "block_id", "left_semi")
-        return _scores(
+        return _as_df(tables.postings.sparkSession, _scores(
             p, tables, idf, avgdl, mode, fq, k=None,
-            est_postings=sum(dfs.values()), allowed_bc=allowed_bc,
-            scan_est=_scan_est(n_docs, avgdl, clause_buckets, tables.cfg.n_buckets),
-        )
+            est_postings=sum(dfs.values()), allowed=allowed,
+        ))
 
     def _expansion(
         self, kind: str, tok: str, edits: int, max_prefix_terms: int,
@@ -1141,6 +1215,7 @@ class Searcher:
         from oni_indexer_spark.query.parser import parse_query
 
         tables = self.tables
+        spark = tables.postings.sparkSession
         pq = parse_query(query)
         an = tables.cfg.analyzer
         fq = pq.filters or None
@@ -1203,19 +1278,17 @@ class Searcher:
                 )
             if len(phrases) == 1 and not expansions:
                 _, toks, slop, boost = phrases[0]
-                allowed_bc = None
-                if fq is not None:
-                    fq_count, allowed_bc = self._fq_allowed(fq)
-                    if fq_count == 0:
-                        return _empty_result(tables)
+                empty, allowed = self._fq_docs(fq)
+                if empty is not None:
+                    return empty
                 scored = self._phrase_scores(
                     toks,
-                    k if (fq is None or allowed_bc is not None) else None,
-                    fq=fq, allowed_bc=allowed_bc, slop=slop, boost=boost,
+                    k if (fq is None or allowed is not None) else None,
+                    fq=fq, allowed=allowed, slop=slop, boost=boost,
                 )
                 if scored is None:
                     return _empty_result(tables)
-                return _ranked(scored, k)
+                return _ranked(spark, scored, k)
             if len(expansions) == 1 and not phrases:
                 _, kind, raw, _tok, edits, boost = expansions[0]
                 if boost == 1.0:
@@ -1234,14 +1307,12 @@ class Searcher:
                 )
 
         # ---- general boolean compositor
-        allowed_bc = None
-        if fq is not None:
-            fq_count, allowed_bc = self._fq_allowed(fq)
-            if fq_count == 0:
-                return _empty_result(tables)
+        empty, allowed = self._fq_docs(fq)
+        if empty is not None:
+            return empty
         # push the filter into every positive pass only when it runs
-        # in-worker (broadcast); otherwise apply ONE semi-join at the end
-        clause_fq = fq if allowed_bc is not None else None
+        # in-kernel (a doc set); otherwise apply ONE semi-join at the end
+        clause_fq = fq if allowed is not None else None
 
         # cross-clause MUST-block pushdown: every result doc contains
         # every MUST term and every token of every MUST phrase, so the
@@ -1267,17 +1338,17 @@ class Searcher:
             if len(dfs) < len(w):
                 return _empty_result(tables)
             must_parts.append(self._clause_scores(
-                dfs, mode="and", weights=w, fq=clause_fq, allowed_bc=allowed_bc,
+                dfs, mode="and", weights=w, fq=clause_fq, allowed=allowed,
                 block_filter=must_blocks))
         for occ, toks, slop, boost in phrases:
             if occ != "must":
                 continue
             s = self._phrase_scores(toks, None, fq=clause_fq,
-                                    allowed_bc=allowed_bc, slop=slop, boost=boost,
+                                    allowed=allowed, slop=slop, boost=boost,
                                     block_filter=must_blocks)
             if s is None:
                 return _empty_result(tables)
-            must_parts.append(s)
+            must_parts.append(_as_df(spark, s))
         for occ, kind, _raw, tok, edits, boost in expansions:
             if occ != "must":
                 continue
@@ -1287,7 +1358,7 @@ class Searcher:
                 return _empty_result(tables)
             must_parts.append(self._clause_scores(
                 dfs, mode="or", weights={t: w * boost for t, w in ws.items()},
-                fq=clause_fq, allowed_bc=allowed_bc, block_filter=must_blocks))
+                fq=clause_fq, allowed=allowed, block_filter=must_blocks))
 
         should_parts: list[DataFrame] = []
         sh_w = dict(terms["should"])
@@ -1303,16 +1374,16 @@ class Searcher:
             if dfs:
                 should_parts.append(self._clause_scores(
                     dfs, mode="or", weights={t: sh_w[t] for t in dfs},
-                    fq=clause_fq, allowed_bc=allowed_bc,
+                    fq=clause_fq, allowed=allowed,
                     block_filter=must_blocks))
         for occ, toks, slop, boost in phrases:
             if occ != "should":
                 continue
             s = self._phrase_scores(toks, None, fq=clause_fq,
-                                    allowed_bc=allowed_bc, slop=slop, boost=boost,
+                                    allowed=allowed, slop=slop, boost=boost,
                                     block_filter=must_blocks)
             if s is not None:
-                should_parts.append(s)
+                should_parts.append(_as_df(spark, s))
 
         not_sets: list[DataFrame] = []
         if terms["not"]:
@@ -1325,7 +1396,7 @@ class Searcher:
                 continue
             s = self._phrase_scores(toks, None, slop=slop)
             if s is not None:
-                not_sets.append(s.select("doc_id"))
+                not_sets.append(_as_df(spark, s).select("doc_id"))
         for occ, kind, _raw, tok, edits, _boost in expansions:
             if occ != "not":
                 continue
@@ -1362,12 +1433,12 @@ class Searcher:
             )
         for ns in not_sets:
             base = base.join(ns, "doc_id", "left_anti")
-        if fq is not None and allowed_bc is None:
+        if fq is not None and allowed is None:
             base = base.join(
                 _fq_keep(tables.doclen, fq).select("doc_id"), "doc_id",
                 "left_semi",
             )
-        return _ranked(base, k)
+        return _ranked(spark, base, k)
 
     def expand_prefix(
         self, prefix: str, max_terms: int = 128
@@ -1465,7 +1536,7 @@ class Searcher:
         invalidates the ≥k-docs guarantee — filtered docs don't count —
         so the bound is applied only when fq is None.)"""
         tables = self.tables
-        p, _ = _term_postings(tables, terms)
+        p = _term_postings(tables, terms)
         if fq is None:
             low_blocks = (
                 p.select("block_id").distinct().orderBy(F.asc("block_id")).limit(k)
@@ -1591,9 +1662,9 @@ class Searcher:
 
         ``fq`` composes exactly as in the OR/AND path (Solr: fq
         restricts results, stats untouched): selective filters ship as
-        a broadcast sorted doc_id array into the scorer so per-batch
-        candidate selection stays on; unselective filters disable
-        selection and apply as a doclen semi-join after scoring."""
+        a sorted doc_id array into the kernel so per-batch candidate
+        selection stays on; unselective filters disable selection and
+        apply as a doclen semi-join after scoring."""
         tables = self.tables
         cfg = tables.cfg
         if not cfg.positions:
@@ -1606,33 +1677,31 @@ class Searcher:
         qtoks = analyzer_tokenize_py(query, cfg.analyzer)
         if not qtoks:
             return _empty_result(tables)
-        allowed_bc = None
-        if fq is not None:
-            fq_count, allowed_bc = self._fq_allowed(fq)
-            if fq_count == 0:
-                return _empty_result(tables)
+        empty, allowed = self._fq_docs(fq)
+        if empty is not None:
+            return empty
         if len(qtoks) == 1:
             # Lucene's 1-term rewrite (fq rides along unchanged)
             return self.topk(query, k=k, mode="or", fq=fq)
         scored = self._phrase_scores(
             qtoks,
             # same rule as _scores: only keep per-batch candidate
-            # selection on when the filter runs in-worker
-            k if (fq is None or allowed_bc is not None) else None,
+            # selection on when the filter runs in-kernel
+            k if (fq is None or allowed is not None) else None,
             fq=fq,
-            allowed_bc=allowed_bc,
+            allowed=allowed,
             slop=slop,
         )
         if scored is None:
             return _empty_result(tables)
-        return _ranked(scored, k)
+        return _ranked(tables.postings.sparkSession, scored, k)
 
     def _phrase_scores(
         self,
         qtoks: list[str],
         k_sel: int | None,
         fq: dict | None = None,
-        allowed_bc=None,
+        allowed: _DocSet | None = None,
         slop: int = 0,
         boost: float = 1.0,
         block_filter: DataFrame | None = None,
@@ -1643,9 +1712,10 @@ class Searcher:
         enables per-batch candidate selection — pass it ONLY when this
         clause alone determines the final ranking (a boolean compositor
         must pass None: clause totals combine downstream, so every
-        matching doc's total has to leave the workers). ``fq`` composes
-        as in ``_scores``: a broadcast doc set filters in-worker, an
-        unselective filter becomes a doclen semi-join here."""
+        matching doc's total has to leave the kernel). ``fq`` composes
+        as in ``_scores``: a doc set filters in-kernel, an unselective
+        filter becomes a doclen semi-join here. Like ``_scores``, a
+        ``pa.Table`` in the local regime, else a DataFrame."""
         import math
 
         tables = self.tables
@@ -1662,29 +1732,27 @@ class Searcher:
         }
         idf_sum = float(sum(idf[t] for t in qtoks)) * boost
         tid_offsets = [(xxhash64_str(t), j) for j, t in enumerate(qtoks)]
-        p, buckets = _term_postings(tables, distinct)
+        p = _term_postings(tables, distinct)
         p = self._rare_block_prefilter(p, dfs, n_docs)
         if block_filter is not None:
             p = p.join(F.broadcast(block_filter), "block_id", "left_semi")
-        # same scale-adaptive fan-out / shuffle-free crossover as _scores
-        # (Σ df of the phrase's distinct terms bounds the decoded volume)
-        co = _colocate_blocks(
+        # Σ df of the phrase's distinct terms bounds the decoded volume
+        scored = _run_kernel(
             p.select("tid", "block_id", "block_min_dl", "n", "blob"),
-            sum(dfs.values()),
-            _scan_est(n_docs, avgdl, buckets, cfg.n_buckets),
-        )
-        scored = co.mapInArrow(
-            _make_decode_phrase_group_arrow(
+            lambda allowed: _make_decode_phrase_group_arrow(
                 cfg.block_size, tid_offsets, idf_sum, float(avgdl), cfg.k1, cfg.b,
                 k_sel,
-                allowed_bc=allowed_bc,
+                allowed=allowed,
                 slop=slop,
             ),
             "doc_id long, score double",
+            sum(dfs.values()), allowed,
         )
-        if fq and allowed_bc is None:
+        if fq and allowed is None:
             keep = _fq_keep(tables.doclen, fq)
-            scored = scored.join(keep.select("doc_id"), "doc_id", "left_semi")
+            scored = _as_df(tables.postings.sparkSession, scored).join(
+                keep.select("doc_id"), "doc_id", "left_semi"
+            )
         return scored
 
 
@@ -1984,7 +2052,7 @@ def topk_direct(
         scored = scored.join(
             _fq_keep(docs, fq).select("doc_id"), "doc_id", "left_semi"
         )
-    return _ranked(scored.select("doc_id", "score"), k)
+    return _ranked(spark, scored.select("doc_id", "score"), k)
 
 
 def topk_fields(

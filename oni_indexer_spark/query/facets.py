@@ -239,14 +239,13 @@ def _make_facet_count_arrow(
     positions: bool = False,
 ):
     """Fused facet.query counter: consumes (tid, block_id, block_min_dl
-    [, n], blob) rows hash-partitioned and sorted by block_id (every
-    query term's postings for a doc-range block arrive together, same
-    contract as the bm25 scorers). One numpy pass per unit of whole
-    blocks builds a per-term presence mask over the dense slot grid,
-    combines masks per bucket (AND/OR), and accumulates
-    ``count(main_hit & bucket_hit)`` — each partition emits ONE tiny
-    (name, count) partial batch. No per-doc row ever leaves the
-    worker."""
+    [, n], blob) rows co-located by block_id (every query term's
+    postings for a doc-range block arrive together, same contract as
+    the bm25 scorers). One numpy pass per unit of whole blocks builds a
+    per-term presence mask over the dense slot grid, combines masks per
+    bucket (AND/OR), and accumulates ``count(main_hit & bucket_hit)`` —
+    each call emits ONE tiny (name, count) partial batch. No per-doc
+    row ever leaves the kernel."""
 
     def _count(batches):
         import numpy as np
@@ -293,17 +292,6 @@ def _make_facet_count_arrow(
     return _count
 
 
-def _names_df(spark, names: list[str]) -> DataFrame:
-    """Literal VALUES name list (LocalRelation — no parallelize job)."""
-    return spark.sql(
-        "SELECT name FROM VALUES %s AS t(name)"
-        % ",".join(
-            "('%s')" % n.replace("\\", "\\\\").replace("'", "\\'")
-            for n in names
-        )
-    )
-
-
 def facet_query(
     tables,
     query: str,
@@ -320,19 +308,23 @@ def facet_query(
 
     Scale shape (fused single-pass, r5 VERDICT #4): counts need only
     per-doc term-PRESENCE, never scores — so the union of all involved
-    terms' postings is decoded ONCE (bucket/tid-pruned scan → one
-    block_id repartition, the bm25 scorer shape) and a numpy presence-
-    mask pass counts every bucket inside the worker; each partition
-    emits B partial counts, one tiny groupBy(name) sums them, and
-    missing buckets zero-fill from the driver-built name list. Nothing
-    doc-sized ever leaves the workers (measured 1M: 4.6s with per-clause
-    match sets + semi-joins before the fusion → see
-    OPTIMIZATION_r06.md)."""
+    terms' postings is decoded ONCE (bucket/tid-pruned scan → the bm25
+    kernel regimes, ``bm25._run_kernel``) and a numpy presence-mask
+    pass counts every bucket inside the kernel. In the local regime the
+    partial counts are summed and zero-filled on the driver; in the
+    exchange regime each partition emits B partial counts, one tiny
+    groupBy(name) sums them, and missing buckets zero-fill from the
+    driver-built name list. Nothing doc-sized ever leaves the kernel
+    (measured 1M: 4.6s with per-clause match sets + semi-joins before
+    the fusion → see OPTIMIZATION_r06.md)."""
+    import pyarrow as pa
+
     from oni_indexer_spark.analyzer import query_terms
     from oni_indexer_spark.hashing import xxhash64_str
     from oni_indexer_spark.query.bm25 import (
-        _colocate_blocks,
-        _scan_est,
+        _empty_literal,
+        _local_df,
+        _run_kernel,
         _term_postings,
         searcher_for,
     )
@@ -341,20 +333,20 @@ def facet_query(
     spark = tables.doclen.sparkSession
     names = sorted(named)
     if not names:
-        return spark.sql(
-            "SELECT CAST(NULL AS STRING) AS name, CAST(NULL AS BIGINT) AS count "
-            "WHERE 1=0"
-        )
-    names_df = _names_df(spark, names)
-    zero = names_df.select(
-        "name", F.lit(0).cast("long").alias("count")
-    ).orderBy(F.asc("name"))
+        return _empty_literal(spark, "name string, count long")
+
+    def counts_of(tot: dict[str, int]) -> DataFrame:
+        return _local_df(spark, pa.table({
+            "name": pa.array(names, type=pa.string()),
+            "count": pa.array([tot.get(n, 0) for n in names], type=pa.int64()),
+        }))
+
     cfg = tables.cfg
     s._check_external_staleness()
     main_terms = query_terms(query, cfg.analyzer)
     main_dfs = s.term_dfs(main_terms) if main_terms else {}
     if not main_dfs or (mode == "and" and len(main_dfs) < len(main_terms)):
-        return zero
+        return counts_of({})
     # mode="or": absent terms contribute nothing; "and": all present
     main_present = [t for t in main_terms if t in main_dfs]
     buckets: list[tuple[str, list[int], bool]] = []
@@ -370,19 +362,14 @@ def facet_query(
         )
         scan_terms.update(present)
     if not buckets:
-        return zero
+        return counts_of({})
     terms = sorted(scan_terms)
-    est = sum(s.term_dfs(terms).values())
     pos_cols = ["n"] if cfg.positions else []
-    p, fq_buckets = _term_postings(tables, terms)
-    n_docs, avgdl = s.stats()
-    co = _colocate_blocks(
-        p.select("tid", "block_id", "block_min_dl", *pos_cols, "blob"),
-        est,
-        _scan_est(n_docs, avgdl, fq_buckets, cfg.n_buckets),
-    )
-    partials = co.mapInArrow(
-        _make_facet_count_arrow(
+    partials = _run_kernel(
+        _term_postings(tables, terms).select(
+            "tid", "block_id", "block_min_dl", *pos_cols, "blob"
+        ),
+        lambda _allowed: _make_facet_count_arrow(
             cfg.block_size,
             [xxhash64_str(t) for t in main_present],
             mode == "and",
@@ -390,12 +377,19 @@ def facet_query(
             positions=cfg.positions,
         ),
         "name string, count long",
+        sum(s.term_dfs(terms).values()),
     )
+    if not isinstance(partials, DataFrame):
+        tot: dict[str, int] = {}
+        for n, c in zip(partials["name"].to_pylist(), partials["count"].to_pylist()):
+            tot[n] = tot.get(n, 0) + c
+        return counts_of(tot)
     counts = partials.groupBy("name").agg(
         F.sum("count").cast("long").alias("count")
     )
     return (
-        names_df.join(F.broadcast(counts), "name", "left")
+        counts_of({}).select("name")
+        .join(F.broadcast(counts), "name", "left")
         .select(
             "name", F.coalesce(F.col("count"), F.lit(0)).cast("long").alias("count")
         )

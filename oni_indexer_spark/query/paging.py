@@ -35,8 +35,8 @@ from pyspark.sql import functions as F
 
 from oni_indexer_spark.index.build import IndexTables
 from oni_indexer_spark.query.bm25 import (
+    _as_df,
     _empty_result,
-    _fq_keep,
     searcher_for,
 )
 
@@ -147,25 +147,26 @@ def page(
 
 def _full_scores(
     s, query: str, mode: str, fq: dict | None, slop: int,
-    allowed_bc=None, block_filter=None,
+    allowed=None, block_filter=None,
 ):
     """Unranked full (doc_id, score) match set for any query mode —
     clause passes with k=None (per-batch selection off: every matching
-    doc can reach the page under an arbitrary sort).
+    doc can reach the page under an arbitrary sort). Always a DataFrame
+    (a local-regime pass comes back as a LocalRelation), or None when
+    nothing can match.
 
-    ``allowed_bc`` / ``block_filter`` (only meaningful with ``fq=None``)
+    ``allowed`` / ``block_filter`` (only meaningful with ``fq=None``)
     push a caller-known bounded doc set into the pass — the rerank
     window pushdown: the scorer decodes only the window's blocks
     (``block_filter`` semi-joins the scan) and emits only window docs
-    (``allowed_bc`` filters inside the worker)."""
+    (``allowed``, a ``bm25._DocSet``, filters inside the kernel)."""
     from oni_indexer_spark.analyzer import analyzer_tokenize_py
 
     tables = s.tables
     if fq is not None:
-        fq_count, allowed_bc = s._fq_allowed(fq)
-        if fq_count == 0:
+        empty, allowed = s._fq_docs(fq)
+        if empty is not None:
             return None
-    clause_fq = fq if fq is not None else None
     if mode == "phrase":
         qtoks = analyzer_tokenize_py(query, tables.cfg.analyzer)
         if not qtoks:
@@ -173,12 +174,13 @@ def _full_scores(
         if len(qtoks) == 1:
             return _full_scores(
                 s, qtoks[0], "or", fq, 0,
-                allowed_bc=allowed_bc, block_filter=block_filter,
+                allowed=allowed, block_filter=block_filter,
             )
-        return s._phrase_scores(
-            qtoks, None, fq=clause_fq, allowed_bc=allowed_bc, slop=slop,
+        scored = s._phrase_scores(
+            qtoks, None, fq=fq, allowed=allowed, slop=slop,
             block_filter=block_filter,
         )
+        return None if scored is None else _as_df(tables.postings.sparkSession, scored)
     from oni_indexer_spark.analyzer import query_terms
 
     terms = query_terms(query, tables.cfg.analyzer)
@@ -188,6 +190,5 @@ def _full_scores(
     if not dfs or (mode == "and" and len(dfs) < len(terms)):
         return None
     return s._clause_scores(
-        dfs, mode=mode, fq=clause_fq, allowed_bc=allowed_bc,
-        block_filter=block_filter,
+        dfs, mode=mode, fq=fq, allowed=allowed, block_filter=block_filter,
     )

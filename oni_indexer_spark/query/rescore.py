@@ -57,7 +57,7 @@ def boost_topk(
             (F.col("score") + F.lit(float(weight)) * boost).alias("score"),
         )
     )
-    return _ranked(boosted, k)
+    return _ranked(tables.doclen.sparkSession, boosted, k)
 
 
 def rerank_topk(
@@ -75,9 +75,9 @@ def rerank_topk(
 
     Window pushdown (r5 VERDICT #7): the base window (≤ ``rerank_docs``
     rows — bounded at any corpus size) is collected driver-side, and
-    rides into the rerank pass twice: its doc_ids as a broadcast sorted
-    array (the fq-pushdown mechanism — the scorer emits only window
-    docs) and its BLOCK list (block_id = doc_id // block_size, computed
+    rides into the rerank pass twice: its doc_ids as a sorted doc set
+    (the fq-pushdown mechanism — the scorer emits only window docs)
+    and its BLOCK list (block_id = doc_id // block_size, computed
     driver-side) as a broadcast semi-join that prunes the rerank scan
     BEFORE decode. The rerank query's postings outside the window's ≤N
     blocks are never shuffled or decoded — previously the second pass
@@ -86,7 +86,16 @@ def rerank_topk(
     query alone). Exactness: per-doc totals are block-local, so
     restricting to the window's blocks plus the final join FROM the
     window side yields byte-identical scores."""
-    from oni_indexer_spark.query.bm25 import _empty_result, _ranked, searcher_for
+    import numpy as np
+    import pyarrow as pa
+
+    from oni_indexer_spark.query.bm25 import (
+        _DocSet,
+        _empty_result,
+        _local_df,
+        _ranked,
+        searcher_for,
+    )
     from oni_indexer_spark.query.paging import _full_scores
 
     if k > rerank_docs:
@@ -100,37 +109,25 @@ def rerank_topk(
     if not base_rows:
         return _empty_result(tables)
     spark = tables.doclen.sparkSession
-    # literal VALUES (LocalRelation) — no parallelize job; base_score
-    # doubles round-trip exactly through repr + CAST(string AS DOUBLE)
-    base = spark.sql(
-        "SELECT doc_id, base_score FROM VALUES %s AS t(doc_id, base_score)"
-        % ",".join(
-            "(CAST(%d AS BIGINT), CAST('%r' AS DOUBLE))"
-            % (r["doc_id"], r["base_score"])
-            for r in base_rows
-        )
-    )
-    import numpy as np
-
+    # Arrow LocalRelations (no job to build; base_score doubles stay
+    # bit-exact): the window, and its block list for the broadcast
+    # semi-join that prunes the rerank scan
+    base = _local_df(spark, pa.table({
+        "doc_id": pa.array([r["doc_id"] for r in base_rows], type=pa.int64()),
+        "base_score": pa.array([r["base_score"] for r in base_rows], type=pa.float64()),
+    }))
     ids = np.sort(np.array([r["doc_id"] for r in base_rows], dtype=np.int64))
-    allowed_bc = spark.sparkContext.broadcast(ids)
-    blocks = sorted({int(i) // tables.cfg.block_size for i in ids})
-    # literal VALUES, not createDataFrame: the latter parallelizes over
-    # defaultParallelism slices and the broadcast build becomes a
-    # 32-task job; a LocalRelation builds the broadcast driver-side
-    block_filter = spark.sql(
-        "SELECT block_id FROM VALUES %s AS t(block_id)"
-        % ",".join("(%d)" % b for b in blocks)
-    )
+    blocks = np.unique(ids // tables.cfg.block_size)
+    block_filter = _local_df(spark, pa.table({"block_id": pa.array(blocks, type=pa.int64())}))
     rr = _full_scores(
         s, rerank_query, rerank_mode, None, 0,
-        allowed_bc=allowed_bc, block_filter=block_filter,
+        allowed=_DocSet(ids), block_filter=block_filter,
     )
     if rr is None:
         final = base.select(
             "doc_id", F.col("base_score").alias("score")
         )
-        return _ranked(final, k)
+        return _ranked(spark, final, k)
     window_rr = rr.select("doc_id", F.col("score").alias("rr_score"))
     final = (
         base.join(window_rr, "doc_id", "left")
@@ -142,4 +139,4 @@ def rerank_topk(
             ).alias("score"),
         )
     )
-    return _ranked(final, k)
+    return _ranked(spark, final, k)

@@ -10,13 +10,14 @@ separately and over-score docs hitting several synonyms).
 
 The scorer is a variant of the block-aligned multi-term pass
 (``bm25._make_decode_score_group_arrow``, over the same
-``bm25._block_stream`` decode core): one shuffle of COMPRESSED block
-rows co-locates every member term's postings per doc-range block, then
-a numpy pass scatter-adds raw tf into a dense
+``bm25._block_stream`` decode core, in the same regimes —
+``bm25._run_kernel``): every member term's postings per doc-range block
+arrive co-located, then a numpy pass scatter-adds raw tf into a dense
 (block-group x block_size x n_groups) grid, saturates per group, and
 sums group scores per doc — exact totals, per-batch candidate
-selection, nothing doc-sized leaves the worker. Shuffle volume is the
-same few-bytes-per-posting blob shuffle as a plain multi-term query.
+selection, nothing doc-sized leaves the kernel. In the exchange regime
+the shuffle is the same few-bytes-per-posting blob shuffle as a plain
+multi-term query.
 """
 
 from __future__ import annotations
@@ -36,11 +37,11 @@ def _make_decode_synonym_group_arrow(
     n_groups_and: int | None,
     k: int | None,
     positions: bool = False,
-    allowed_bc=None,
+    allowed=None,
 ):
     """Arrow scorer: rows are (tid, block_id, block_min_dl[, n], blob),
-    hash-partitioned and sorted by block_id so all member terms'
-    postings for a doc-range block arrive together. Per unit of whole
+    sorted by block_id (co-located) so all member terms' postings for a
+    doc-range block arrive together. Per unit of whole
     blocks: decode -> scatter-add RAW tf per (doc-slot, group) ->
     saturate per group with that group's idf -> sum groups per doc.
     ``n_groups_and``: AND at the group level (doc must hit every
@@ -73,7 +74,7 @@ def _make_decode_synonym_group_arrow(
         sel = np.nonzero(mask)[0]
         return slot_docs(sel), tot[sel]
 
-    return _scoring_kernel(block_size, score, positions, k=k, allowed_bc=allowed_bc)
+    return _scoring_kernel(block_size, score, positions, k=k, allowed=allowed)
 
 
 def synonym_topk(
@@ -90,10 +91,9 @@ def synonym_topk(
     from oni_indexer_spark.analyzer import analyzer_tokenize_py
     from oni_indexer_spark.hashing import xxhash64_str
     from oni_indexer_spark.query.bm25 import (
-        _colocate_blocks,
         _empty_result,
         _ranked,
-        _scan_est,
+        _run_kernel,
         _term_postings,
         searcher_for,
     )
@@ -146,16 +146,12 @@ def synonym_topk(
             scan_terms.append(t)
 
     pos_cols = ["n"] if cfg.positions else []
-    p, syn_buckets = _term_postings(tables, scan_terms)
-    # scale-adaptive fan-out / shuffle-free crossover, same rule as
-    # bm25._scores (Σ df over the scanned terms bounds the decoded volume)
-    co = _colocate_blocks(
-        p.select("tid", "block_id", "block_min_dl", *pos_cols, "blob"),
-        sum(dfs[t] for t in scan_terms),
-        _scan_est(n_docs, avgdl, syn_buckets, cfg.n_buckets),
-    )
-    scored = co.mapInArrow(
-        _make_decode_synonym_group_arrow(
+    # Σ df over the scanned terms bounds the decoded volume
+    scored = _run_kernel(
+        _term_postings(tables, scan_terms).select(
+            "tid", "block_id", "block_min_dl", *pos_cols, "blob"
+        ),
+        lambda allowed: _make_decode_synonym_group_arrow(
             cfg.block_size,
             grp_by_tid,
             idf_by_grp,
@@ -165,7 +161,9 @@ def synonym_topk(
             len(norm_groups) if mode == "and" else None,
             k,
             positions=cfg.positions,
+            allowed=allowed,
         ),
         "doc_id long, score double",
+        sum(dfs[t] for t in scan_terms),
     )
-    return _ranked(scored, k)
+    return _ranked(tables.postings.sparkSession, scored, k)

@@ -24,3 +24,38 @@ def docs(spark):
     from oni_indexer_spark.corpus import from_driver_documents
 
     return from_driver_documents(spark, SF_SMOKE).cache()
+
+
+@pytest.fixture
+def collected_scans(monkeypatch):
+    """Executed plans of the scans the driver collects (``toArrow``) —
+    the local regime's scans run while a query is BUILT, so they never
+    show in the returned DataFrame's plan."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    plans = []
+    to_arrow = DataFrame.toArrow
+
+    def spy(self):
+        out = to_arrow(self)
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    monkeypatch.setattr(DataFrame, "toArrow", spy)
+    return plans
+
+
+def jobs_run(spark, fn):
+    """``(fn(), number of Spark jobs it ran)``, counted through a fresh
+    job group (the statusTracker keeps a group's finished jobs)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-run-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "counted")
+    try:
+        out = fn()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)

@@ -142,3 +142,42 @@ def test_fq_no_match_short_circuits(tables):
 
     s = Searcher(tables)
     assert _rows(s.topk("hash", k=10, fq={"lang": "zz_nope"})) == []
+
+
+# doc_id, score: 7th-decimal half-way points (Spark rounds the shortest
+# decimal form half-up; Python/numpy round the binary value half-even,
+# so 5e-7 → 0 there but 1e-6 in Spark), rounded ties whose raw order is
+# the reverse of their doc_id order, and filler below them
+RANK_TWIN_ROWS = [
+    (11, 0.0000005), (12, 0.000001),
+    (21, 1.0000025), (22, 1.000003), (23, 1.0000015), (24, 1.000002),
+    (31, 2.5000005), (32, 2.500001),
+    (41, 3.0000004), (42, 3.0000001), (43, 3.0000003),
+    (51, 7.7777775), (52, 7.777778),
+] + [(100 + i, 0.25 + i * 1e-7) for i in range(40)]
+
+
+@pytest.mark.parametrize("k", [1, 3, 10, 60, 100])
+def test_driver_ranking_matches_spark_round(spark, k):
+    """The driver-side top-k of a local result (``_ranked_arrow``) orders
+    exactly like Spark's ``_ranked``: (round(score, 6) desc, doc_id
+    asc) — at half-way points, on rounded ties, for k=1 and for k
+    above the row count."""
+    import pyarrow as pa
+
+    from oni_indexer_spark.query.bm25 import _local_df, _ranked
+
+    table = pa.table({
+        "doc_id": pa.array([d for d, _ in RANK_TWIN_ROWS], type=pa.int64()),
+        "score": pa.array([s for _, s in RANK_TWIN_ROWS], type=pa.float64()),
+    })
+    driver = [tuple(r) for r in _ranked(spark, table, k).collect()]
+    jvm = [tuple(r) for r in _ranked(spark, _local_df(spark, table), k).collect()]
+    assert driver == jvm
+    assert len(driver) == min(k, len(RANK_TWIN_ROWS))
+    # the half-way points really do separate the two rounding rules
+    assert round(0.0000005, 6) == 0.0
+    if k >= 60:
+        assert [d for _, d, _ in driver][:2] == [51, 52]
+        assert [d for _, d, _ in driver if d in (11, 12)] == [11, 12]
+        assert [d for _, d, _ in driver if d // 10 == 4] == [41, 42, 43]

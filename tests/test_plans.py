@@ -9,12 +9,18 @@ Query plan contract (query/bm25.py docstring):
   - idf enters as a literal map: NO join against dfreq
   - dl travels inside postings: NO join against doclen
   - no JVM hash aggregate and no decoded-row shuffle: per-doc totals are
-    scatter-added inside the Arrow worker (MapInArrow)
-  - shuffles depend on the query's size: a single term never shuffles;
-    a multi-term query has ZERO exchanges below the coalesce crossover
-    (coalesce(1) co-locates its blocks) and exactly ONE exchange above
-    it — the hash repartition of the compressed block rows by block_id
-  - top-k is TakeOrderedAndProject (heap per partition + merge)
+    scatter-added inside the numpy kernel
+  - three regimes, chosen from Σ df:
+      * empty: an empty LocalRelation (0 jobs);
+      * local (Σ df ≤ LOCAL_KERNEL_MAX_POSTINGS): the pruned scan is
+        collected as Arrow — its plan has no Python node and no
+        Exchange — the kernel and the top-k run on the driver, and the
+        result is a LocalRelation; a small top-k runs exactly 1 job;
+      * exchange(n) (forced in these tests by zeroing the gate): the
+        kernel runs as MapInArrow; a single term never shuffles, a
+        multi-term query has exactly ONE exchange — the hash
+        repartition of the compressed block rows by block_id — and
+        top-k is TakeOrderedAndProject (heap per partition + merge)
 """
 
 import tempfile
@@ -23,6 +29,7 @@ import pytest
 
 from oni_indexer_spark.index import IndexConfig, build_to_path, read_index
 from oni_indexer_spark.query import topk
+from tests.conftest import jobs_run
 
 CFG = IndexConfig(block_size=64, n_buckets=8)
 
@@ -38,41 +45,68 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_query_plan_shape(disk_index):
-    plan = _plan(topk(disk_index, "hash join", k=10, prune=False))
+def _is_local(df) -> bool:
+    return df._jdf.queryExecution().analyzed().toString().startswith("LocalRelation")
+
+
+@pytest.fixture
+def exchange_regime(monkeypatch):
+    """Zero the local gate: every query takes the exchange regime."""
+    from oni_indexer_spark.query import bm25
+
+    monkeypatch.setattr(bm25, "LOCAL_KERNEL_MAX_POSTINGS", 0)
+
+
+def _assert_pruned_scan(plan: str) -> None:
     assert "PartitionFilters: [bucket" in plan
     assert "PushedFilters: [In(tid" in plan
     # v4 blobs store doc/dl relative to per-block bases, so the scan
     # also reads the two small base ints (block_id, block_min_dl) —
     # still no doclen/dfreq columns, no metadata beyond the bases
     assert "ReadSchema: struct<tid:bigint,block_id:bigint,block_min_dl:int,blob:binary>" in plan
-    assert "TakeOrderedAndProject" in plan
     assert "SortMergeJoin" not in plan and "BroadcastHashJoin" not in plan
-    # block-aligned multi-term path, tiny-query crossover (r6): below
-    # the coalesce gates the block_id exchange is replaced by a
-    # single-task Coalesce — ZERO shuffles; per-doc totals are
-    # scatter-added inside the Arrow worker, so there is NO JVM hash
-    # aggregate and no decoded-row shuffle either
-    assert plan.count("Exchange") == 0
-    assert "Coalesce 1" in plan
-    assert "HashAggregate" not in plan
-    assert "MapInArrow" in plan
 
 
-def test_query_plan_shape_above_coalesce_gate(disk_index, monkeypatch):
-    """Above the coalesce crossover the multi-term path keeps its ONE
-    exchange of compressed block rows (the scale shape — forced here by
-    zeroing the gate)."""
-    from oni_indexer_spark.query import bm25
+def test_query_plan_shape(disk_index, collected_scans):
+    """Local regime: the one collected scan is the pruned 4-column scan
+    with no Python node and no shuffle; scoring and top-k ran on the
+    driver, so the result is a LocalRelation."""
+    df = topk(disk_index, "hash join", k=10, prune=False)
+    assert _is_local(df)
+    assert "LocalTableScan" in _plan(df)
+    (scan,) = collected_scans
+    _assert_pruned_scan(scan)
+    assert scan.count("Exchange") == 0
+    assert "Python" not in scan and "MapInArrow" not in scan
+    assert "HashAggregate" not in scan
 
-    monkeypatch.setattr(bm25, "SCORER_COALESCE_MAX_POSTINGS", 0)
+
+def test_query_plan_shape_above_coalesce_gate(disk_index, exchange_regime):
+    """Above the local gate the multi-term path keeps its ONE exchange
+    of compressed block rows (the scale shape — forced here by zeroing
+    the gate); per-doc totals are scatter-added inside the Arrow worker,
+    so there is NO JVM hash aggregate and no decoded-row shuffle."""
     plan = _plan(topk(disk_index, "hash join", k=10, prune=False))
+    _assert_pruned_scan(plan)
     assert plan.count("Exchange") == 1
     # tiny fixture derives width 1 → SinglePartition; at scale the same
     # exchange prints hashpartitioning(block_id, n)
     assert "hashpartitioning(block_id" in plan or "SinglePartition" in plan
+    assert "TakeOrderedAndProject" in plan
     assert "HashAggregate" not in plan
     assert "MapInArrow" in plan
+
+
+def test_small_topk_runs_one_job(spark, disk_index):
+    """A warm small top-k is exactly one Spark job — the scan collect;
+    scoring, ranking and the collect of the LocalRelation run none."""
+    from oni_indexer_spark.query.bm25 import searcher_for
+
+    s = searcher_for(disk_index)
+    s.topk("hash join", k=10).collect()  # warm stats, dfs and the lineage memo
+    rows, jobs = jobs_run(spark, lambda: s.topk("hash join", k=10).collect())
+    assert rows
+    assert jobs == 1
 
 
 def test_build_pushes_column_pruning(spark, docs):
@@ -128,14 +162,26 @@ def test_resolve_via_no_unconditional_broadcast(spark):
     assert "broadcast" in plan_b.lower()
 
 
-def test_single_term_fastpath_no_exchange(disk_index):
+def test_single_term_fastpath_no_exchange(disk_index, collected_scans, monkeypatch):
     """Single-term queries score + candidate-select inside the decoder
     (per-posting score == per-doc score), so the plan has NO shuffle at
-    all — scan → mapInArrow → TakeOrderedAndProject."""
+    all — local: one pruned scan collected, a LocalRelation result;
+    exchange: scan → mapInArrow → TakeOrderedAndProject."""
+    from oni_indexer_spark.query import bm25
+
+    df = topk(disk_index, "hash", k=10, prune=False)
+    assert _is_local(df)
+    (scan,) = collected_scans
+    # one term, one bucket: the pruning filters are equalities
+    assert "PartitionFilters: [isnotnull(bucket" in scan and "EqualTo(tid" in scan
+    assert "Exchange" not in scan and "Python" not in scan
+
+    monkeypatch.setattr(bm25, "LOCAL_KERNEL_MAX_POSTINGS", 0)
     plan = _plan(topk(disk_index, "hash", k=10, prune=False))
     assert "Exchange" not in plan
     assert "TakeOrderedAndProject" in plan
     assert "HashAggregate" not in plan
+    assert "MapInArrow" in plan
 
 
 def test_single_term_fastpath_matches_oracle(spark, disk_index):
@@ -165,13 +211,20 @@ def test_single_term_fastpath_matches_oracle(spark, disk_index):
             assert abs(g[2] - e[2]) < 1e-6, t
 
 
-def test_single_term_clause_scores_no_aggregate(disk_index):
+def test_single_term_clause_scores_no_aggregate(disk_index, collected_scans, monkeypatch):
     """A single-term boolean clause (k=None: every matching doc's score
-    leaves the workers) runs the single-term kernel, not a JVM hash
-    aggregate over decoded rows."""
-    from oni_indexer_spark.query.bm25 import searcher_for
+    leaves the kernel) runs the single-term kernel, not a JVM hash
+    aggregate over decoded rows — in both regimes."""
+    from oni_indexer_spark.query import bm25
 
-    s = searcher_for(disk_index)
+    s = bm25.searcher_for(disk_index)
+    df = s._clause_scores(s.term_dfs(["hash"]))
+    assert _is_local(df)
+    (scan,) = collected_scans
+    assert "HashAggregate" not in scan and "Exchange" not in scan
+    assert "Python" not in scan
+
+    monkeypatch.setattr(bm25, "LOCAL_KERNEL_MAX_POSTINGS", 0)
     plan = _plan(s._clause_scores(s.term_dfs(["hash"])))
     assert "MapInArrow" in plan
     assert "HashAggregate" not in plan
@@ -227,19 +280,79 @@ def test_group_topk_single_group_shuffle(disk_index):
     assert "BroadcastHashJoin [gk" in plan
 
 
-def test_synonym_plan_shape(disk_index):
+def test_synonym_plan_shape(disk_index, collected_scans, monkeypatch):
     """SynonymQuery rides the same block-aligned plan as plain
     multi-term: scan pruned by bucket dir + In(tid), scatter-add inside
-    the Arrow worker, no JVM aggregate; at this tiny scale the coalesce
-    crossover applies (no shuffle at all). (_ranked adds its TakeOrdered
-    on top.)"""
+    the kernel, no JVM aggregate. At this tiny scale the local regime
+    applies (one collected scan, no shuffle, a LocalRelation result);
+    with the gate zeroed it is ONE block_id exchange under MapInArrow
+    (and _ranked's TakeOrdered on top)."""
+    from oni_indexer_spark.query import bm25
     from oni_indexer_spark.query.synonyms import synonym_topk
 
+    df = synonym_topk(disk_index, [["join", "merge"], "hash"], k=10)
+    assert _is_local(df)
+    (scan,) = collected_scans
+    assert "PartitionFilters: [bucket" in scan
+    assert "PushedFilters: [In(tid" in scan
+    assert "SortMergeJoin" not in scan and "BroadcastHashJoin" not in scan
+    assert scan.count("Exchange") == 0
+    assert "HashAggregate" not in scan
+    assert "Python" not in scan
+
+    monkeypatch.setattr(bm25, "LOCAL_KERNEL_MAX_POSTINGS", 0)
     plan = _plan(synonym_topk(disk_index, [["join", "merge"], "hash"], k=10))
     assert "PartitionFilters: [bucket" in plan
     assert "PushedFilters: [In(tid" in plan
     assert "SortMergeJoin" not in plan and "BroadcastHashJoin" not in plan
-    assert plan.count("Exchange") == 0
-    assert "Coalesce 1" in plan
+    assert plan.count("Exchange") == 1
+    assert "TakeOrderedAndProject" in plan
     assert "HashAggregate" not in plan
     assert "MapInArrow" in plan
+
+
+@pytest.fixture(scope="module")
+def pos_index(docs):
+    from oni_indexer_spark.index import build_index
+
+    return build_index(docs, IndexConfig(block_size=64, n_buckets=8, positions=True))
+
+
+def test_local_and_exchange_regimes_agree(spark, docs, pos_index, monkeypatch):
+    """Every kernel call site returns the same rows and scores whether
+    its kernel runs on the driver or in Spark tasks."""
+    from oni_indexer_spark.query import (
+        facet_query,
+        prefix_topk,
+        search,
+        synonym_topk,
+    )
+    from oni_indexer_spark.query import bm25
+
+    lang = docs.select("lang").first()["lang"]
+    cases = {
+        "or": lambda t: topk(t, "hash join merge", k=10),
+        "and": lambda t: topk(t, "hash join", k=10, mode="and"),
+        "fq": lambda t: topk(t, "hash join", k=10, fq={"lang": lang}),
+        "phrase": lambda t: topk(t, "hash join", k=10, mode="phrase"),
+        "synonym": lambda t: synonym_topk(t, [["join", "merge"], "hash"], k=10),
+        "facet": lambda t: facet_query(
+            t, "hash join", {"m": "merge", "ss": "scan sort", "w": "window"}),
+        "boolean": lambda t: search(t, f"+hash -window merge lang:{lang}", k=10),
+        "prefix": lambda t: prefix_topk(t, "s", k=10, rewrite="scoring"),
+    }
+
+    def answers():
+        # a fresh Searcher per regime: nothing memoized crosses over
+        bm25._SEARCHERS.clear()
+        return {name: [tuple(r) for r in q(pos_index).collect()] for name, q in cases.items()}
+
+    local = answers()
+    monkeypatch.setattr(bm25, "LOCAL_KERNEL_MAX_POSTINGS", 0)
+    exchange = answers()
+    for name in cases:
+        assert local[name], name
+        assert len(local[name]) == len(exchange[name]), name
+        for a, b in zip(local[name], exchange[name]):
+            assert a[:-1] == b[:-1], name
+            assert a[-1] == pytest.approx(b[-1], abs=1e-9), name

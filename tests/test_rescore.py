@@ -6,7 +6,7 @@ import pytest
 from oni_indexer_spark.index import IndexConfig, build_index
 from oni_indexer_spark.oracle import boost_topk_sql, rerank_topk_sql
 from oni_indexer_spark.query.rescore import boost_topk, rerank_topk
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, jobs_run
 
 CFG = IndexConfig(block_size=64, n_buckets=8)
 
@@ -92,6 +92,28 @@ def test_rerank_window_bound_respected(rtab):
     got = _rows(rerank_topk(rtab, "the", "hash join", k=10, rerank_docs=12))
     exp = _oracle(rerank_topk_sql("the", "hash join", k=10, rerank_docs=12))
     _assert_match(got, exp)
+
+
+def test_window_relation_is_jobless_and_bit_exact(spark):
+    """rerank_topk's window (doc_id, base_score) and block list are Arrow
+    LocalRelations: building and collecting them runs no Spark job, and
+    every double comes back with the same bits (the window's scores
+    must not drift before they are re-added)."""
+    import numpy as np
+    import pyarrow as pa
+
+    from oni_indexer_spark.query.bm25 import _local_df
+
+    rng = np.random.default_rng(7)
+    scores = np.concatenate([rng.random(200) * 30, [5e-7, 1.0000025, 1 / 3, 2.0**-40]])
+    table = pa.table({
+        "doc_id": pa.array(np.arange(scores.size), type=pa.int64()),
+        "base_score": pa.array(scores, type=pa.float64()),
+    })
+    rows, jobs = jobs_run(spark, lambda: _local_df(spark, table).collect())
+    assert jobs == 0
+    got = np.array([r["base_score"] for r in rows], dtype=np.float64)
+    assert got.view(np.int64).tolist() == scores.view(np.int64).tolist()
 
 
 # ------------------------------------------------ fl stored-field retrieval
