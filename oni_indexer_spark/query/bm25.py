@@ -29,7 +29,13 @@ Three regimes, chosen driver-side from Σ df (known for free):
   - local (Σ df ≤ ``LOCAL_KERNEL_MAX_POSTINGS``): the pruned scan is
     collected as Arrow (one JVM-only job, no Python worker), sorted by
     block_id and scored on the driver; the top-k (or facet count) is
-    reduced there too and handed back as an Arrow LocalRelation.
+    reduced there too and handed back as an Arrow LocalRelation. Block
+    prefilters (rarest-term blocks, the constant-score k lowest blocks)
+    filter the collected rows in pyarrow. A compound boolean query is
+    local when Σ df over the UNION of its clause terms fits the gate:
+    one collected scan of that union, every clause kernel on its tid
+    slice, and the MUST/SHOULD/NOT combine on the driver
+    (:func:`_combine_arrow`) — one job in all.
   - exchange(n): the kernel runs in ``mapInArrow`` tasks; multi-term
     kernels first hash-repartition the COMPRESSED block rows by
     block_id (the only shuffle) at a width derived from Σ df, then
@@ -497,6 +503,20 @@ def _make_decode_phrase_group_arrow(
     )
 
 
+def _make_decode_match_arrow(block_size: int, positions: bool = False, allowed=None):
+    """Constant-score matcher (the filter rewrite of a large prefix
+    expansion): every doc with a posting in the block-co-located rows,
+    score 1.0 — one row per doc, since a unit holds whole blocks."""
+
+    def score(u):
+        import numpy as np
+
+        docs = np.unique(u.doc_ids)
+        return docs, np.ones(docs.size)
+
+    return _scoring_kernel(block_size, score, positions, allowed=allowed)
+
+
 def _make_decode_map_arrow(block_size: int, positions: bool = False):
     """mapInArrow decoder: block rows → already-EXPLODED (tid, doc_id,
     tf, dl) rows — no pandas conversion, no JVM-side arrays_zip/explode.
@@ -628,6 +648,43 @@ def _term_postings(tables: IndexTables, terms: list[str]) -> DataFrame:
     return tables.postings.where(F.col("bucket").isin(buckets) & F.col("tid").isin(tids))
 
 
+def _fits_local(est_postings: int) -> bool:
+    """The local-regime gate (read at call time: tests zero it)."""
+    return est_postings <= LOCAL_KERNEL_MAX_POSTINGS
+
+
+def _collected(p: DataFrame, cfg: IndexConfig):
+    """The local regime's one JVM job: the pruned scan's block rows
+    ``(tid, block_id, block_min_dl[, n], blob)`` as a ``pa.Table``."""
+    pos_cols = ["n"] if cfg.positions else []
+    return p.select("tid", "block_id", "block_min_dl", *pos_cols, "blob").toArrow()
+
+
+def _tid_slice(rows, terms):
+    """The collected ``rows`` of ``terms`` only (a clause's share of a
+    fused compound query's one scan)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from oni_indexer_spark.hashing import xxhash64_str
+
+    tids = pa.array([xxhash64_str(t) for t in terms], type=pa.int64())
+    return rows.filter(pc.is_in(rows["tid"], value_set=tids))
+
+
+def _keep_blocks(p, blocks):
+    """The rows of ``p`` whose block_id is in ``blocks`` (a lossless
+    block prefilter): a broadcast semi-join for a scan, whose
+    ``blocks`` is a block_id DataFrame, or a pyarrow ``is_in`` for
+    collected rows, whose ``blocks`` is an array."""
+    if isinstance(p, DataFrame):
+        return p.join(F.broadcast(blocks), "block_id", "left_semi")
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    return p.filter(pc.is_in(p["block_id"], value_set=pa.array(blocks, type=pa.int64())))
+
+
 def _scorer_nparts(spark, est_postings: int | None) -> int:
     conf_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     if est_postings is None:
@@ -661,14 +718,16 @@ def _run_kernel(
     nparts: int | None = None,
 ):
     """The one place a query-time kernel meets Spark. ``sel`` is the
-    pruned block-row scan; ``make_kernel(allowed)`` builds the kernel
-    (Arrow batches → ``schema`` batches) around the doc-set filter in
-    the form its regime reads; ``colocate`` says the kernel needs each
-    doc-range block's rows for all terms contiguous (every kernel but
-    the single-term scorer).
+    pruned block-row scan, or its rows already collected as a
+    ``pa.Table`` (:func:`_collected`); ``make_kernel(allowed)`` builds
+    the kernel (Arrow batches → ``schema`` batches) around the doc-set
+    filter in the form its regime reads; ``colocate`` says the kernel
+    needs each doc-range block's rows for all terms contiguous (every
+    kernel but the single-term scorer).
 
-    - local — Σ df (``est_postings``) ≤ ``LOCAL_KERNEL_MAX_POSTINGS``
-      and no explicit width: ``toArrow()`` (one JVM-only job), a
+    - local — ``sel`` is a ``pa.Table``, or Σ df (``est_postings``) ≤
+      ``LOCAL_KERNEL_MAX_POSTINGS`` and no explicit width:
+      ``toArrow()`` (one JVM-only job) unless already collected, a
       block_id sort in pyarrow, the kernel on the driver. Returns its
       output as a ``pa.Table`` (reduce it on the driver too, or hand it
       to Spark with :func:`_as_df`).
@@ -679,10 +738,12 @@ def _run_kernel(
       width is EXPLICIT: AQE would coalesce a plain repartition(col) of
       a few MB of blobs to ~1 partition and serialize the decode
       (measured at 1M docs). Returns a DataFrame."""
-    if nparts is None and est_postings is not None and est_postings <= LOCAL_KERNEL_MAX_POSTINGS:
+    if not isinstance(sel, DataFrame) or (
+        nparts is None and est_postings is not None and _fits_local(est_postings)
+    ):
         import pyarrow as pa
 
-        rows = sel.toArrow()
+        rows = sel.toArrow() if isinstance(sel, DataFrame) else sel
         if colocate:
             rows = rows.sort_by("block_id")
         kernel = make_kernel(None if allowed is None else allowed.ids)
@@ -700,7 +761,7 @@ def _run_kernel(
 
 
 def _scores(
-    postings_subset: DataFrame,
+    postings_subset,
     tables: IndexTables,
     idf: dict[int, float],
     avgdl: float,
@@ -713,8 +774,9 @@ def _scores(
     allowed: _DocSet | None = None,
 ):
     """Exact (doc_id, score) for every doc present in the postings
-    subset — a ``pa.Table`` in the local regime, else a DataFrame (see
-    :func:`_run_kernel`). ``idf`` is keyed by tid (the postings key).
+    subset (a scan, or its collected rows) — a ``pa.Table`` in the local
+    regime, else a DataFrame (see :func:`_run_kernel`). ``idf`` is
+    keyed by tid (the postings key).
     ``k`` (when given) enables per-batch conservative candidate
     selection — it must be the query's final top-k. ``floor`` is the
     pruned path's pass-1 τ (docs provably below it round under the kth
@@ -742,7 +804,7 @@ def _scores(
         # block-aligned path below for decode parallelism)
         (idf_val,) = idf.values()
         scored = _run_kernel(
-            postings_subset.select("block_id", "block_min_dl", *pos_cols, "blob"),
+            postings_subset.select(["block_id", "block_min_dl", *pos_cols, "blob"]),
             lambda allowed: _make_decode_score_topk_arrow(
                 cfg.block_size, float(idf_val), float(avgdl), cfg.k1, cfg.b, k_sel,
                 positions=cfg.positions, allowed=allowed, floor=floor,
@@ -755,7 +817,7 @@ def _scores(
         # per-doc totals + AND/τ/top-k selection happen in numpy inside
         # the kernel (no decoded-row shuffle, no JVM agg)
         scored = _run_kernel(
-            postings_subset.select("tid", "block_id", "block_min_dl", *pos_cols, "blob"),
+            postings_subset.select(["tid", "block_id", "block_min_dl", *pos_cols, "blob"]),
             lambda allowed: _make_decode_score_group_arrow(
                 cfg.block_size,
                 {int(t): float(v) for t, v in idf.items()},
@@ -812,6 +874,44 @@ def _ranked_arrow(scored, k: int):
             pa.array(s[order], type=pa.float64()),
         ],
         schema=_arrow_schema("rank int, doc_id long, score double"),
+    )
+
+
+def _combine_arrow(must: list, should: list, nots: list):
+    """Driver twin of the boolean combine in :meth:`Searcher.search`
+    over local clause results (``(doc_id, score)`` tables, one row per
+    doc): MUST parts intersect on doc_id and add their scores, SHOULD
+    parts union and sum (added to the MUST total where present), NOT
+    parts remove their docs. At least one MUST or SHOULD part."""
+    import numpy as np
+    import pyarrow as pa
+
+    def cols(t):
+        return t.column("doc_id").to_numpy(), t.column("score").to_numpy()
+
+    sh_docs = sh = None
+    if should:
+        docs = np.concatenate([cols(t)[0] for t in should])
+        scores = np.concatenate([cols(t)[1] for t in should])
+        sh_docs, inv = np.unique(docs, return_inverse=True)
+        sh = np.bincount(inv, weights=scores, minlength=sh_docs.size)
+    if must:
+        docs, s = cols(must[0])
+        for t in must[1:]:
+            d2, s2 = cols(t)
+            docs, i, j = np.intersect1d(docs, d2, assume_unique=True, return_indices=True)
+            s = s[i] + s2[j]
+        if should and sh_docs.size:
+            pos = np.minimum(np.searchsorted(sh_docs, docs), sh_docs.size - 1)
+            s = s + np.where(sh_docs[pos] == docs, sh[pos], 0.0)
+    else:
+        docs, s = sh_docs, sh
+    for t in nots:
+        keep = ~np.isin(docs, t.column("doc_id").to_numpy())
+        docs, s = docs[keep], s[keep]
+    return pa.table(
+        [pa.array(docs, type=pa.int64()), pa.array(s, type=pa.float64())],
+        schema=_arrow_schema("doc_id long, score double"),
     )
 
 
@@ -989,41 +1089,68 @@ class Searcher:
                 self._df_cache[t] = found.get(t, 0)
         return {t: self._df_cache[t] for t in terms if self._df_cache[t] > 0}
 
-    def _rare_block_prefilter(
-        self, p: DataFrame, dfs: dict[str, int], n_docs: int
-    ) -> DataFrame:
+    def _rare_block_prefilter(self, p, dfs: dict[str, int], n_docs: int):
         """Lossless block prefilter for conjunctive queries (AND mode,
         phrases): blocks are global doc-ranges (block_id = doc_id //
         block_size), so every term of a matching doc lands in the SAME
         block — a block missing the rarest term cannot produce a match.
-        When the rarest term is selective, semi-join the pruned scan
-        against its block list (broadcast, ≤ min_df ids) BEFORE the
-        block_id shuffle, so hot-term blobs in rare-term-free blocks are
-        never shuffled or decoded. At north-star scale this turns a
-        rare∧hot conjunction from "decode the hot term's postings" into
-        "decode only the rare term's blocks".
+        When the rarest term is selective, keep only its blocks BEFORE
+        the decode: a scan is semi-joined against its block list
+        (broadcast, ≤ min_df ids) ahead of the block_id shuffle; collected
+        rows (local regime) are filtered in pyarrow. Hot-term blobs in
+        rare-term-free blocks are never shuffled or decoded. At
+        north-star scale this turns a rare∧hot conjunction from "decode
+        the hot term's postings" into "decode only the rare term's
+        blocks".
 
         Gated off when the rare term hits most blocks anyway (no blocks
         to skip — the uniform-corpus / all-stop-words case) or when the
         broadcast would exceed RARE_BLOCK_MAX_DF ids."""
         if len(dfs) < 2:
             return p
-        rare_blocks = self._rare_blocks(dfs, n_docs)
-        if rare_blocks is None:
-            return p
-        return p.join(F.broadcast(rare_blocks), "block_id", "left_semi")
+        rows = None if isinstance(p, DataFrame) else p
+        rare_blocks = self._rare_blocks(dfs, n_docs, rows)
+        return p if rare_blocks is None else _keep_blocks(p, rare_blocks)
 
-    def _rare_blocks(self, dfs: dict[str, int], n_docs: int):
-        """Block list (block_id DataFrame) of the rarest term in ``dfs``
-        when it is selective enough to prune with, else None — the
-        shared engine behind the conjunctive prefilter and the boolean
-        compositor's cross-clause MUST-block pushdown."""
+    def _rare_blocks(self, dfs: dict[str, int], n_docs: int, rows=None):
+        """Block list of the rarest term in ``dfs`` when it is selective
+        enough to prune with, else None — the shared engine behind the
+        conjunctive prefilter and the boolean compositor's cross-clause
+        MUST-block pushdown. A block_id DataFrame (a distinct over the
+        term's scan), or, given collected ``rows`` holding the term, a
+        sorted block_id array read from them."""
         min_term = min(dfs, key=lambda t: dfs[t])
         min_df = dfs[min_term]
         n_blocks_est = max(1, n_docs // self.tables.cfg.block_size)
         if min_df >= n_blocks_est // 2 or min_df > self.RARE_BLOCK_MAX_DF:
             return None
-        return _term_postings(self.tables, [min_term]).select("block_id").distinct()
+        if rows is None:
+            return _term_postings(self.tables, [min_term]).select("block_id").distinct()
+        import numpy as np
+
+        return np.unique(_tid_slice(rows, [min_term]).column("block_id").to_numpy())
+
+    def _clause_rows(
+        self, dfs: dict[str, int], conjunctive: bool, block_filter=None, rows=None
+    ):
+        """The block rows one term-set clause scores, block prefilters
+        applied: the rarest-term prefilter when ``conjunctive`` (AND,
+        phrase), then ``block_filter`` (cross-clause MUST blocks, a
+        rerank window). Given ``rows`` (the one collected scan of a
+        fused compound query) it is their tid slice; a local-sized
+        clause (Σ df ≤ ``LOCAL_KERNEL_MAX_POSTINGS``) collects its own
+        scan; either way the prefilters run in pyarrow. Otherwise — or
+        when ``block_filter`` is a DataFrame — it is the pruned scan and
+        the prefilters are broadcast semi-joins."""
+        if rows is not None:
+            p = _tid_slice(rows, dfs)
+        else:
+            p = _term_postings(self.tables, list(dfs))
+            if not isinstance(block_filter, DataFrame) and _fits_local(sum(dfs.values())):
+                p = _collected(p, self.tables.cfg)
+        if conjunctive:
+            p = self._rare_block_prefilter(p, dfs, self.stats()[0])
+        return p if block_filter is None else _keep_blocks(p, block_filter)
 
     def topk(
         self,
@@ -1096,12 +1223,9 @@ class Searcher:
             return empty
         tables = self.tables
         spark = tables.postings.sparkSession
-        n_docs, avgdl = self.stats()
+        _, avgdl = self.stats()
         idf = self._idf_by_tid(dfs, weights)
-        p = _term_postings(tables, list(dfs))
         est = sum(dfs.values())
-        if mode == "and":
-            p = self._rare_block_prefilter(p, dfs, n_docs)
         if prune == "auto":
             prune = est > self.prune_cost_threshold
         # excluding a doc means the (k+1)-th candidate can rise into the
@@ -1110,10 +1234,14 @@ class Searcher:
         k_eff = k + 1 if exclude_doc_id is not None else k
         floor = nparts = None
         if prune and mode == "or" and fq is None:
-            p, floor = _blockmax_prune(p, tables, idf, avgdl, k_eff)
+            p, floor = _blockmax_prune(
+                _term_postings(tables, list(dfs)), tables, idf, avgdl, k_eff
+            )
             # pruning is the large-query plan ('auto' prunes far above
             # the local gate), so a pruned query keeps the exchange
             nparts = _scorer_nparts(spark, est)
+        else:
+            p = self._clause_rows(dfs, conjunctive=mode == "and")
         scored = _scores(
             p, tables, idf, avgdl, mode, fq, k=k_eff, floor=floor,
             est_postings=est, nparts=nparts, allowed=allowed,
@@ -1134,32 +1262,24 @@ class Searcher:
         weights: dict[str, float] | None = None,
         fq: dict | None = None,
         allowed: _DocSet | None = None,
-        block_filter: DataFrame | None = None,
-    ) -> DataFrame:
+        block_filter=None,
+        rows=None,
+    ):
         """Unranked exact (doc_id, score) for one term-set clause of a
         boolean query — the k=None twin of ``_topk_from_dfs`` (no τ
         pruning, no per-batch candidate selection: clause totals combine
         with OTHER clauses downstream, so every matching doc's total
         must leave the kernel). Single-clause queries should use the
-        k-bounded ``_topk_from_dfs`` instead. Always a DataFrame: a
-        local result is handed back as a LocalRelation."""
-        tables = self.tables
-        n_docs, avgdl = self.stats()
-        idf = self._idf_by_tid(dfs, weights)
-        p = _term_postings(tables, list(dfs))
-        if mode == "and":
-            p = self._rare_block_prefilter(p, dfs, n_docs)
-        if block_filter is not None:
-            # cross-clause MUST-block pushdown: every result doc contains
-            # every MUST term, so every clause's useful output lives in
-            # the rarest MUST term's blocks — lossless for this clause
-            # because its scores only survive the downstream join/filter
-            # against the MUST set anyway
-            p = p.join(F.broadcast(block_filter), "block_id", "left_semi")
-        return _as_df(tables.postings.sparkSession, _scores(
-            p, tables, idf, avgdl, mode, fq, k=None,
-            est_postings=sum(dfs.values()), allowed=allowed,
-        ))
+        k-bounded ``_topk_from_dfs`` instead. ``block_filter`` and
+        ``rows``: see :meth:`_clause_rows`. Like :func:`_scores`, a
+        ``pa.Table`` in the local regime, else a DataFrame (callers that
+        compose it in Spark take it through :func:`_as_df`)."""
+        _, avgdl = self.stats()
+        return _scores(
+            self._clause_rows(dfs, mode == "and", block_filter, rows),
+            self.tables, self._idf_by_tid(dfs, weights), avgdl, mode, fq,
+            k=None, est_postings=sum(dfs.values()), allowed=allowed,
+        )
 
     def _expansion(
         self, kind: str, tok: str, edits: int, max_prefix_terms: int,
@@ -1205,9 +1325,19 @@ class Searcher:
         left-anti for MUST_NOT. Clause outputs are (doc_id, score)
         pairs bounded by each clause's match count — the combination
         shuffles at most Σ|clause matches| rows, never the corpus; a
-        selective filter ships into every pass as a broadcast doc set
-        (the fq pushdown), an unselective one is applied once as a
-        single doclen semi-join on the combined result."""
+        selective filter ships into every pass as a doc set (the fq
+        pushdown), an unselective one is applied once as a single
+        doclen semi-join on the combined result.
+
+        Two regimes. Local — Σ df over the union of the clause terms
+        (MUST, SHOULD, NOT, phrase tokens, expanded prefix/fuzzy terms)
+        fits ``LOCAL_KERNEL_MAX_POSTINGS`` and any filter is a doc set:
+        ONE collected scan of that union (the query's only Spark job),
+        each pass's kernel runs on the driver over its tid slice, the
+        MUST-block and rarest-term prefilters are pyarrow ``is_in``s on
+        block_id, and the combine is :func:`_combine_arrow`. Otherwise
+        each pass is its own pruned scan (semi-joined by broadcast block
+        lists) and the combine is the Spark plan of joins above."""
         self._check_external_staleness()
         from functools import reduce
 
@@ -1314,98 +1444,95 @@ class Searcher:
         # in-kernel (a doc set); otherwise apply ONE semi-join at the end
         clause_fq = fq if allowed is not None else None
 
+        # resolve every clause's terms before any scan: an absent MUST
+        # term or phrase token (or an empty MUST expansion) empties the
+        # result, and the union of all clause terms picks the regime
+        must_dfs = self.term_dfs(list(terms["must"]))
+        if len(must_dfs) < len(terms["must"]):
+            return _empty_result(tables)
+        live_phrases = []  # (occ, toks, slop, boost, dfs): every token present
+        for occ, toks, slop, boost in phrases:
+            dfs = self.term_dfs(sorted(set(toks)))
+            if len(dfs) == len(set(toks)):
+                live_phrases.append((occ, toks, slop, boost, dfs))
+            elif occ == "must":
+                return _empty_result(tables)
+        sh_w = dict(terms["should"])
+        exp_parts = []  # (occ, dfs, weights) of the MUST and NOT expansions
+        for occ, kind, _raw, tok, edits, boost in expansions:
+            dfs, ws = self._expansion(kind, tok, edits, max_prefix_terms,
+                                      max_fuzzy_terms)
+            if occ == "should":
+                for t, wt in ws.items():
+                    sh_w[t] = sh_w.get(t, 0.0) + wt * boost
+            elif dfs:
+                exp_parts.append((occ, dfs, {t: w * boost for t, w in ws.items()}))
+            elif occ == "must":
+                return _empty_result(tables)
+        sh_dfs = self.term_dfs(list(sh_w))
+        not_dfs = self.term_dfs(list(terms["not"]))
+        if not (must_dfs or sh_dfs or any(o == "must" for o, *_ in exp_parts)
+                or any(o != "not" for o, *_ in live_phrases)):
+            return _empty_result(tables)
+
+        # local regime: when Σ df over the union of every clause's terms
+        # fits the local gate, ONE collected scan feeds every clause
+        # kernel on the driver and the clauses combine there too (an
+        # unselective fq keeps its doclen semi-join, a Spark plan)
+        union = {**must_dfs, **sh_dfs, **not_dfs}
+        for *_, dfs in live_phrases:
+            union.update(dfs)
+        for _, dfs, _ in exp_parts:
+            union.update(dfs)
+        rows = None
+        if (fq is None or allowed is not None) and _fits_local(sum(union.values())):
+            rows = _collected(_term_postings(tables, list(union)), tables.cfg)
+
         # cross-clause MUST-block pushdown: every result doc contains
         # every MUST term and every token of every MUST phrase, so the
         # rarest such token's block list (blocks are global doc-ranges)
         # losslessly bounds EVERY pass — most valuable for the SHOULD
         # pass, whose hot terms would otherwise emit corpus-sized totals
         # that the MUST join then throws away.
-        required: dict[str, int] = {}
-        req_toks = list(terms["must"])
-        for occ, toks, _slop, _boost in phrases:
+        required = dict(must_dfs)
+        for occ, *_, dfs in live_phrases:
             if occ == "must":
-                req_toks.extend(toks)
-        if req_toks:
-            required = self.term_dfs(list(set(req_toks)))
+                required.update(dfs)
         must_blocks = (
-            self._rare_blocks(required, self.stats()[0]) if required else None
+            self._rare_blocks(required, self.stats()[0], rows) if required else None
         )
 
-        must_parts: list[DataFrame] = []
-        if terms["must"]:
-            w = terms["must"]
-            dfs = self.term_dfs(list(w))
-            if len(dfs) < len(w):
-                return _empty_result(tables)
-            must_parts.append(self._clause_scores(
-                dfs, mode="and", weights=w, fq=clause_fq, allowed=allowed,
-                block_filter=must_blocks))
-        for occ, toks, slop, boost in phrases:
-            if occ != "must":
-                continue
-            s = self._phrase_scores(toks, None, fq=clause_fq,
-                                    allowed=allowed, slop=slop, boost=boost,
-                                    block_filter=must_blocks)
-            if s is None:
-                return _empty_result(tables)
-            must_parts.append(_as_df(spark, s))
-        for occ, kind, _raw, tok, edits, boost in expansions:
-            if occ != "must":
-                continue
-            dfs, ws = self._expansion(kind, tok, edits, max_prefix_terms,
-                                      max_fuzzy_terms)
-            if not dfs:
-                return _empty_result(tables)
-            must_parts.append(self._clause_scores(
-                dfs, mode="or", weights={t: w * boost for t, w in ws.items()},
-                fq=clause_fq, allowed=allowed, block_filter=must_blocks))
+        parts: dict[str, list] = {"must": [], "should": [], "not": []}
+        if must_dfs:
+            parts["must"].append(self._clause_scores(
+                must_dfs, mode="and", weights=terms["must"], fq=clause_fq,
+                allowed=allowed, block_filter=must_blocks, rows=rows))
+        if sh_dfs:
+            parts["should"].append(self._clause_scores(
+                sh_dfs, mode="or", weights={t: sh_w[t] for t in sh_dfs},
+                fq=clause_fq, allowed=allowed, block_filter=must_blocks, rows=rows))
+        if not_dfs:
+            parts["not"].append(self._clause_scores(
+                not_dfs, mode="or", block_filter=must_blocks, rows=rows))
+        for occ, toks, slop, boost, _ in live_phrases:
+            pos = occ != "not"
+            parts[occ].append(self._phrase_scores(
+                toks, None, fq=clause_fq if pos else None,
+                allowed=allowed if pos else None, slop=slop, boost=boost,
+                block_filter=must_blocks if pos else None, rows=rows))
+        for occ, dfs, ws in exp_parts:
+            if occ == "must":
+                parts["must"].append(self._clause_scores(
+                    dfs, mode="or", weights=ws, fq=clause_fq, allowed=allowed,
+                    block_filter=must_blocks, rows=rows))
+            else:
+                parts["not"].append(self._clause_scores(dfs, mode="or", rows=rows))
+        if rows is not None:
+            return _ranked(spark, _combine_arrow(parts["must"], parts["should"], parts["not"]), k)
 
-        should_parts: list[DataFrame] = []
-        sh_w = dict(terms["should"])
-        for occ, kind, _raw, tok, edits, boost in expansions:
-            if occ != "should":
-                continue
-            _, ws = self._expansion(kind, tok, edits, max_prefix_terms,
-                                    max_fuzzy_terms)
-            for t, wt in ws.items():
-                sh_w[t] = sh_w.get(t, 0.0) + wt * boost
-        if sh_w:
-            dfs = self.term_dfs(list(sh_w))
-            if dfs:
-                should_parts.append(self._clause_scores(
-                    dfs, mode="or", weights={t: sh_w[t] for t in dfs},
-                    fq=clause_fq, allowed=allowed,
-                    block_filter=must_blocks))
-        for occ, toks, slop, boost in phrases:
-            if occ != "should":
-                continue
-            s = self._phrase_scores(toks, None, fq=clause_fq,
-                                    allowed=allowed, slop=slop, boost=boost,
-                                    block_filter=must_blocks)
-            if s is not None:
-                should_parts.append(_as_df(spark, s))
-
-        not_sets: list[DataFrame] = []
-        if terms["not"]:
-            dfs = self.term_dfs(list(terms["not"]))
-            if dfs:
-                not_sets.append(self._clause_scores(
-                    dfs, mode="or", block_filter=must_blocks).select("doc_id"))
-        for occ, toks, slop, _boost in phrases:
-            if occ != "not":
-                continue
-            s = self._phrase_scores(toks, None, slop=slop)
-            if s is not None:
-                not_sets.append(_as_df(spark, s).select("doc_id"))
-        for occ, kind, _raw, tok, edits, _boost in expansions:
-            if occ != "not":
-                continue
-            dfs, _ = self._expansion(kind, tok, edits, max_prefix_terms,
-                                     max_fuzzy_terms)
-            if dfs:
-                not_sets.append(self._clause_scores(dfs, mode="or")
-                                .select("doc_id"))
-
+        must_parts, should_parts = (
+            [_as_df(spark, d) for d in parts[o]] for o in ("must", "should")
+        )
         if must_parts:
             base = must_parts[0]
             for d in must_parts[1:]:
@@ -1424,15 +1551,13 @@ class Searcher:
                     .alias("score"),
                 )
         else:
-            if not should_parts:
-                return _empty_result(tables)
             base = (
                 reduce(DataFrame.unionByName, should_parts)
                 .groupBy("doc_id")
                 .agg(F.sum("score").alias("score"))
             )
-        for ns in not_sets:
-            base = base.join(ns, "doc_id", "left_anti")
+        for ns in parts["not"]:
+            base = base.join(_as_df(spark, ns).select("doc_id"), "doc_id", "left_anti")
         if fq is not None and allowed is None:
             base = base.join(
                 _fq_keep(tables.doclen, fq).select("doc_id"), "doc_id",
@@ -1515,10 +1640,10 @@ class Searcher:
             return self._topk_from_dfs(dict(expansion), k=k, fq=fq, prune=prune)
         if rewrite != "constant":
             raise ValueError(f"unknown rewrite: {rewrite!r}")
-        return self._constant_score_topk([t for t, _ in expansion], k=k, fq=fq)
+        return self._constant_score_topk(dict(expansion), k=k, fq=fq)
 
     def _constant_score_topk(
-        self, terms: list[str], k: int, fq: dict | None = None
+        self, dfs: dict[str, int], k: int, fq: dict | None = None
     ) -> DataFrame:
         """Constant-score union (Lucene's multi-term filter rewrite):
         every doc containing ≥1 expanded term scores 1.0; top-k is the k
@@ -1534,19 +1659,55 @@ class Searcher:
         measured 8.6 s for a 128-term hot expansion at 1M docs; with it
         the decode touches ≤ k·|terms| blobs at ANY corpus size. (An fq
         invalidates the ≥k-docs guarantee — filtered docs don't count —
-        so the bound is applied only when fq is None.)"""
+        so the bound is applied only when fq is None.)
+
+        The decode is a :func:`_run_kernel` kernel: a local-sized
+        expansion decodes on the driver, its k-lowest-blocks bound read
+        from the collected rows. A selective fq filters inside the
+        kernel (:meth:`_fq_docs`); an unselective one is a doclen
+        semi-join."""
+        import numpy as np
+
+        empty, allowed = self._fq_docs(fq)
+        if empty is not None:
+            return empty
         tables = self.tables
-        p = _term_postings(tables, terms)
+        cfg = tables.cfg
+        spark = tables.postings.sparkSession
+        p = self._clause_rows(dfs, conjunctive=False)
         if fq is None:
-            low_blocks = (
-                p.select("block_id").distinct().orderBy(F.asc("block_id")).limit(k)
-            )
-            p = p.join(F.broadcast(low_blocks), "block_id", "left_semi")
-        matched = _decoded(p, tables.cfg).select("doc_id").distinct()
-        if fq:
-            matched = matched.join(
+            if isinstance(p, DataFrame):
+                low_blocks = (
+                    p.select("block_id").distinct().orderBy(F.asc("block_id")).limit(k)
+                )
+            else:
+                low_blocks = np.unique(p.column("block_id").to_numpy())[:k]
+            p = _keep_blocks(p, low_blocks)
+        pos_cols = ["n"] if cfg.positions else []
+        matched = _run_kernel(
+            p.select(["block_id", "block_min_dl", *pos_cols, "blob"]),
+            lambda allowed: _make_decode_match_arrow(
+                cfg.block_size, cfg.positions, allowed=allowed
+            ),
+            "doc_id long, score double",
+            sum(dfs.values()), allowed,
+        )
+        if fq and allowed is None:
+            matched = _as_df(spark, matched).join(
                 _fq_keep(tables.doclen, fq).select("doc_id"), "doc_id", "left_semi"
             )
+        if not isinstance(matched, DataFrame):
+            import pyarrow as pa
+
+            docs = np.sort(matched.column("doc_id").to_numpy())[:k]
+            return _local_df(spark, pa.table(
+                [
+                    pa.array(np.arange(1, docs.size + 1), type=pa.int32()),
+                    pa.array(docs, type=pa.int64()),
+                    pa.array(np.ones(docs.size), type=pa.float64()),
+                ],
+                schema=_arrow_schema("rank int, doc_id long, score double"),
+            ))
         from pyspark.sql import Window as W
 
         w = W.orderBy(F.asc("doc_id"))
@@ -1659,6 +1820,9 @@ class Searcher:
         block-max τ pruning (the OR bound is valid but pass-1 would
         need phrase scoring of candidate blocks to set τ — the two
         intersections capture most of that win without the extra job).
+        A local-sized phrase (Σ df ≤ ``LOCAL_KERNEL_MAX_POSTINGS``)
+        collects its scan and runs the prefilter (a pyarrow filter), the
+        kernel and the top-k on the driver: one job.
 
         ``fq`` composes exactly as in the OR/AND path (Solr: fq
         restricts results, stats untouched): selective filters ship as
@@ -1704,7 +1868,8 @@ class Searcher:
         allowed: _DocSet | None = None,
         slop: int = 0,
         boost: float = 1.0,
-        block_filter: DataFrame | None = None,
+        block_filter=None,
+        rows=None,
     ):
         """Unranked exact phrase scores (doc_id, score) for an ANALYZED
         token sequence (len ≥ 2), or ``None`` when a query term is
@@ -1714,7 +1879,8 @@ class Searcher:
         must pass None: clause totals combine downstream, so every
         matching doc's total has to leave the kernel). ``fq`` composes
         as in ``_scores``: a doc set filters in-kernel, an unselective
-        filter becomes a doclen semi-join here. Like ``_scores``, a
+        filter becomes a doclen semi-join here. ``block_filter`` and
+        ``rows``: see :meth:`_clause_rows`. Like ``_scores``, a
         ``pa.Table`` in the local regime, else a DataFrame."""
         import math
 
@@ -1732,13 +1898,10 @@ class Searcher:
         }
         idf_sum = float(sum(idf[t] for t in qtoks)) * boost
         tid_offsets = [(xxhash64_str(t), j) for j, t in enumerate(qtoks)]
-        p = _term_postings(tables, distinct)
-        p = self._rare_block_prefilter(p, dfs, n_docs)
-        if block_filter is not None:
-            p = p.join(F.broadcast(block_filter), "block_id", "left_semi")
+        p = self._clause_rows(dfs, True, block_filter, rows)
         # Σ df of the phrase's distinct terms bounds the decoded volume
         scored = _run_kernel(
-            p.select("tid", "block_id", "block_min_dl", "n", "blob"),
+            p.select(["tid", "block_id", "block_min_dl", "n", "blob"]),
             lambda allowed: _make_decode_phrase_group_arrow(
                 cfg.block_size, tid_offsets, idf_sum, float(avgdl), cfg.k1, cfg.b,
                 k_sel,

@@ -189,6 +189,6 @@ def _full_scores(
     dfs = s.term_dfs(terms)
     if not dfs or (mode == "and" and len(dfs) < len(terms)):
         return None
-    return s._clause_scores(
+    return _as_df(tables.postings.sparkSession, s._clause_scores(
         dfs, mode=mode, fq=fq, allowed=allowed, block_filter=block_filter,
-    )
+    ))

@@ -1,11 +1,16 @@
 #!/usr/bin/env python
-"""Per-query cost split (guide §1): driver-side plan construction vs
-execution vs Spark job count, for the bench query set.
+"""Per-query cost split (guide §1): the query call (``plan``) vs its
+``collect()`` (``exec``) vs Spark job count, for the bench query set
+plus the three composed query kinds of perfbench's mix (a compound
+boolean ``search``, ``prefix_topk("s")`` and ``facet_query``).
 
 Prints rep-3 numbers (df/fq lookups memoized by then — the regime the
-bench's median-of-3 measures). Used in OPTIMIZATION_r06.md to establish
-that the remaining per-query cost is plan-build + ONE shuffle (two AQE
-jobs) and that zero-result queries run zero jobs.
+bench's median-of-3 measures). ``plan`` times the query method itself;
+in the local regime (Σ df ≤ ``query/bm25.py:LOCAL_KERNEL_MAX_POSTINGS``)
+that is where the scan is collected and scored, and ``exec`` (the
+``collect()`` of the returned LocalRelation) runs no job. Larger queries
+build a lazy plan in ``plan`` and run their kernels and shuffles in
+``exec``. Zero-result queries run zero jobs.
 
 Usage: python scripts/prof_query_jobs.py
 """
@@ -22,16 +27,20 @@ sys.path.insert(0, REPO)
 
 from oni_indexer_spark.corpus import from_driver_documents  # noqa: E402
 from oni_indexer_spark.index import IndexConfig, build_to_path, read_index  # noqa: E402
-from oni_indexer_spark.query import topk  # noqa: E402
+from oni_indexer_spark.query import facet_query, prefix_topk, search, topk  # noqa: E402
 from oni_indexer_spark.session import get_spark  # noqa: E402
 
 QS = [
-    ("q_hot_single", "the", 10, "or", None),
-    ("q_two_term", "hash join", 10, "or", None),
-    ("q_four_term", "spark batch stream dup", 10, "or", None),
-    ("q_k100", "the scan", 100, "or", None),
-    ("q_fq_lang", "hash", 10, "or", {"lang": "en"}),
-    ("q_zero_result", "zzz_not_in_corpus", 10, "or", None),
+    ("q_hot_single", lambda t: topk(t, "the", k=10)),
+    ("q_two_term", lambda t: topk(t, "hash join", k=10)),
+    ("q_four_term", lambda t: topk(t, "spark batch stream dup", k=10)),
+    ("q_k100", lambda t: topk(t, "the scan", k=100)),
+    ("q_fq_lang", lambda t: topk(t, "hash", k=10, fq={"lang": "en"})),
+    ("q_zero_result", lambda t: topk(t, "zzz_not_in_corpus", k=10)),
+    ("boolean_search", lambda t: search(t, "+hash -window merge lang:en", k=10)),
+    ("prefix_topk", lambda t: prefix_topk(t, "s", k=10)),
+    ("facet_query", lambda t: facet_query(
+        t, "hash join", {"merge": "merge", "scan_sort": "scan sort", "window": "window"})),
 ]
 
 
@@ -50,11 +59,11 @@ def main() -> None:
     topk(tables, "warmup scan", k=5).collect()
 
     tracker = sc.statusTracker()
-    for name, q, k, mode, fq in QS:
+    for name, query in QS:
         for rep in range(3):
             n0 = max(list(tracker.getJobIdsForGroup(None)) + [-1])
             t0 = time.time()
-            df = topk(tables, q, k=k, mode=mode, fq=fq)
+            df = query(tables)
             t1 = time.time()
             rows = df.collect()
             t2 = time.time()

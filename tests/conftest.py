@@ -45,6 +45,14 @@ def collected_scans(monkeypatch):
     return plans
 
 
+@pytest.fixture
+def exchange_regime(monkeypatch):
+    """Zero the local gate: every query takes the exchange regime."""
+    from oni_indexer_spark.query import bm25
+
+    monkeypatch.setattr(bm25, "LOCAL_KERNEL_MAX_POSTINGS", 0)
+
+
 def jobs_run(spark, fn):
     """``(fn(), number of Spark jobs it ran)``, counted through a fresh
     job group (the statusTracker keeps a group's finished jobs)."""

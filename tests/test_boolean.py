@@ -113,13 +113,26 @@ BOOLEAN_QUERIES = [
 ]
 
 
+def _assert_matches_oracle(tables, q):
+    got = _rows(search(tables, q, k=10))
+    exp = _oracle_rows(boolean_query_sql(q, k=10))
+    assert [(g[0], g[1]) for g in got] == [(e[0], e[1]) for e in exp], f"rank/doc: {q}"
+    for g, e in zip(got, exp):
+        assert abs(g[2] - e[2]) < 1e-6, q
+
+
 @pytest.mark.parametrize("q", BOOLEAN_QUERIES)
 def test_boolean_matches_oracle(btables, q):
-    got = _rows(search(btables, q, k=10))
-    exp = _oracle_rows(boolean_query_sql(q, k=10))
-    assert [(g[0], g[1]) for g in got] == [(e[0], e[1]) for e in exp], "rank/doc"
-    for g, e in zip(got, exp):
-        assert abs(g[2] - e[2]) < 1e-6
+    """Local regime (this index is small): one collected scan feeds the
+    clause kernels on the driver and the clauses combine there."""
+    _assert_matches_oracle(btables, q)
+
+
+@pytest.mark.parametrize("q", BOOLEAN_QUERIES)
+def test_boolean_matches_oracle_exchange(btables, q, exchange_regime):
+    """The same battery with the local gate zeroed: clause kernels in
+    Spark tasks and the Spark combine (joins, union-sum, anti-join)."""
+    _assert_matches_oracle(btables, q)
 
 
 def test_boolean_fast_path_equals_topk(btables):
@@ -166,11 +179,7 @@ BOOSTED_QUERIES = [
 
 @pytest.mark.parametrize("q", BOOSTED_QUERIES)
 def test_boost_matches_oracle(btables, q):
-    got = _rows(search(btables, q, k=10))
-    exp = _oracle_rows(boolean_query_sql(q, k=10))
-    assert [(g[0], g[1]) for g in got] == [(e[0], e[1]) for e in exp], "rank/doc"
-    for g, e in zip(got, exp):
-        assert abs(g[2] - e[2]) < 1e-6
+    _assert_matches_oracle(btables, q)
 
 
 def test_boost_scales_scores_linearly(btables):
@@ -198,7 +207,17 @@ def test_boolean_randomized_vs_oracle(btables):
     Hypothesis shrinking needed — failures print the query): every
     generated query must match the DuckDB oracle rank-for-rank. Covers
     clause-kind x occur x boost x slop x filter interactions the
-    hand-written battery can't enumerate."""
+    hand-written battery can't enumerate. Local regime."""
+    _randomized_vs_oracle(btables)
+
+
+def test_boolean_randomized_vs_oracle_exchange(btables, exchange_regime):
+    """The randomized battery with the local gate zeroed (Spark kernels
+    and the Spark combine)."""
+    _randomized_vs_oracle(btables)
+
+
+def _randomized_vs_oracle(btables):
     import random
 
     rng = random.Random(42)
@@ -238,26 +257,21 @@ def test_boolean_randomized_vs_oracle(btables):
         if any(c.kind == "phrase" and c.slop and len(c.text.split()) != 2
                for c in pq.clauses):
             continue
-        got = _rows(search(btables, q, k=10))
-        exp = _oracle_rows(boolean_query_sql(q, k=10))
-        assert [(g[0], g[1]) for g in got] == [(e[0], e[1]) for e in exp], q
-        for g, e in zip(got, exp):
-            assert abs(g[2] - e[2]) < 1e-6, q
+        _assert_matches_oracle(btables, q)
         checked += 1
     assert checked >= 25, f"only {checked} queries actually checked"
 
 
-def test_must_block_pushdown_fires_and_stays_exact(spark, docs, collected_scans):
-    """Force the cross-clause MUST-block pushdown (a MUST term in 2 of
-    500 docs → rarest-block gate fires) and pin (a) exactness vs the
-    oracle over the same modified corpus, (b) that the SHOULD pass's
-    postings scan is actually semi-joined by the rare blocks (plan)."""
-    import duckdb as _dd
+@pytest.fixture(scope="module")
+def zzrare_tables(docs):
+    """A rare term, ``zzrare``, appended to docs 3 and 450 (2 of 500, so
+    the rarest-block gate fires), indexed on disk (its postings read is
+    a pruned parquet scan)."""
+    import tempfile
 
     from pyspark.sql import functions as F
 
-    from oni_indexer_spark.index import IndexConfig, build_index
-    from oni_indexer_spark.query.bm25 import searcher_for
+    from oni_indexer_spark.index import build_to_path, read_index
 
     marked = docs.withColumn(
         "content",
@@ -265,27 +279,91 @@ def test_must_block_pushdown_fires_and_stays_exact(spark, docs, collected_scans)
                F.concat(F.col("content"), F.lit(" zzrare")))
         .otherwise(F.col("content")),
     )
-    t = build_index(marked, IndexConfig(block_size=64, n_buckets=8))
-    s = searcher_for(t)
-    assert s._rare_blocks(s.term_dfs(["zzrare", "merge"]), s.stats()[0]) is not None
+    path = tempfile.mkdtemp(prefix="zzrare_") + "/idx"
+    build_to_path(marked, path, IndexConfig(block_size=64, n_buckets=8), bucket_group_size=8)
+    return read_index(marked.sparkSession, path)
 
-    # each clause pass of this small query runs in the local regime: its
-    # scan is collected while the query is built, so the semi-joins show
-    # in the collected scans, not in the final plan
-    df = s.search("+zzrare merge the", k=10)
-    # the MUST pass and the SHOULD pass are both semi-joined by the
-    # rare blocks (block_id join keys appear per pass)
-    assert sum("BroadcastHashJoin [block_id" in p for p in collected_scans) >= 2
 
-    got = _rows(df)
-    con = _dd.connect()
+def _zzrare_oracle_rows(sql):
+    """The oracle over the same corpus as ``zzrare_tables``."""
+    con = duckdb.connect()
     con.execute(
         f"CREATE VIEW documents AS SELECT doc_id, "
         f"text || CASE WHEN doc_id IN (3, 450) THEN ' zzrare' ELSE '' END AS text, "
         f"lang, source, n_chars FROM '{SF_SMOKE}/documents.parquet'"
     )
-    exp = [(r[0], r[1], round(r[2], 6))
-           for r in con.execute(boolean_query_sql("+zzrare merge the", k=10)).fetchall()]
+    return [(r[0], r[1], round(r[2], 6)) for r in con.execute(sql).fetchall()]
+
+
+def _assert_same_rows(got, exp):
     assert [(g[0], g[1]) for g in got] == [(e[0], e[1]) for e in exp]
     for g, e in zip(got, exp):
         assert abs(g[2] - e[2]) < 1e-6
+
+
+def test_must_block_pushdown_fires_and_stays_exact(
+    spark, zzrare_tables, collected_scans, monkeypatch
+):
+    """Force the cross-clause MUST-block pushdown (a MUST term in 2 of
+    500 docs → rarest-block gate fires) and pin, in both regimes,
+    exactness vs the oracle over the same modified corpus and that the
+    clause passes are restricted to the rare term's blocks."""
+    from pyspark.sql import DataFrame
+
+    from oni_indexer_spark.hashing import xxhash64_str
+    from oni_indexer_spark.query import bm25
+
+    s = bm25.searcher_for(zzrare_tables)
+    assert s._rare_blocks(s.term_dfs(["zzrare", "merge"]), s.stats()[0]) is not None
+    q = "+zzrare merge the"
+    exp = _zzrare_oracle_rows(boolean_query_sql(q, k=10))
+
+    # local regime: ONE collected scan of the union of the clause terms
+    # feeds every clause kernel on the driver; the pushdown filters the
+    # collected rows, so every block row reaching a kernel lies in one
+    # of zzrare's blocks
+    kernel_blocks = []
+    run_kernel = bm25._run_kernel
+
+    def spy(sel, *a, **kw):
+        if not isinstance(sel, DataFrame):
+            kernel_blocks.append(set(sel.column("block_id").to_pylist()))
+        return run_kernel(sel, *a, **kw)
+
+    monkeypatch.setattr(bm25, "_run_kernel", spy)
+    got = _rows(s.search(q, k=10))
+    (scan,) = collected_scans
+    assert "PushedFilters: [In(tid" in scan and "Python" not in scan
+    for t in ("zzrare", "merge", "the"):
+        assert str(xxhash64_str(t)) in scan, t
+    assert len(kernel_blocks) == 2  # the MUST pass and the SHOULD pass
+    rare = {3 // 64, 450 // 64}
+    assert all(b and b <= rare for b in kernel_blocks), kernel_blocks
+    _assert_same_rows(got, exp)
+
+    # exchange regime: the MUST pass and the SHOULD pass are both
+    # semi-joined by the rare blocks (block_id join keys appear per pass)
+    monkeypatch.setattr(bm25, "LOCAL_KERNEL_MAX_POSTINGS", 0)
+    df = s.search(q, k=10)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("BroadcastHashJoin [block_id") >= 2
+    _assert_same_rows(_rows(df), exp)
+
+
+def test_small_and_topk_prefilters_locally(spark, zzrare_tables):
+    """A small AND query whose rarest term is selective filters its
+    collected rows to that term's blocks in pyarrow — no distinct or
+    broadcast job: a warm query runs 1 job and stays oracle-exact."""
+    from oni_indexer_spark.oracle import bm25_topk_sql
+    from oni_indexer_spark.query.bm25 import searcher_for
+    from tests.conftest import jobs_run
+
+    s = searcher_for(zzrare_tables)
+    s.topk("zzrare merge", k=10, mode="and").collect()  # warm stats and dfs
+    rows, jobs = jobs_run(
+        spark, lambda: s.topk("zzrare merge", k=10, mode="and").collect()
+    )
+    assert jobs == 1
+    got = sorted((r["rank"], r["doc_id"], round(r["score"], 6)) for r in rows)
+    assert got
+    _assert_same_rows(got, _zzrare_oracle_rows(bm25_topk_sql("zzrare merge", k=10, mode="and")))

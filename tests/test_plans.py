@@ -15,7 +15,12 @@ Query plan contract (query/bm25.py docstring):
       * local (Σ df ≤ LOCAL_KERNEL_MAX_POSTINGS): the pruned scan is
         collected as Arrow — its plan has no Python node and no
         Exchange — the kernel and the top-k run on the driver, and the
-        result is a LocalRelation; a small top-k runs exactly 1 job;
+        result is a LocalRelation; a small top-k runs exactly 1 job. A
+        compound boolean query is local when Σ df over the union of its
+        clause terms fits the gate: ONE collected scan of that union,
+        every clause kernel and the MUST/SHOULD/NOT combine on the
+        driver — also exactly 1 job. A small constant-score prefix
+        decodes on the driver too;
       * exchange(n) (forced in these tests by zeroing the gate): the
         kernel runs as MapInArrow; a single term never shuffles, a
         multi-term query has exactly ONE exchange — the hash
@@ -47,14 +52,6 @@ def _plan(df) -> str:
 
 def _is_local(df) -> bool:
     return df._jdf.queryExecution().analyzed().toString().startswith("LocalRelation")
-
-
-@pytest.fixture
-def exchange_regime(monkeypatch):
-    """Zero the local gate: every query takes the exchange regime."""
-    from oni_indexer_spark.query import bm25
-
-    monkeypatch.setattr(bm25, "LOCAL_KERNEL_MAX_POSTINGS", 0)
 
 
 def _assert_pruned_scan(plan: str) -> None:
@@ -105,6 +102,22 @@ def test_small_topk_runs_one_job(spark, disk_index):
     s = searcher_for(disk_index)
     s.topk("hash join", k=10).collect()  # warm stats, dfs and the lineage memo
     rows, jobs = jobs_run(spark, lambda: s.topk("hash join", k=10).collect())
+    assert rows
+    assert jobs == 1
+
+
+def test_small_boolean_search_runs_one_job(spark, docs, disk_index):
+    """A warm small compound boolean query (MUST + NOT + SHOULD + a
+    selective filter) is exactly one Spark job: the collected scan of
+    its clause terms' union. The clause kernels, the combine, the
+    ranking and the collect of the LocalRelation run none."""
+    from oni_indexer_spark.query.bm25 import searcher_for
+
+    lang = docs.select("lang").first()["lang"]
+    q = f"+hash -window merge lang:{lang}"
+    s = searcher_for(disk_index)
+    s.search(q, k=10).collect()  # warm stats, dfs, the fq doc set and the lineage memo
+    rows, jobs = jobs_run(spark, lambda: s.search(q, k=10).collect())
     assert rows
     assert jobs == 1
 
@@ -217,9 +230,11 @@ def test_single_term_clause_scores_no_aggregate(disk_index, collected_scans, mon
     aggregate over decoded rows — in both regimes."""
     from oni_indexer_spark.query import bm25
 
+    import pyarrow as pa
+
     s = bm25.searcher_for(disk_index)
     df = s._clause_scores(s.term_dfs(["hash"]))
-    assert _is_local(df)
+    assert isinstance(df, pa.Table)  # the local regime's driver result
     (scan,) = collected_scans
     assert "HashAggregate" not in scan and "Exchange" not in scan
     assert "Python" not in scan
@@ -231,15 +246,23 @@ def test_single_term_clause_scores_no_aggregate(disk_index, collected_scans, mon
     assert "Exchange" not in plan
 
 
-def test_constant_score_prefix_bounded_decode(disk_index):
+def test_constant_score_prefix_bounded_decode(disk_index, collected_scans, monkeypatch):
     """The constant-score rewrite must bound the decode to the k lowest
-    matching block_ids (broadcast semi-join on blocks) instead of
-    decoding the full union — the 8.6s-at-1M lesson. Shape: a broadcast
-    LeftSemi on block_id feeding the decode, no unbounded HashAggregate
-    before it."""
-    from oni_indexer_spark.query.bm25 import searcher_for
+    matching block_ids instead of decoding the full union — the
+    8.6s-at-1M lesson. Local regime: one collected pruned scan (no
+    Python node), the bound and the decode on the driver, a
+    LocalRelation result. Exchange regime: a broadcast LeftSemi on
+    block_id feeding the decode, no unbounded HashAggregate before it."""
+    from oni_indexer_spark.query import bm25
 
-    s = searcher_for(disk_index)
+    s = bm25.searcher_for(disk_index)
+    df = s.prefix_topk("s", k=10, rewrite="constant")
+    assert _is_local(df)
+    (scan,) = collected_scans
+    assert "PartitionFilters: [bucket" in scan and "PushedFilters: [In(tid" in scan
+    assert "Python" not in scan and "Exchange" not in scan
+
+    monkeypatch.setattr(bm25, "LOCAL_KERNEL_MAX_POSTINGS", 0)
     plan = _plan(s.prefix_topk("s", k=10, rewrite="constant"))
     assert "BroadcastHashJoin [block_id" in plan and "LeftSemi" in plan
     # both top-ks are docid-ordered TakeOrdereds (k blocks, then k docs) —
@@ -339,8 +362,17 @@ def test_local_and_exchange_regimes_agree(spark, docs, pos_index, monkeypatch):
         "facet": lambda t: facet_query(
             t, "hash join", {"m": "merge", "ss": "scan sort", "w": "window"}),
         "boolean": lambda t: search(t, f"+hash -window merge lang:{lang}", k=10),
+        "must_phrase_should_prefix": lambda t: search(t, '+"hash join" sc*', k=10),
+        "not_fuzzy": lambda t: search(t, "hash join -merge~1", k=10),
+        "kitchen_sink": lambda t: search(
+            t, f'+the +scan -sort "hash join" window~1 merge* lang:{lang}', k=10),
+        "not_removes_all": lambda t: search(t, "+hash -hash join", k=10),
         "prefix": lambda t: prefix_topk(t, "s", k=10, rewrite="scoring"),
+        "constant": lambda t: prefix_topk(t, "s", k=10, rewrite="constant"),
+        "constant_fq": lambda t: prefix_topk(
+            t, "s", k=10, rewrite="constant", fq={"lang": lang}),
     }
+    empty = {"not_removes_all"}
 
     def answers():
         # a fresh Searcher per regime: nothing memoized crosses over
@@ -351,7 +383,7 @@ def test_local_and_exchange_regimes_agree(spark, docs, pos_index, monkeypatch):
     monkeypatch.setattr(bm25, "LOCAL_KERNEL_MAX_POSTINGS", 0)
     exchange = answers()
     for name in cases:
-        assert local[name], name
+        assert bool(local[name]) == (name not in empty), name
         assert len(local[name]) == len(exchange[name]), name
         for a, b in zip(local[name], exchange[name]):
             assert a[:-1] == b[:-1], name
