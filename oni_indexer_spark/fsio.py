@@ -51,8 +51,11 @@ class Fs:
     def __init__(self, base_path: str, spark: SparkSession | None = None):
         s = _active_spark(spark)
         self._jvm = s._jvm
+        # the Path class handle, looked up once: every dotted JVM name
+        # lookup is a py4j round trip (five for this one)
+        self._path_cls = self._jvm.org.apache.hadoop.fs.Path
         conf = s._jsc.hadoopConfiguration()
-        uri = self._jvm.org.apache.hadoop.fs.Path(base_path).toUri()
+        uri = self._path_cls(base_path).toUri()
         key = f"{uri.getScheme()}|{uri.getAuthority()}"
         fs = _PRIVATE_FS.get(key)
         if fs is None:
@@ -71,7 +74,7 @@ class Fs:
         self._fs = fs
 
     def _p(self, path: str):
-        return self._jvm.org.apache.hadoop.fs.Path(path)
+        return self._path_cls(path)
 
     def exists(self, path: str) -> bool:
         return bool(self._fs.exists(self._p(path)))
@@ -115,9 +118,7 @@ class Fs:
             raise FileNotFoundError(path)
         stream = self._fs.open(p)
         try:
-            baos = self._jvm.java.io.ByteArrayOutputStream()
-            self._jvm.org.apache.hadoop.io.IOUtils.copyBytes(stream, baos, 65536, False)
-            return bytes(baos.toByteArray())
+            return bytes(stream.readAllBytes())
         finally:
             stream.close()
 

@@ -713,6 +713,7 @@ def build_to_path(
             "compress": True,
         }
     )
+    lin.bump_generation()  # last: open Searchers over this path re-read it
 
 
 def _tid_check(spark: SparkSession, lin, path: str, resume: bool) -> None:
@@ -1335,6 +1336,9 @@ def _apply_swap(path: str, fs) -> None:
         _checked_rename(fs, dfreq_next, f"{base}/dfreq")
     for leftover in ("postings.next", "doclen.next"):
         fs.delete(f"{base}/{leftover}")
+    # the live files changed: move the token before the manifest goes,
+    # so a swap replayed by another process is seen by every Searcher
+    L.bump_generation(fs, f"{base}/_lineage")
     fs.delete(mpath, recursive=False)
 
 

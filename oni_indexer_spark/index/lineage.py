@@ -25,6 +25,15 @@ from pyspark.sql import DataFrame, SparkSession
 from oni_indexer_spark.fsio import Fs
 
 
+def bump_generation(fs: Fs, lineage_dir: str) -> None:
+    """Write a fresh generation token under ``lineage_dir`` (see
+    :meth:`Lineage.bump_generation`)."""
+    import uuid
+
+    rec = {"nonce": uuid.uuid4().hex, "at_ns": time.time_ns()}
+    fs.write_bytes_atomic(f"{lineage_dir}/_generation", json.dumps(rec).encode())
+
+
 class Lineage:
     def __init__(self, spark: SparkSession, index_path: str):
         self.spark = spark
@@ -80,16 +89,14 @@ class Lineage:
             return json.loads(self.fs.read_bytes(f"{self.dir}/meta.json.tmp"))
 
     def bump_generation(self) -> None:
-        """Write a fresh, globally-unique generation token. Every mutator
-        (append / overwrite / compact) calls this LAST, so the Searcher's
-        out-of-process staleness check can compare file CONTENT instead
-        of the (name, mtime, size) listing — a same-size rewrite within
-        one mtime tick is invisible to the listing (r4 ADVICE) but never
-        to the token."""
-        import uuid
-
-        rec = {"nonce": uuid.uuid4().hex, "at_ns": time.time_ns()}
-        self.fs.write_bytes_atomic(f"{self.dir}/_generation", json.dumps(rec).encode())
+        """Write a fresh, globally-unique generation token. Every writer
+        (build_to_path / append / overwrite / delete / compact) calls
+        this LAST, and every applied staged swap (a replay included)
+        calls it too, so the Searcher's out-of-process staleness check
+        reads only this file's CONTENT — a same-size rewrite within one
+        mtime tick is invisible to a (name, mtime, size) listing (r4
+        ADVICE) but never to the token."""
+        bump_generation(self.fs, self.dir)
 
     def read_generation(self) -> bytes | None:
         """Current generation token content (None before any mutation)."""

@@ -26,16 +26,18 @@ Three regimes, chosen driver-side from Σ df (known for free):
 
   - empty: a term or filter matches nothing → an empty literal
     LocalRelation, 0 jobs.
-  - local (Σ df ≤ ``LOCAL_KERNEL_MAX_POSTINGS``): the pruned scan is
-    collected as Arrow (one JVM-only job, no Python worker), sorted by
-    block_id and scored on the driver; the top-k (or facet count) is
-    reduced there too and handed back as an Arrow LocalRelation. Block
-    prefilters (rarest-term blocks, the constant-score k lowest blocks)
-    filter the collected rows in pyarrow. A compound boolean query is
-    local when Σ df over the UNION of its clause terms fits the gate:
-    one collected scan of that union, every clause kernel on its tid
-    slice, and the MUST/SHOULD/NOT combine on the driver
-    (:func:`_combine_arrow`) — one job in all.
+  - local (Σ df ≤ ``LOCAL_KERNEL_MAX_POSTINGS``): the block rows come
+    from :meth:`Searcher._local_rows`, which collects the pruned scan of
+    the terms it has not seen as Arrow (one JVM-only job, no Python
+    worker) and memoizes them per term, so a warm repeat runs no Spark
+    job at all. The rows are sorted by block_id and scored on the
+    driver; the top-k (or facet count) is reduced there too and handed
+    back as an Arrow LocalRelation. Block prefilters (rarest-term
+    blocks, the constant-score k lowest blocks) filter the rows in
+    pyarrow. A compound boolean query is local when Σ df over the UNION
+    of its clause terms fits the gate: one set of rows for that union,
+    every clause kernel on its tid slice, and the MUST/SHOULD/NOT
+    combine on the driver (:func:`_combine_arrow`) — at most one job.
   - exchange(n): the kernel runs in ``mapInArrow`` tasks; multi-term
     kernels first hash-repartition the COMPRESSED block rows by
     block_id (the only shuffle) at a width derived from Σ df, then
@@ -44,6 +46,7 @@ Three regimes, chosen driver-side from Σ df (known for free):
 
 from __future__ import annotations
 
+from collections import OrderedDict
 from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame
@@ -636,6 +639,15 @@ SCORER_POSTINGS_PER_PARTITION = 65_536
 # exchange ran 2-4-wide (50k-doc 3-4-term queries regressed ~20%).
 LOCAL_KERNEL_MAX_POSTINGS = 65_536
 
+# Bound on the block rows one Searcher memoizes for the local regime
+# (Searcher._local_rows): Σ df of the memoized terms, least recently
+# used term evicted first. Sixteen local-sized queries' worth of
+# postings. The memo holds the compressed block rows: 3.3 bytes per
+# posting measured (perfbench query_small corpus, 5k docs, 13 terms,
+# 47k postings in 520 block rows), so the bound is ~3.5 MB per
+# Searcher.
+_LOCAL_ROWS_MAX_POSTINGS = 16 * LOCAL_KERNEL_MAX_POSTINGS
+
 
 def _term_postings(tables: IndexTables, terms: list[str]) -> DataFrame:
     """The postings scan for ``terms`` — pruned by bucket directory
@@ -653,13 +665,6 @@ def _fits_local(est_postings: int) -> bool:
     return est_postings <= LOCAL_KERNEL_MAX_POSTINGS
 
 
-def _collected(p: DataFrame, cfg: IndexConfig):
-    """The local regime's one JVM job: the pruned scan's block rows
-    ``(tid, block_id, block_min_dl[, n], blob)`` as a ``pa.Table``."""
-    pos_cols = ["n"] if cfg.positions else []
-    return p.select("tid", "block_id", "block_min_dl", *pos_cols, "blob").toArrow()
-
-
 def _tid_slice(rows, terms):
     """The collected ``rows`` of ``terms`` only (a clause's share of a
     fused compound query's one scan)."""
@@ -674,12 +679,17 @@ def _tid_slice(rows, terms):
 
 def _keep_blocks(p, blocks):
     """The rows of ``p`` whose block_id is in ``blocks`` (a lossless
-    block prefilter): a broadcast semi-join for a scan, whose
-    ``blocks`` is a block_id DataFrame, or a pyarrow ``is_in`` for
-    collected rows, whose ``blocks`` is an array."""
-    if isinstance(p, DataFrame):
-        return p.join(F.broadcast(blocks), "block_id", "left_semi")
+    block prefilter). ``blocks`` is a block_id DataFrame or a driver
+    array. A scan is broadcast semi-joined against it (an array becomes
+    an Arrow LocalRelation); collected rows take a pyarrow ``is_in``,
+    which needs an array."""
     import pyarrow as pa
+
+    if isinstance(p, DataFrame):
+        if not isinstance(blocks, DataFrame):
+            blocks = _local_df(p.sparkSession, pa.table(
+                {"block_id": pa.array(blocks, type=pa.int64())}))
+        return p.join(F.broadcast(blocks), "block_id", "left_semi")
     import pyarrow.compute as pc
 
     return p.filter(pc.is_in(p["block_id"], value_set=pa.array(blocks, type=pa.int64())))
@@ -718,37 +728,34 @@ def _run_kernel(
     nparts: int | None = None,
 ):
     """The one place a query-time kernel meets Spark. ``sel`` is the
-    pruned block-row scan, or its rows already collected as a
-    ``pa.Table`` (:func:`_collected`); ``make_kernel(allowed)`` builds
-    the kernel (Arrow batches → ``schema`` batches) around the doc-set
-    filter in the form its regime reads; ``colocate`` says the kernel
-    needs each doc-range block's rows for all terms contiguous (every
-    kernel but the single-term scorer).
+    pruned block-row scan, or the block rows of the local regime as a
+    ``pa.Table`` (:meth:`Searcher._local_rows`, after any block
+    prefilters); ``make_kernel(allowed)`` builds the kernel (Arrow
+    batches → ``schema`` batches) around the doc-set filter in the form
+    its regime reads; ``colocate`` says the kernel needs each doc-range
+    block's rows for all terms contiguous (every kernel but the
+    single-term scorer).
 
-    - local — ``sel`` is a ``pa.Table``, or Σ df (``est_postings``) ≤
-      ``LOCAL_KERNEL_MAX_POSTINGS`` and no explicit width:
-      ``toArrow()`` (one JVM-only job) unless already collected, a
-      block_id sort in pyarrow, the kernel on the driver. Returns its
-      output as a ``pa.Table`` (reduce it on the driver too, or hand it
-      to Spark with :func:`_as_df`).
-    - exchange(n) — otherwise: ``mapInArrow`` tasks, after (when
-      ``colocate``) a hash repartition by block_id at the Σ df-derived
-      width (:func:`_scorer_nparts`; an explicit ``nparts`` picks this
-      regime and the width, e.g. the pruner's ≤k-block pass). The
-      width is EXPLICIT: AQE would coalesce a plain repartition(col) of
-      a few MB of blobs to ~1 partition and serialize the decode
-      (measured at 1M docs). Returns a DataFrame."""
-    if not isinstance(sel, DataFrame) or (
-        nparts is None and est_postings is not None and _fits_local(est_postings)
-    ):
+    - local — ``sel`` is a ``pa.Table``: a block_id sort in pyarrow,
+      the kernel on the driver. Returns its output as a ``pa.Table``
+      (reduce it on the driver too, or hand it to Spark with
+      :func:`_as_df`).
+    - exchange(n) — ``sel`` is a DataFrame: ``mapInArrow`` tasks, after
+      (when ``colocate``) a hash repartition by block_id at the Σ
+      df-derived width (:func:`_scorer_nparts` of ``est_postings``; an
+      explicit ``nparts`` sets the width, e.g. the pruner's ≤k-block
+      pass). The width is EXPLICIT: AQE would coalesce a plain
+      repartition(col) of a few MB of blobs to ~1 partition and
+      serialize the decode (measured at 1M docs). Returns a
+      DataFrame."""
+    if not isinstance(sel, DataFrame):
         import pyarrow as pa
 
-        rows = sel.toArrow() if isinstance(sel, DataFrame) else sel
         if colocate:
-            rows = rows.sort_by("block_id")
+            sel = sel.sort_by("block_id")  # stable: tids keep their order
         kernel = make_kernel(None if allowed is None else allowed.ids)
         return pa.Table.from_batches(
-            list(kernel(rows.to_batches())), schema=_arrow_schema(schema)
+            list(kernel(sel.to_batches())), schema=_arrow_schema(schema)
         )
     spark = sel.sparkSession
     if allowed is not None:
@@ -774,16 +781,16 @@ def _scores(
     allowed: _DocSet | None = None,
 ):
     """Exact (doc_id, score) for every doc present in the postings
-    subset (a scan, or its collected rows) — a ``pa.Table`` in the local
-    regime, else a DataFrame (see :func:`_run_kernel`). ``idf`` is
+    subset (a scan, or the local regime's block rows) — a ``pa.Table``
+    for rows, else a DataFrame (see :func:`_run_kernel`). ``idf`` is
     keyed by tid (the postings key).
     ``k`` (when given) enables per-batch conservative candidate
     selection — it must be the query's final top-k. ``floor`` is the
     pruned path's pass-1 τ (docs provably below it round under the kth
     score and may be dropped). ``est_postings`` (Σ df, known
-    driver-side for free) picks the regime and routes large single-term
-    queries through the repartition path; ``nparts`` forces the
-    exchange regime at that width. ``allowed`` (Searcher._fq_docs)
+    driver-side for free) routes large single-term queries through the
+    repartition path and sizes the exchange; ``nparts`` sets the
+    exchange width. ``allowed`` (Searcher._fq_docs)
     pushes a selective fq INTO the kernel so candidate selection stays
     on; without it an fq disables per-batch selection (every matching
     doc's total leaves the kernel) and is applied by a doclen semi-join
@@ -937,6 +944,15 @@ def _ranked(spark, scored, k: int) -> DataFrame:
     )
 
 
+class CacheInfo(NamedTuple):
+    """:meth:`Searcher.cache_info` — the block-row memo's counters."""
+
+    hits: int
+    misses: int
+    evictions: int
+    postings: int  # Σ df of the memoized terms
+
+
 class Searcher:
     """Query handle over an index: caches the 1-row stats table and the
     term→df lookups so a query costs 1 Spark job on the fast path (dfreq
@@ -949,20 +965,28 @@ class Searcher:
     Σ df(term) exceeds this (default 3M — at the 10^12-doc north-star
     scale every stop-word-bearing query clears it immediately).
 
-    STALENESS: the cached stats/df describe the tables at construction.
-    In-process mutators (append_to_index / overwrite_docs) call the
-    module-level :func:`invalidate_searchers` hook; for OUT-OF-PROCESS
-    writers (another driver appending to the same path — invisible to
-    this registry) every :meth:`topk` first compares the index's
-    ``_lineage`` directory listing (name/mtime/size per record — every
-    mutator commits a new lineage record) against the listing memoized
-    with the caches, and self-invalidates on any change (r3 VERDICT #5).
-    One FileSystem.listStatus per query — driver-side, ~ms.
+    STALENESS: everything memoized — corpus stats, term dfs, fq doc
+    sets, prefix/fuzzy expansions and the local regime's block rows
+    (:meth:`_local_rows`) — describes the tables as of the last
+    freshness check, and :meth:`invalidate` drops all of it. In-process
+    mutators (append / overwrite / delete / compact) call the
+    module-level :func:`invalidate_searchers` hook. For OUT-OF-PROCESS
+    writers (another driver writing the same path — invisible to this
+    registry) every query method first reads the index's generation
+    token (``_lineage/_generation``, rewritten with a fresh nonce by
+    every writer, ``build_to_path`` included, as its last step, and by
+    every applied staged swap) through one kept :class:`Lineage` handle,
+    compares its CONTENT with the token memoized with the caches, and on
+    any change invalidates and re-opens the tables. That is one small file read,
+    ≤ 6 py4j round trips. An index without a token (written before
+    tokens existed) falls back to comparing its ``_lineage`` directory
+    listing (name/mtime/size per record).
 
     WHEN A QUERY RUNS: a local-regime query (Σ df ≤
     ``LOCAL_KERNEL_MAX_POSTINGS`` — see the module docstring) does its
-    work when :meth:`topk` (or any query method) is CALLED: the scan is
-    collected and scored then, and the returned DataFrame is a
+    work when :meth:`topk` (or any query method) is CALLED: its block
+    rows are collected (only the terms not memoized yet — a warm repeat
+    runs 0 Spark jobs) and scored then, and the returned DataFrame is a
     LocalRelation whose ``collect()`` runs no job. Exchange-regime
     queries stay lazy until ``collect()``. Either way a result
     describes the index as of the call.
@@ -986,7 +1010,14 @@ class Searcher:
         self._stats: tuple[int, float] | None = None
         self._df_cache: dict[str, int] = {}
         self._fq_cache: dict[tuple, tuple[int, _DocSet | None]] = {}
-        self._lineage_sig: tuple | None = None
+        self._expansions: dict[tuple, list] = {}
+        # local-regime block rows per tid → (rows, df), least recently
+        # used first; see _local_rows
+        self._rows: OrderedDict[int, tuple] = OrderedDict()
+        self._rows_postings = 0
+        self._rows_hits = self._rows_misses = self._rows_evictions = 0
+        self._lineage = None  # one handle, made on the first check
+        self._generation: bytes | tuple | None = None  # token or listing
 
     def _fq_docs(self, fq: dict | None) -> tuple[DataFrame | None, _DocSet | None]:
         """``(empty, allowed)`` for an optional fq. ``empty`` is the empty
@@ -1014,31 +1045,27 @@ class Searcher:
         cnt, docs = hit
         return (_empty_result(self.tables) if cnt == 0 else None), docs
 
-    def _lineage_signature(self) -> tuple | None:
-        if self.tables.path is None:
-            return None
-        from oni_indexer_spark.index.lineage import Lineage
+    def _read_generation(self):
+        """The index's generation token, or for an index without one its
+        ``_lineage`` listing."""
+        if self._lineage is None:
+            from oni_indexer_spark.index.lineage import Lineage
 
-        lin = Lineage(self.tables.stats.sparkSession, self.tables.path)
-        # generation token CONTENT (unique per mutation — r4 ADVICE: a
-        # same-size record rewrite inside one mtime tick is invisible to
-        # the listing alone) + the listing (covers legacy indexes written
-        # before the generation file existed)
-        return (
-            lin.read_generation(),
-            tuple(sorted(lin.fs.list_status(lin.dir))),
-        )
+            self._lineage = Lineage(self.tables.stats.sparkSession, self.tables.path)
+        lin = self._lineage
+        token = lin.read_generation()
+        return token if token is not None else tuple(sorted(lin.fs.list_status(lin.dir)))
 
     def _check_external_staleness(self) -> None:
         if self.tables.path is None:
             return
-        sig = self._lineage_signature()
-        if self._lineage_sig is None:
-            self._lineage_sig = sig
-        elif sig != self._lineage_sig:
-            # drop memoized stats/df AND re-open the tables: the old
-            # DataFrames pin the file listing captured at read time, so
-            # an out-of-process append would otherwise serve stale
+        gen = self._read_generation()
+        if self._generation is None:
+            self._generation = gen
+        elif gen != self._generation:
+            # drop every memo AND re-open the tables: the old DataFrames
+            # pin the file listing captured at read time, so an
+            # out-of-process write would otherwise serve stale
             # postings/stats even after the cache flush
             from oni_indexer_spark.index.build import read_index
 
@@ -1046,21 +1073,79 @@ class Searcher:
             self.tables = read_index(
                 self.tables.stats.sparkSession, self.tables.path
             )
-            self._lineage_sig = sig
+            self._generation = gen
 
     def invalidate(self) -> None:
-        """Drop memoized corpus stats / term dfs AND refresh Spark's
-        cached file listing for the backing path (a parquet DataFrame
-        pins the file index captured at read time — without the refresh,
-        re-collected stats/df would still read the pre-append files, and
-        actions after an overwrite's directory swap would fail on deleted
+        """Drop every memo (corpus stats, term dfs, fq doc sets,
+        expansions, block rows) AND refresh Spark's cached file listing
+        for the backing path (a parquet DataFrame pins the file index
+        captured at read time — without the refresh, re-collected
+        stats/df would still read the pre-append files, and actions
+        after an overwrite's directory swap would fail on deleted
         files). The refresh needs tables.path (set by read_index); for
         ad-hoc IndexTables objects, open a fresh one via read_index."""
         self._stats = None
         self._df_cache.clear()
         self._fq_cache.clear()
+        self._expansions.clear()
+        self._rows.clear()
+        self._rows_postings = 0
         if self.tables.path is not None:
             self.tables.stats.sparkSession.catalog.refreshByPath(self.tables.path)
+
+    def cache_info(self) -> CacheInfo:
+        """Counters of the block-row memo (:meth:`_local_rows`), in the
+        style of ``functools.lru_cache``: per-term hits and misses and
+        evictions since the Searcher was made, and the Σ df of the
+        terms memoized now (≤ ``_LOCAL_ROWS_MAX_POSTINGS``)."""
+        return CacheInfo(
+            self._rows_hits, self._rows_misses, self._rows_evictions,
+            self._rows_postings,
+        )
+
+    def _local_rows(self, dfs: dict[str, int]):
+        """The local regime's block rows ``(tid, block_id, block_min_dl[,
+        n], blob)`` of the terms in ``dfs`` (term → df) as one
+        ``pa.Table`` — the only way a local query gets its rows. Rows
+        are memoized per term: the terms not memoized yet are collected
+        in ONE pruned scan (the query's one JVM job, none when every
+        term is memoized) and split by tid. The table is assembled from
+        the memo in one canonical order (tid, then block_id) on every
+        call, so a repeat scores bit-identically to the first call. The
+        memo keeps Σ df ≤ ``_LOCAL_ROWS_MAX_POSTINGS``, evicting the
+        least recently used term first."""
+        import numpy as np
+        import pyarrow as pa
+
+        from oni_indexer_spark.hashing import xxhash64_str
+
+        by_tid = {xxhash64_str(t): t for t in dfs}
+        missing = {tid: t for tid, t in by_tid.items() if tid not in self._rows}
+        self._rows_misses += len(missing)
+        self._rows_hits += len(by_tid) - len(missing)
+        if missing:
+            pos_cols = ["n"] if self.tables.cfg.positions else []
+            got = (
+                _term_postings(self.tables, list(missing.values()))
+                .select("tid", "block_id", "block_min_dl", *pos_cols, "blob")
+                .toArrow()
+                .sort_by([("tid", "ascending"), ("block_id", "ascending")])
+            )
+            tids = got["tid"].to_numpy()
+            for tid, t in missing.items():
+                lo = np.searchsorted(tids, tid, side="left")
+                hi = np.searchsorted(tids, tid, side="right")
+                # a copy per term, so evicting it frees its buffers
+                self._rows[tid] = (got.take(np.arange(lo, hi)), dfs[t])
+                self._rows_postings += dfs[t]
+        for tid in by_tid:
+            self._rows.move_to_end(tid)
+        out = pa.concat_tables([self._rows[tid][0] for tid in sorted(by_tid)])
+        while self._rows_postings > _LOCAL_ROWS_MAX_POSTINGS:
+            _, (_, df) = self._rows.popitem(last=False)
+            self._rows_postings -= df
+            self._rows_evictions += 1
+        return out
 
     def stats(self) -> tuple[int, float]:
         # the stats table may hold one row per appended segment; combine
@@ -1130,24 +1215,30 @@ class Searcher:
 
         return np.unique(_tid_slice(rows, [min_term]).column("block_id").to_numpy())
 
+    def _block_rows(self, dfs: dict[str, int]):
+        """The block rows of the terms in ``dfs`` (term → df) in the
+        regime Σ df picks: :meth:`_local_rows` when it fits
+        ``LOCAL_KERNEL_MAX_POSTINGS``, else the pruned scan."""
+        if _fits_local(sum(dfs.values())):
+            return self._local_rows(dfs)
+        return _term_postings(self.tables, list(dfs))
+
     def _clause_rows(
         self, dfs: dict[str, int], conjunctive: bool, block_filter=None, rows=None
     ):
         """The block rows one term-set clause scores, block prefilters
         applied: the rarest-term prefilter when ``conjunctive`` (AND,
         phrase), then ``block_filter`` (cross-clause MUST blocks, a
-        rerank window). Given ``rows`` (the one collected scan of a
-        fused compound query) it is their tid slice; a local-sized
-        clause (Σ df ≤ ``LOCAL_KERNEL_MAX_POSTINGS``) collects its own
-        scan; either way the prefilters run in pyarrow. Otherwise — or
-        when ``block_filter`` is a DataFrame — it is the pruned scan and
-        the prefilters are broadcast semi-joins."""
-        if rows is not None:
-            p = _tid_slice(rows, dfs)
-        else:
-            p = _term_postings(self.tables, list(dfs))
-            if not isinstance(block_filter, DataFrame) and _fits_local(sum(dfs.values())):
-                p = _collected(p, self.tables.cfg)
+        rerank window). Given ``rows`` (the block rows of a fused
+        compound query) it is their tid slice; a local-sized clause (Σ
+        df ≤ ``LOCAL_KERNEL_MAX_POSTINGS``) takes its own
+        :meth:`_local_rows`; either way the prefilters run in pyarrow (a
+        DataFrame ``block_filter`` is collected to an array first).
+        Otherwise it is the pruned scan and the prefilters are broadcast
+        semi-joins."""
+        p = self._block_rows(dfs) if rows is None else _tid_slice(rows, dfs)
+        if isinstance(block_filter, DataFrame) and not isinstance(p, DataFrame):
+            block_filter = block_filter.toArrow().column("block_id").to_numpy()
         if conjunctive:
             p = self._rare_block_prefilter(p, dfs, self.stats()[0])
         return p if block_filter is None else _keep_blocks(p, block_filter)
@@ -1332,8 +1423,8 @@ class Searcher:
         Two regimes. Local — Σ df over the union of the clause terms
         (MUST, SHOULD, NOT, phrase tokens, expanded prefix/fuzzy terms)
         fits ``LOCAL_KERNEL_MAX_POSTINGS`` and any filter is a doc set:
-        ONE collected scan of that union (the query's only Spark job),
-        each pass's kernel runs on the driver over its tid slice, the
+        ONE set of block rows for that union (:meth:`_local_rows`: the
+        query's only Spark job, none when warm), each pass's kernel runs on the driver over its tid slice, the
         MUST-block and rarest-term prefilters are pyarrow ``is_in``s on
         block_id, and the combine is :func:`_combine_arrow`. Otherwise
         each pass is its own pruned scan (semi-joined by broadcast block
@@ -1476,7 +1567,7 @@ class Searcher:
             return _empty_result(tables)
 
         # local regime: when Σ df over the union of every clause's terms
-        # fits the local gate, ONE collected scan feeds every clause
+        # fits the local gate, ONE set of block rows feeds every clause
         # kernel on the driver and the clauses combine there too (an
         # unselective fq keeps its doclen semi-join, a Spark plan)
         union = {**must_dfs, **sh_dfs, **not_dfs}
@@ -1486,7 +1577,7 @@ class Searcher:
             union.update(dfs)
         rows = None
         if (fq is None or allowed is not None) and _fits_local(sum(union.values())):
-            rows = _collected(_term_postings(tables, list(union)), tables.cfg)
+            rows = self._local_rows(union)
 
         # cross-clause MUST-block pushdown: every result doc contains
         # every MUST term and every token of every MUST phrase, so the
@@ -1581,19 +1672,32 @@ class Searcher:
         parquet reader; dfreq files are written sorted by term within
         each bucket (index/build.py) so rowgroup min/max stats prune
         non-matching rowgroups. Output is TakeOrdered-bounded at
-        ``max_terms`` rows — nothing unbounded reaches the driver."""
-        rows = (
-            self.tables.dfreq.where(F.col("term").startswith(prefix))
-            .groupBy("term")
-            .agg(F.sum("df").alias("df"))  # sum over appended segments
-            .orderBy(F.col("df").desc(), F.col("term").asc())
-            .limit(max_terms)
-            .collect()
-        )
-        out = [(r["term"], int(r["df"])) for r in rows]
-        for t, d in out:  # warm the df memo for any follow-up query
-            self._df_cache.setdefault(t, d)
-        return out
+        ``max_terms`` rows — nothing unbounded reaches the driver.
+        Memoized per Searcher by its arguments (:meth:`_expanded`)."""
+
+        def expand():
+            return [
+                (r["term"], int(r["df"]))
+                for r in self.tables.dfreq.where(F.col("term").startswith(prefix))
+                .groupBy("term")
+                .agg(F.sum("df").alias("df"))  # sum over appended segments
+                .orderBy(F.col("df").desc(), F.col("term").asc())
+                .limit(max_terms)
+                .collect()
+            ]
+
+        return self._expanded(("prefix", prefix, max_terms), expand)
+
+    def _expanded(self, key: tuple, expand) -> list:
+        """``expand()``'s term list, memoized under ``key`` until
+        :meth:`invalidate`; its ``(term, df, ...)`` entries also warm the
+        df memo for any follow-up query."""
+        out = self._expansions.get(key)
+        if out is None:
+            out = self._expansions[key] = expand()
+            for t, d, *_ in out:
+                self._df_cache.setdefault(t, d)
+        return list(out)
 
     # Lucene's CONSTANT_SCORE_BLENDED_REWRITE threshold: expansions of
     # ≤ 16 terms score a real BooleanQuery; larger ones build a filter
@@ -1663,7 +1767,7 @@ class Searcher:
 
         The decode is a :func:`_run_kernel` kernel: a local-sized
         expansion decodes on the driver, its k-lowest-blocks bound read
-        from the collected rows. A selective fq filters inside the
+        from its block rows (:meth:`_local_rows`). A selective fq filters inside the
         kernel (:meth:`_fq_docs`); an unselective one is a doclen
         semi-join."""
         import numpy as np
@@ -1742,27 +1846,27 @@ class Searcher:
         shared prefix (StartsWith → sorted-rowgroup pruning) and the
         ±max_edits length band; levenshtein itself is a JVM builtin
         inside whole-stage codegen, evaluated only on the surviving
-        sliver of the vocabulary."""
+        sliver of the vocabulary. Memoized per Searcher by its arguments
+        (:meth:`_expanded`)."""
         pre = term[:prefix_len]
         n = len(term)
-        cand = self.tables.dfreq.where(
-            F.col("term").startswith(pre)
-            & F.length("term").between(n - max_edits, n + max_edits)
-            & (F.levenshtein(F.col("term"), F.lit(term)) <= max_edits)
-        )
-        rows = (
-            cand.groupBy("term")
-            .agg(F.sum("df").alias("df"))
-            .orderBy(F.col("df").desc(), F.col("term").asc())
-            .limit(max_terms)
-            .collect()
-        )
-        out = [
-            (r["term"], int(r["df"]), _levenshtein_py(r["term"], term)) for r in rows
-        ]
-        for t, d, _ in out:
-            self._df_cache.setdefault(t, d)
-        return out
+
+        def expand():
+            cand = self.tables.dfreq.where(
+                F.col("term").startswith(pre)
+                & F.length("term").between(n - max_edits, n + max_edits)
+                & (F.levenshtein(F.col("term"), F.lit(term)) <= max_edits)
+            )
+            return [
+                (r["term"], int(r["df"]), _levenshtein_py(r["term"], term))
+                for r in cand.groupBy("term")
+                .agg(F.sum("df").alias("df"))
+                .orderBy(F.col("df").desc(), F.col("term").asc())
+                .limit(max_terms)
+                .collect()
+            ]
+
+        return self._expanded(("fuzzy", term, max_edits, prefix_len, max_terms), expand)
 
     def fuzzy_topk(
         self,
@@ -1821,8 +1925,9 @@ class Searcher:
         need phrase scoring of candidate blocks to set τ — the two
         intersections capture most of that win without the extra job).
         A local-sized phrase (Σ df ≤ ``LOCAL_KERNEL_MAX_POSTINGS``)
-        collects its scan and runs the prefilter (a pyarrow filter), the
-        kernel and the top-k on the driver: one job.
+        takes its block rows from :meth:`Searcher._local_rows` and runs
+        the prefilter (a pyarrow filter), the kernel and the top-k on
+        the driver: one job, none when its rows are memoized.
 
         ``fq`` composes exactly as in the OR/AND path (Solr: fq
         restricts results, stats untouched): selective filters ship as

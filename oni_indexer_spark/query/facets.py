@@ -308,8 +308,9 @@ def facet_query(
 
     Scale shape (fused single-pass, r5 VERDICT #4): counts need only
     per-doc term-PRESENCE, never scores — so the union of all involved
-    terms' postings is decoded ONCE (bucket/tid-pruned scan → the bm25
-    kernel regimes, ``bm25._run_kernel``) and a numpy presence-mask
+    terms' postings is decoded ONCE (``Searcher._block_rows``: the local
+    regime's memoized block rows or the bucket/tid-pruned scan → the
+    bm25 kernel regimes, ``bm25._run_kernel``) and a numpy presence-mask
     pass counts every bucket inside the kernel. In the local regime the
     partial counts are summed and zero-filled on the driver; in the
     exchange regime each partition emits B partial counts, one tiny
@@ -325,7 +326,6 @@ def facet_query(
         _empty_literal,
         _local_df,
         _run_kernel,
-        _term_postings,
         searcher_for,
     )
 
@@ -364,11 +364,10 @@ def facet_query(
     if not buckets:
         return counts_of({})
     terms = sorted(scan_terms)
+    scan_dfs = s.term_dfs(terms)
     pos_cols = ["n"] if cfg.positions else []
     partials = _run_kernel(
-        _term_postings(tables, terms).select(
-            "tid", "block_id", "block_min_dl", *pos_cols, "blob"
-        ),
+        s._block_rows(scan_dfs).select(["tid", "block_id", "block_min_dl", *pos_cols, "blob"]),
         lambda _allowed: _make_facet_count_arrow(
             cfg.block_size,
             [xxhash64_str(t) for t in main_present],
@@ -377,7 +376,7 @@ def facet_query(
             positions=cfg.positions,
         ),
         "name string, count long",
-        sum(s.term_dfs(terms).values()),
+        sum(scan_dfs.values()),
     )
     if not isinstance(partials, DataFrame):
         tot: dict[str, int] = {}

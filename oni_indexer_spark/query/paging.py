@@ -158,7 +158,8 @@ def _full_scores(
     ``allowed`` / ``block_filter`` (only meaningful with ``fq=None``)
     push a caller-known bounded doc set into the pass — the rerank
     window pushdown: the scorer decodes only the window's blocks
-    (``block_filter`` semi-joins the scan) and emits only window docs
+    (``block_filter``, a block_id array, filters the block rows or
+    semi-joins the scan) and emits only window docs
     (``allowed``, a ``bm25._DocSet``, filters inside the kernel)."""
     from oni_indexer_spark.analyzer import analyzer_tokenize_py
 

@@ -109,19 +109,17 @@ def rerank_topk(
     if not base_rows:
         return _empty_result(tables)
     spark = tables.doclen.sparkSession
-    # Arrow LocalRelations (no job to build; base_score doubles stay
-    # bit-exact): the window, and its block list for the broadcast
-    # semi-join that prunes the rerank scan
+    # an Arrow LocalRelation (no job to build; base_score doubles stay
+    # bit-exact) holds the window; its block list prunes the rerank
+    # pass's rows (bm25._keep_blocks)
     base = _local_df(spark, pa.table({
         "doc_id": pa.array([r["doc_id"] for r in base_rows], type=pa.int64()),
         "base_score": pa.array([r["base_score"] for r in base_rows], type=pa.float64()),
     }))
     ids = np.sort(np.array([r["doc_id"] for r in base_rows], dtype=np.int64))
-    blocks = np.unique(ids // tables.cfg.block_size)
-    block_filter = _local_df(spark, pa.table({"block_id": pa.array(blocks, type=pa.int64())}))
     rr = _full_scores(
         s, rerank_query, rerank_mode, None, 0,
-        allowed=_DocSet(ids), block_filter=block_filter,
+        allowed=_DocSet(ids), block_filter=np.unique(ids // tables.cfg.block_size),
     )
     if rr is None:
         final = base.select(

@@ -94,7 +94,6 @@ def synonym_topk(
         _empty_result,
         _ranked,
         _run_kernel,
-        _term_postings,
         searcher_for,
     )
 
@@ -147,10 +146,9 @@ def synonym_topk(
 
     pos_cols = ["n"] if cfg.positions else []
     # Σ df over the scanned terms bounds the decoded volume
+    scan_dfs = {t: dfs[t] for t in scan_terms}
     scored = _run_kernel(
-        _term_postings(tables, scan_terms).select(
-            "tid", "block_id", "block_min_dl", *pos_cols, "blob"
-        ),
+        s._block_rows(scan_dfs).select(["tid", "block_id", "block_min_dl", *pos_cols, "blob"]),
         lambda allowed: _make_decode_synonym_group_arrow(
             cfg.block_size,
             grp_by_tid,
@@ -164,6 +162,6 @@ def synonym_topk(
             allowed=allowed,
         ),
         "doc_id long, score double",
-        sum(dfs[t] for t in scan_terms),
+        sum(scan_dfs.values()),
     )
     return _ranked(tables.postings.sparkSession, scored, k)

@@ -1,18 +1,31 @@
 #!/usr/bin/env python
-"""Per-query cost split (guide §1): the query call (``plan``) vs its
-``collect()`` (``exec``) vs Spark job count, for the bench query set
-plus the three composed query kinds of perfbench's mix (a compound
-boolean ``search``, ``prefix_topk("s")`` and ``facet_query``).
+"""Per-query cost split (guide §1), cold and warm: the query call
+(``plan``) vs its ``collect()`` (``exec``), the Spark jobs and the py4j
+round trips of each, for the bench query set plus the three composed
+query kinds of perfbench's mix (a compound boolean ``search``,
+``prefix_topk("s")`` and ``facet_query``).
 
-Prints rep-3 numbers (df/fq lookups memoized by then — the regime the
-bench's median-of-3 measures). ``plan`` times the query method itself;
-in the local regime (Σ df ≤ ``query/bm25.py:LOCAL_KERNEL_MAX_POSTINGS``)
-that is where the scan is collected and scored, and ``exec`` (the
-``collect()`` of the returned LocalRelation) runs no job. Larger queries
-build a lazy plan in ``plan`` and run their kernels and shuffles in
-``exec``. Zero-result queries run zero jobs.
+Each op prints two lines:
+
+- ``cold``: the first call on a fresh ``read_index`` (so a fresh
+  ``Searcher``): corpus stats, term dfs, fq doc sets, prefix expansions
+  and postings block rows are all collected by this call;
+- ``warm``: the third repeat on the same tables. A local-regime query
+  (Σ df ≤ ``query/bm25.py:LOCAL_KERNEL_MAX_POSTINGS``) then finds its
+  block rows, dfs and expansions memoized on the ``Searcher`` and runs
+  no Spark job; only the freshness check (one generation-token read)
+  and the result ``LocalRelation`` still cross py4j.
+
+``plan`` times the query method itself; in the local regime that is
+where rows are collected (cold) and scored, and ``exec`` (the
+``collect()`` of the returned LocalRelation) runs no job. Larger
+queries build a lazy plan in ``plan`` and run their kernels and
+shuffles in ``exec``. Zero-result queries run zero jobs. Round trips
+are counted by wrapping py4j's ``send_command``.
 
 Usage: python scripts/prof_query_jobs.py
+(``SPARK_GRAFT_SF_DIR`` picks the corpus, default /root/testdata/sf0.1;
+``PROF_REPO`` the engine checkout, default this one.)
 """
 import os
 import shutil
@@ -44,35 +57,60 @@ QS = [
 ]
 
 
+class RoundTrips:
+    """Counts py4j commands sent to the JVM (each is one round trip)."""
+
+    def __init__(self, spark):
+        self.n = 0
+        client = spark.sparkContext._gateway._gateway_client
+        cls = type(client)
+        send = cls.send_command
+
+        def counted(this, *args, **kw):
+            self.n += 1
+            return send(this, *args, **kw)
+
+        cls.send_command = counted
+
+
+def measure(tracker, trips, query, tables):
+    n0 = max(list(tracker.getJobIdsForGroup(None)) + [-1])
+    r0 = trips.n
+    t0 = time.time()
+    df = query(tables)
+    t1 = time.time()
+    r1 = trips.n
+    rows = df.collect()
+    t2 = time.time()
+    r2 = trips.n
+    n1 = max(list(tracker.getJobIdsForGroup(None)) + [-1])
+    return (
+        f"plan={1000 * (t1 - t0):.0f}ms exec={1000 * (t2 - t1):.0f}ms "
+        f"jobs={n1 - n0} py4j={r1 - r0}+{r2 - r1} rows={len(rows)}"
+    )
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="prof-query-jobs")
     spark.sparkContext.setLogLevel("ERROR")
-    sc = spark.sparkContext
+    tracker = spark.sparkContext.statusTracker()
 
     docs = from_driver_documents(spark, sf_dir)
     cfg = IndexConfig(block_size=128, n_buckets=32)
     tmp = tempfile.mkdtemp(prefix="profq_")
     path = os.path.join(tmp, "index")
     build_to_path(docs, path, cfg, bucket_group_size=32, resume=False)
-    tables = read_index(spark, path)
-    topk(tables, "warmup scan", k=5).collect()
+    # one throwaway query pays the JVM's first-use plan code generation
+    topk(read_index(spark, path), "warmup scan", k=5).collect()
 
-    tracker = sc.statusTracker()
+    trips = RoundTrips(spark)
     for name, query in QS:
-        for rep in range(3):
-            n0 = max(list(tracker.getJobIdsForGroup(None)) + [-1])
-            t0 = time.time()
-            df = query(tables)
-            t1 = time.time()
-            rows = df.collect()
-            t2 = time.time()
-            n1 = max(list(tracker.getJobIdsForGroup(None)) + [-1])
-            if rep == 2:
-                print(
-                    f"{name}: plan={1000 * (t1 - t0):.0f}ms "
-                    f"exec={1000 * (t2 - t1):.0f}ms jobs={n1 - n0} rows={len(rows)}"
-                )
+        tables = read_index(spark, path)
+        print(f"{name} cold: {measure(tracker, trips, query, tables)}")
+        for _ in range(2):
+            query(tables).collect()
+        print(f"{name} warm: {measure(tracker, trips, query, tables)}")
     shutil.rmtree(tmp, ignore_errors=True)
 
 

@@ -30,9 +30,15 @@ def docs(spark):
 def collected_scans(monkeypatch):
     """Executed plans of the scans the driver collects (``toArrow``) —
     the local regime's scans run while a query is BUILT, so they never
-    show in the returned DataFrame's plan."""
+    show in the returned DataFrame's plan. A Searcher collects a term's
+    block rows only once, so the test starts with an empty Searcher
+    registry: its first query through a façade gets a fresh Searcher
+    and runs its scan."""
     from pyspark.sql.classic.dataframe import DataFrame
 
+    from oni_indexer_spark.query import bm25
+
+    monkeypatch.setattr(bm25, "_SEARCHERS", {})
     plans = []
     to_arrow = DataFrame.toArrow
 

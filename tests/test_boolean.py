@@ -353,17 +353,21 @@ def test_must_block_pushdown_fires_and_stays_exact(
 def test_small_and_topk_prefilters_locally(spark, zzrare_tables):
     """A small AND query whose rarest term is selective filters its
     collected rows to that term's blocks in pyarrow — no distinct or
-    broadcast job: a warm query runs 1 job and stays oracle-exact."""
+    broadcast job: on a fresh Searcher whose stats and dfs are known
+    the query runs 1 job, its warm repeat none, and both stay
+    oracle-exact."""
     from oni_indexer_spark.oracle import bm25_topk_sql
-    from oni_indexer_spark.query.bm25 import searcher_for
+    from oni_indexer_spark.query.bm25 import Searcher
     from tests.conftest import jobs_run
 
-    s = searcher_for(zzrare_tables)
-    s.topk("zzrare merge", k=10, mode="and").collect()  # warm stats and dfs
-    rows, jobs = jobs_run(
-        spark, lambda: s.topk("zzrare merge", k=10, mode="and").collect()
-    )
-    assert jobs == 1
-    got = sorted((r["rank"], r["doc_id"], round(r["score"], 6)) for r in rows)
-    assert got
-    _assert_same_rows(got, _zzrare_oracle_rows(bm25_topk_sql("zzrare merge", k=10, mode="and")))
+    s = Searcher(zzrare_tables)
+    s.stats(), s.term_dfs(["zzrare", "merge"])  # corpus stats and dfs only
+    exp = _zzrare_oracle_rows(bm25_topk_sql("zzrare merge", k=10, mode="and"))
+    for want_jobs in (1, 0):
+        rows, jobs = jobs_run(
+            spark, lambda: s.topk("zzrare merge", k=10, mode="and").collect()
+        )
+        assert jobs == want_jobs
+        got = sorted((r["rank"], r["doc_id"], round(r["score"], 6)) for r in rows)
+        assert got
+        _assert_same_rows(got, exp)

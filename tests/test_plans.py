@@ -15,11 +15,13 @@ Query plan contract (query/bm25.py docstring):
       * local (Σ df ≤ LOCAL_KERNEL_MAX_POSTINGS): the pruned scan is
         collected as Arrow — its plan has no Python node and no
         Exchange — the kernel and the top-k run on the driver, and the
-        result is a LocalRelation; a small top-k runs exactly 1 job. A
-        compound boolean query is local when Σ df over the union of its
-        clause terms fits the gate: ONE collected scan of that union,
-        every clause kernel and the MUST/SHOULD/NOT combine on the
-        driver — also exactly 1 job. A small constant-score prefix
+        result is a LocalRelation; a small top-k runs exactly 1 job
+        (its stats and dfs known), and its warm repeat none: the
+        Searcher memoizes the collected block rows per term. A compound
+        boolean query is local when Σ df over the union of its clause
+        terms fits the gate: ONE collected scan of that union, every
+        clause kernel and the MUST/SHOULD/NOT combine on the driver —
+        also exactly 1 job, none warm. A small constant-score prefix
         decodes on the driver too;
       * exchange(n) (forced in these tests by zeroing the gate): the
         kernel runs as MapInArrow; a single term never shuffles, a
@@ -95,31 +97,53 @@ def test_query_plan_shape_above_coalesce_gate(disk_index, exchange_regime):
 
 
 def test_small_topk_runs_one_job(spark, disk_index):
-    """A warm small top-k is exactly one Spark job — the scan collect;
-    scoring, ranking and the collect of the LocalRelation run none."""
-    from oni_indexer_spark.query.bm25 import searcher_for
+    """A small top-k on a fresh Searcher whose stats and dfs are known
+    is exactly one Spark job — the scan collect; scoring, ranking and
+    the collect of the LocalRelation run none. Its warm repeat finds the
+    block rows memoized and runs no job at all."""
+    from oni_indexer_spark.query.bm25 import Searcher
 
-    s = searcher_for(disk_index)
-    s.topk("hash join", k=10).collect()  # warm stats, dfs and the lineage memo
-    rows, jobs = jobs_run(spark, lambda: s.topk("hash join", k=10).collect())
-    assert rows
+    s = Searcher(disk_index)
+    s.stats(), s.term_dfs(["hash", "join"])  # corpus stats and dfs only
+    first, jobs = jobs_run(spark, lambda: s.topk("hash join", k=10).collect())
+    assert first
     assert jobs == 1
+    again, jobs = jobs_run(spark, lambda: s.topk("hash join", k=10).collect())
+    assert again == first
+    assert jobs == 0
 
 
 def test_small_boolean_search_runs_one_job(spark, docs, disk_index):
-    """A warm small compound boolean query (MUST + NOT + SHOULD + a
-    selective filter) is exactly one Spark job: the collected scan of
-    its clause terms' union. The clause kernels, the combine, the
-    ranking and the collect of the LocalRelation run none."""
-    from oni_indexer_spark.query.bm25 import searcher_for
+    """A small compound boolean query (MUST + NOT + SHOULD + a selective
+    filter) on a fresh Searcher whose stats, dfs and fq doc set are
+    known is exactly one Spark job: the collected scan of its clause
+    terms' union. The clause kernels, the combine, the ranking and the
+    collect of the LocalRelation run none; the warm repeat runs no
+    job."""
+    from oni_indexer_spark.query.bm25 import Searcher
 
     lang = docs.select("lang").first()["lang"]
     q = f"+hash -window merge lang:{lang}"
-    s = searcher_for(disk_index)
-    s.search(q, k=10).collect()  # warm stats, dfs, the fq doc set and the lineage memo
-    rows, jobs = jobs_run(spark, lambda: s.search(q, k=10).collect())
-    assert rows
+    s = Searcher(disk_index)
+    s.stats(), s.term_dfs(["hash", "window", "merge"]), s._fq_docs({"lang": lang})
+    first, jobs = jobs_run(spark, lambda: s.search(q, k=10).collect())
+    assert first
     assert jobs == 1
+    again, jobs = jobs_run(spark, lambda: s.search(q, k=10).collect())
+    assert again == first
+    assert jobs == 0
+
+
+def test_warm_prefix_topk_runs_no_job(spark, disk_index):
+    """A warm ``prefix_topk("s")`` finds its expansion and its block
+    rows memoized on the Searcher: no dictionary job, no scan job."""
+    from oni_indexer_spark.query.bm25 import Searcher
+
+    s = Searcher(disk_index)
+    first = s.prefix_topk("s", k=10).collect()
+    again, jobs = jobs_run(spark, lambda: s.prefix_topk("s", k=10).collect())
+    assert first and again == first
+    assert jobs == 0
 
 
 def test_build_pushes_column_pruning(spark, docs):
@@ -343,7 +367,9 @@ def pos_index(docs):
 
 def test_local_and_exchange_regimes_agree(spark, docs, pos_index, monkeypatch):
     """Every kernel call site returns the same rows and scores whether
-    its kernel runs on the driver or in Spark tasks."""
+    its kernel runs on the driver or in Spark tasks, and a warm repeat
+    of the local pass (its block rows memoized) returns the first
+    pass's rows with bit-identical scores."""
     from oni_indexer_spark.query import (
         facet_query,
         prefix_topk,
@@ -374,12 +400,20 @@ def test_local_and_exchange_regimes_agree(spark, docs, pos_index, monkeypatch):
     }
     empty = {"not_removes_all"}
 
-    def answers():
+    def answers(fresh=True):
         # a fresh Searcher per regime: nothing memoized crosses over
-        bm25._SEARCHERS.clear()
+        if fresh:
+            bm25._SEARCHERS.clear()
         return {name: [tuple(r) for r in q(pos_index).collect()] for name, q in cases.items()}
 
     local = answers()
+    # the same Searcher again: every block row and expansion memoized,
+    # and every answer bit-identical to the first
+    warm_before = bm25.searcher_for(pos_index).cache_info()
+    assert answers(fresh=False) == local
+    warm_after = bm25.searcher_for(pos_index).cache_info()
+    assert warm_after.misses == warm_before.misses
+    assert warm_after.hits > warm_before.hits
     monkeypatch.setattr(bm25, "LOCAL_KERNEL_MAX_POSTINGS", 0)
     exchange = answers()
     for name in cases:
