@@ -31,6 +31,15 @@ from pyspark.sql import SparkSession
 _PRIVATE_FS: dict[str, object] = {}
 
 
+# Largest py4j reply that arrives without a stall. py4j sends a reply as
+# one text line (a byte[] base64-encoded); a line longer than the JVM
+# writer's 8,192-char buffer leaves in two TCP writes, and the second
+# waits for the ACK of the first, which the receiver delays ~40 ms.
+# Measured on loopback: one 6,100-byte read 1.1 ms, 6,200 bytes 42 ms;
+# a 16 KB file read whole 49 ms, in 6,000-byte chunks 4.2 ms.
+PY4J_CHUNK_BYTES = 6000
+
+
 def _active_spark(spark: SparkSession | None) -> SparkSession:
     s = spark or SparkSession.getActiveSession()
     if s is None:
@@ -116,9 +125,21 @@ class Fs:
         p = self._p(path)
         if not self._fs.exists(p):
             raise FileNotFoundError(path)
+        return self._read(p)
+
+    def read_files(self, paths: list[str]) -> list[bytes]:
+        """The content of each file in ``paths``, known to exist (no
+        existence check): four py4j round trips for a file under one
+        ``PY4J_CHUNK_BYTES`` reply, one more per further reply."""
+        return [self._read(self._p(path)) for path in paths]
+
+    def _read(self, p) -> bytes:
         stream = self._fs.open(p)
         try:
-            return bytes(stream.readAllBytes())
+            chunks = [bytes(stream.readNBytes(PY4J_CHUNK_BYTES))]
+            while len(chunks[-1]) == PY4J_CHUNK_BYTES:
+                chunks.append(bytes(stream.readNBytes(PY4J_CHUNK_BYTES)))
+            return b"".join(chunks)
         finally:
             stream.close()
 

@@ -22,7 +22,13 @@ Physical shape of a query (see ``.explain`` audit in tests/test_plans.py):
     shuffle, no JVM hash aggregate
   → top-k on (round(score, 6) desc, doc_id asc).
 
-Three regimes, chosen driver-side from Σ df (known for free):
+Three regimes, chosen driver-side from Σ df. Σ df and the corpus
+``(N, avgdl)`` cost no Spark job over an index on disk: a cold
+``Searcher`` reads them on the driver from the stats and dfreq parquet
+files the tables pinned at ``read_index`` (the query terms' bucket
+files only), under a file-count and byte gate; an in-memory index, or
+metadata over the gate, is read by Spark jobs. Either way they are
+memoized per ``Searcher`` generation.
 
   - empty: a term or filter matches nothing → an empty literal
     LocalRelation, 0 jobs.
@@ -649,6 +655,44 @@ LOCAL_KERNEL_MAX_POSTINGS = 65_536
 _LOCAL_ROWS_MAX_POSTINGS = 16 * LOCAL_KERNEL_MAX_POSTINGS
 
 
+# Gate of the driver read of index metadata (Searcher._pinned_table):
+# a cold query reads corpus stats and its terms' dfs with pyarrow from
+# the stats/dfreq files the tables pinned, instead of by Spark jobs,
+# while the table's pinned file count and the selected files' bytes
+# stay under these bounds. Crossover measured with
+# scripts/bench_metadata_read.py (BENCH/metadata_read_*.json; 4-vCPU
+# host, local[4], synth index + a 10% append, medians). These runs
+# still read each file's size (two more py4j round trips per file than
+# now), and the 100k run listed the files in one reply (a ~40 ms
+# stall), so they overstate the driver read's cost. The Spark reads it
+# replaces cost 50-60 ms (stats, 1 job) and 120-490 ms (dfs, 2 jobs).
+# - 1k docs (64 dfreq files of 1.3 KB): dfs of 1-32 terms, 2-64 files,
+#   driver 10-63 ms vs Spark 121-261 ms; stats 11 vs 53 ms.
+# - 100k docs (448 files of 2.4 KB): 14-448 files / 34 KB-1.09 MB,
+#   driver 88-566 ms vs Spark 177-643 ms.
+# - 1M docs (256 files of 23 KB): 8 files / 182 KB 98 vs 159 ms,
+#   32 / 734 KB 164 vs 267, 64 / 1.47 MB 336 vs 351 (parity),
+#   128 / 2.9 MB 786 vs 375.
+# So the byte bound sits below the measured parity, and the file bound
+# keeps the listing (32 paths per py4j reply) near 15 ms and covers the
+# 100k layout. Above the file bound the gate costs 2 round trips, above
+# the byte bound none more.
+_PINNED_MAX_FILES = 512
+_PINNED_MAX_BYTES = 1 << 20
+
+
+def _combine_stats(rows) -> tuple[int, float]:
+    """``(N, avgdl)`` from stats rows ``(n_docs, avgdl)``: one row per
+    build/append batch, plus signed correction rows from overwrite and
+    delete. N is the integer sum and avgdl ``fsum(n·avgdl) / N``, so the
+    result does not depend on file or row order."""
+    import math
+
+    rows = [(int(n), float(a)) for n, a in rows]
+    n_docs = sum(n for n, _ in rows)
+    return n_docs, (math.fsum(n * a for n, a in rows) / n_docs) if n_docs else 0.0
+
+
 def _term_postings(tables: IndexTables, terms: list[str]) -> DataFrame:
     """The postings scan for ``terms`` — pruned by bucket directory
     (PartitionFilters) and by row-group min/max stats on tid (pushed
@@ -954,9 +998,14 @@ class CacheInfo(NamedTuple):
 
 
 class Searcher:
-    """Query handle over an index: caches the 1-row stats table and the
-    term→df lookups so a query costs 1 Spark job on the fast path (dfreq
-    probe is memoized per term; scoring+top-k is one action).
+    """Query handle over an index. It memoizes what a query reads before
+    it scores: corpus ``(N, avgdl)`` (:meth:`stats`), term dfs
+    (:meth:`term_dfs`), fq doc sets, prefix/fuzzy expansions and the
+    local regime's block rows (:meth:`_local_rows`). Over an index on
+    disk, stats and dfs are read on the driver from the parquet files
+    the tables pinned at ``read_index`` (:meth:`_pinned_table`), so they
+    cost no Spark job; an in-memory index, or one whose metadata is over
+    the driver-read gate, reads them with Spark.
 
     ``prune_cost_threshold``: block-max pruning pays a pass-1 job (~0.5-1s
     fixed on the measured host); the 32-way block-aligned decode runs
@@ -966,9 +1015,13 @@ class Searcher:
     scale every stop-word-bearing query clears it immediately).
 
     STALENESS: everything memoized — corpus stats, term dfs, fq doc
-    sets, prefix/fuzzy expansions and the local regime's block rows
-    (:meth:`_local_rows`) — describes the tables as of the last
-    freshness check, and :meth:`invalidate` drops all of it. In-process
+    sets, prefix/fuzzy expansions, the local regime's block rows
+    (:meth:`_local_rows`) and the stats/dfreq file lists the driver
+    reads (:meth:`_pinned_table`) — describes the tables as of the last
+    freshness check, and :meth:`invalidate` drops all of it. The file
+    lists are the ones the tables' DataFrames pinned, never a fresh
+    listing, so stats and dfs always describe the files the postings
+    scan reads; a re-opened tables object pins, and lists, new ones. In-process
     mutators (append / overwrite / delete / compact) call the
     module-level :func:`invalidate_searchers` hook. For OUT-OF-PROCESS
     writers (another driver writing the same path — invisible to this
@@ -985,9 +1038,12 @@ class Searcher:
     WHEN A QUERY RUNS: a local-regime query (Σ df ≤
     ``LOCAL_KERNEL_MAX_POSTINGS`` — see the module docstring) does its
     work when :meth:`topk` (or any query method) is CALLED: its block
-    rows are collected (only the terms not memoized yet — a warm repeat
-    runs 0 Spark jobs) and scored then, and the returned DataFrame is a
-    LocalRelation whose ``collect()`` runs no job. Exchange-regime
+    rows are collected (only the terms not memoized yet) and scored
+    then, and the returned DataFrame is a LocalRelation whose
+    ``collect()`` runs no job. So a cold small query on a fresh Searcher
+    runs 1 Spark job (the postings collect; stats and dfs are driver
+    reads) and a warm repeat runs none. Prefix/fuzzy expansion and fq
+    doc sets still cost their own jobs on first use. Exchange-regime
     queries stay lazy until ``collect()``. Either way a result
     describes the index as of the call.
     """
@@ -1011,6 +1067,9 @@ class Searcher:
         self._df_cache: dict[str, int] = {}
         self._fq_cache: dict[tuple, tuple[int, _DocSet | None]] = {}
         self._expansions: dict[tuple, list] = {}
+        # table name → (the files its DataFrame pinned, their mean
+        # size), or None over the gate; see _pinned_table
+        self._pinned: dict[str, tuple[list[str], float] | None] = {}
         # local-regime block rows per tid → (rows, df), least recently
         # used first; see _local_rows
         self._rows: OrderedDict[int, tuple] = OrderedDict()
@@ -1045,13 +1104,19 @@ class Searcher:
         cnt, docs = hit
         return (_empty_result(self.tables) if cnt == 0 else None), docs
 
-    def _read_generation(self):
-        """The index's generation token, or for an index without one its
-        ``_lineage`` listing."""
+    def _fs(self):
+        """The index path's :class:`Fs` handle, through the Searcher's one
+        kept :class:`Lineage` handle (made on first use)."""
         if self._lineage is None:
             from oni_indexer_spark.index.lineage import Lineage
 
             self._lineage = Lineage(self.tables.stats.sparkSession, self.tables.path)
+        return self._lineage.fs
+
+    def _read_generation(self):
+        """The index's generation token, or for an index without one its
+        ``_lineage`` listing."""
+        self._fs()
         lin = self._lineage
         token = lin.read_generation()
         return token if token is not None else tuple(sorted(lin.fs.list_status(lin.dir)))
@@ -1088,6 +1153,7 @@ class Searcher:
         self._df_cache.clear()
         self._fq_cache.clear()
         self._expansions.clear()
+        self._pinned.clear()
         self._rows.clear()
         self._rows_postings = 0
         if self.tables.path is not None:
@@ -1147,29 +1213,97 @@ class Searcher:
             self._rows_evictions += 1
         return out
 
+    def _pinned_table(self, name: str, ddl: str, buckets=None):
+        """``tables.<name>`` (``stats`` or ``dfreq``) read on the driver
+        as one ``pa.Table`` of the ``ddl`` columns, or None when the
+        caller keeps its Spark read: an in-memory table (no path), a
+        cached one (its plan shows no file), over ``_PINNED_MAX_FILES``
+        pinned files, or over ``_PINNED_MAX_BYTES`` selected. It reads
+        only the files the table's DataFrame pinned at ``read_index``
+        (its ``inputFiles()``), so it sees exactly the files a Spark
+        scan would. The list and the table's mean file size (from the
+        relation's ``sizeInBytes``, which Spark summed at
+        ``read_index``) are memoized per Searcher generation, so the
+        gate costs no round trip per file. ``buckets`` selects dfreq's
+        ``bucket=<b>/`` directories; none pinned gives an empty table.
+        ``pq.ParquetFile`` reads a file in a quarter of the time
+        ``pq.read_table`` takes (0.5 vs 2.1 ms, 1.3 KB dfreq file)."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        if self.tables.path is None:
+            return None
+        if name not in self._pinned:
+            jdf = getattr(self.tables, name)._jdf
+            jfiles = jdf.inputFiles()
+            n_files = len(jfiles)  # one round trip
+            # none visible (a cached DataFrame's plan reads the cache,
+            # not files) or over the gate: the Spark read stays
+            pinned = None
+            if 0 < n_files <= _PINNED_MAX_FILES:
+                # joined in the JVM, 32 paths per reply: two round trips
+                # per 32 files, and no reply over py4j's stall size
+                # (fsio.PY4J_CHUNK_BYTES)
+                jvm = self.tables.stats.sparkSession._jvm
+                seq = jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray(jfiles)
+                files = [
+                    f for i in range(0, n_files, 32)
+                    for f in seq.slice(i, i + 32).mkString("\n").split("\n")
+                ]
+                size = jdf.queryExecution().analyzed().stats().sizeInBytes()
+                pinned = (files, int(size) / n_files)
+            self._pinned[name] = pinned
+        if self._pinned[name] is None:
+            return None
+        files, file_bytes = self._pinned[name]
+        if buckets is not None:
+            dirs = {f"/bucket={b}/" for b in buckets}
+            files = [f for f in files if f[f.rfind("/bucket="):f.rfind("/") + 1] in dirs]
+        if len(files) * file_bytes > _PINNED_MAX_BYTES:
+            return None
+        schema = _arrow_schema(ddl)
+        parts = [
+            pq.ParquetFile(pa.BufferReader(b)).read(columns=schema.names).cast(schema)
+            for b in self._fs().read_files(files)
+        ]
+        return pa.concat_tables(parts) if parts else schema.empty_table()
+
     def stats(self) -> tuple[int, float]:
-        # the stats table may hold one row per appended segment; combine
-        # as a weighted average (append-only incremental indexing, C11)
+        """Corpus ``(N, avgdl)`` over every stats row
+        (:func:`_combine_stats`), read once per Searcher generation."""
         if self._stats is None:
-            rows = self.tables.stats.collect()
-            n = sum(int(r["n_docs"]) for r in rows)
-            total_dl = sum(int(r["n_docs"]) * float(r["avgdl"]) for r in rows)
-            self._stats = (n, (total_dl / n) if n else 0.0)
+            got = self._pinned_table("stats", "n_docs long, avgdl double")
+            if got is None:
+                rows = [(r["n_docs"], r["avgdl"]) for r in self.tables.stats.collect()]
+            else:
+                rows = zip(got["n_docs"].to_pylist(), got["avgdl"].to_pylist())
+            self._stats = _combine_stats(rows)
         return self._stats
 
     def term_dfs(self, terms: list[str]) -> dict[str, int]:
+        """df of each term of ``terms`` present in the index (df summed
+        over appended segments), memoized per term."""
         missing = [t for t in terms if t not in self._df_cache]
         if missing:
             buckets = _buckets_for(self.tables, missing)
-            rows = (
-                self.tables.dfreq.where(
-                    F.col("bucket").isin(buckets) & F.col("term").isin(missing)
+            got = self._pinned_table("dfreq", "term string, df long", buckets)
+            if got is None:
+                rows = (
+                    self.tables.dfreq.where(
+                        F.col("bucket").isin(buckets) & F.col("term").isin(missing)
+                    )
+                    .groupBy("term")
+                    .agg(F.sum("df").alias("df"))
+                    .collect()
                 )
-                .groupBy("term")
-                .agg(F.sum("df").alias("df"))  # sum over appended segments
-                .collect()
-            )
-            found = {r["term"]: int(r["df"]) for r in rows}
+                found = {r["term"]: int(r["df"]) for r in rows}
+            else:
+                import pyarrow as pa
+                import pyarrow.compute as pc
+
+                got = got.filter(pc.is_in(got["term"], value_set=pa.array(missing, pa.string())))
+                summed = got.group_by("term").aggregate([("df", "sum")])
+                found = dict(zip(summed["term"].to_pylist(), summed["df_sum"].to_pylist()))
             for t in missing:
                 self._df_cache[t] = found.get(t, 0)
         return {t: self._df_cache[t] for t in terms if self._df_cache[t] > 0}

@@ -8,8 +8,10 @@ query kinds of perfbench's mix (a compound boolean ``search``,
 Each op prints two lines:
 
 - ``cold``: the first call on a fresh ``read_index`` (so a fresh
-  ``Searcher``): corpus stats, term dfs, fq doc sets, prefix expansions
-  and postings block rows are all collected by this call;
+  ``Searcher``). Corpus stats and term dfs are read on the driver from
+  the stats/dfreq files the tables pinned (no job); fq doc sets, prefix
+  expansions and postings block rows are collected by Spark jobs in
+  this call, so a cold small ``topk`` runs 1 job;
 - ``warm``: the third repeat on the same tables. A local-regime query
   (Σ df ≤ ``query/bm25.py:LOCAL_KERNEL_MAX_POSTINGS``) then finds its
   block rows, dfs and expansions memoized on the ``Searcher`` and runs

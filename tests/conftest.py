@@ -59,6 +59,15 @@ def exchange_regime(monkeypatch):
     monkeypatch.setattr(bm25, "LOCAL_KERNEL_MAX_POSTINGS", 0)
 
 
+@pytest.fixture
+def spark_metadata(monkeypatch):
+    """Zero the driver-read gate: a Searcher reads corpus stats and term
+    dfs with Spark jobs, as an in-memory index does."""
+    from oni_indexer_spark.query import bm25
+
+    monkeypatch.setattr(bm25, "_PINNED_MAX_FILES", 0)
+
+
 def jobs_run(spark, fn):
     """``(fn(), number of Spark jobs it ran)``, counted through a fresh
     job group (the statusTracker keeps a group's finished jobs)."""

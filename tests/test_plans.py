@@ -15,8 +15,9 @@ Query plan contract (query/bm25.py docstring):
       * local (Σ df ≤ LOCAL_KERNEL_MAX_POSTINGS): the pruned scan is
         collected as Arrow — its plan has no Python node and no
         Exchange — the kernel and the top-k run on the driver, and the
-        result is a LocalRelation; a small top-k runs exactly 1 job
-        (its stats and dfs known), and its warm repeat none: the
+        result is a LocalRelation; a small top-k runs exactly 1 job,
+        also on a fresh Searcher (stats and dfs are driver reads of the
+        pinned stats/dfreq files), and its warm repeat none: the
         Searcher memoizes the collected block rows per term. A compound
         boolean query is local when Σ df over the union of its clause
         terms fits the gate: ONE collected scan of that union, every
@@ -132,6 +133,43 @@ def test_small_boolean_search_runs_one_job(spark, docs, disk_index):
     again, jobs = jobs_run(spark, lambda: s.search(q, k=10).collect())
     assert again == first
     assert jobs == 0
+
+
+def test_cold_small_topk_runs_one_job(spark, disk_index):
+    """A small top-k on a fresh Searcher with nothing warmed is one
+    Spark job, the postings collect: corpus stats and term dfs are read
+    on the driver from the stats/dfreq files the tables pinned."""
+    from oni_indexer_spark.query.bm25 import Searcher
+
+    s = Searcher(disk_index)
+    rows, jobs = jobs_run(spark, lambda: s.topk("hash join", k=10).collect())
+    assert rows
+    assert jobs == 1
+
+
+def test_cold_small_boolean_search_runs_one_job(spark, disk_index):
+    """A small compound boolean query without fq on a fresh Searcher
+    with nothing warmed is one Spark job: the collected scan of its
+    clause terms' union."""
+    from oni_indexer_spark.query.bm25 import Searcher
+
+    s = Searcher(disk_index)
+    rows, jobs = jobs_run(spark, lambda: s.search("+hash -window merge", k=10).collect())
+    assert rows
+    assert jobs == 1
+
+
+def test_cold_prefix_topk_jobs(spark, disk_index):
+    """A cold ``prefix_topk("s")`` runs 3 jobs: its dictionary
+    expansion still scans dfreq with Spark (an aggregate and its
+    TakeOrdered: 2 jobs), then the postings collect. Its corpus stats
+    are a driver read."""
+    from oni_indexer_spark.query.bm25 import Searcher
+
+    s = Searcher(disk_index)
+    rows, jobs = jobs_run(spark, lambda: s.prefix_topk("s", k=10).collect())
+    assert rows
+    assert jobs == 3
 
 
 def test_warm_prefix_topk_runs_no_job(spark, disk_index):
