@@ -83,9 +83,6 @@ def _index(
         # a completed one is reused across driver invocations.
         build_to_path(docs, path, cfg, bucket_group_size=cfg.n_buckets, resume=True)
         t = read_index(spark, path)
-        t.postings.cache().count()
-        t.dfreq.cache().count()
-        t.doclen.cache().count()
         _INDEX_CACHE[cache_key] = t
     return t
 

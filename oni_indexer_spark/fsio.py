@@ -11,12 +11,19 @@ filesystem, so the sandbox's tests exercise the exact same code path).
 
 The reference keeps its state in Solr + local JSON config
 (``oni-indexer.js:82-104``); this module is the Spark-native durable
-analogue. Only small control-plane records flow through it — the data
-plane (postings/doclen/dfreq parquet) always goes through Spark's own
-writers, which are already scheme-portable.
+analogue. It writes only small control-plane records — the data plane
+(postings/doclen/dfreq parquet) always goes through Spark's own
+writers, which are already scheme-portable. It also reads parquet files
+a DataFrame pinned (:meth:`Fs.read_files`), for the query-time driver
+reads of stats, dfreq and postings; ``file:`` URIs there are read with
+the local filesystem, every other scheme through the same Hadoop
+``FileSystem``.
 """
 
 from __future__ import annotations
+
+import os
+from urllib.parse import unquote, urlsplit
 
 from pyspark.sql import SparkSession
 
@@ -127,18 +134,39 @@ class Fs:
             raise FileNotFoundError(path)
         return self._read(p)
 
-    def read_files(self, paths: list[str]) -> list[bytes]:
-        """The content of each file in ``paths``, known to exist (no
-        existence check): four py4j round trips for a file under one
+    def read_files(self, uris: list[str], max_bytes: int) -> list[bytes] | None:
+        """The content of each file in ``uris``, known to exist and named
+        as ``DataFrame.inputFiles()`` names them (percent-encoded URIs),
+        or None as soon as their total passes ``max_bytes``: the read
+        stops there, so a wrong size estimate costs at most one bound's
+        worth of reading. A ``file:`` URI is read with the local
+        filesystem; any other costs four py4j round trips under one
         ``PY4J_CHUNK_BYTES`` reply, one more per further reply."""
-        return [self._read(self._p(path)) for path in paths]
+        left = max_bytes
+        out = []
+        for uri in uris:
+            u = urlsplit(uri)
+            if u.scheme == "file":
+                with open(unquote(u.path), "rb") as fh:
+                    data = fh.read(min(os.fstat(fh.fileno()).st_size, left + 1))
+            else:
+                data = self._read(self._p(unquote(uri)), left)
+            left -= len(data)
+            if left < 0:
+                return None
+            out.append(data)
+        return out
 
-    def _read(self, p) -> bytes:
+    def _read(self, p, limit: int | None = None) -> bytes:
+        """The file at ``p``; with a ``limit``, stop after the first reply
+        that passes it."""
         stream = self._fs.open(p)
         try:
             chunks = [bytes(stream.readNBytes(PY4J_CHUNK_BYTES))]
-            while len(chunks[-1]) == PY4J_CHUNK_BYTES:
+            n = len(chunks[0])
+            while len(chunks[-1]) == PY4J_CHUNK_BYTES and (limit is None or n <= limit):
                 chunks.append(bytes(stream.readNBytes(PY4J_CHUNK_BYTES)))
+                n += len(chunks[-1])
             return b"".join(chunks)
         finally:
             stream.close()

@@ -26,24 +26,27 @@ Three regimes, chosen driver-side from Σ df. Σ df and the corpus
 ``(N, avgdl)`` cost no Spark job over an index on disk: a cold
 ``Searcher`` reads them on the driver from the stats and dfreq parquet
 files the tables pinned at ``read_index`` (the query terms' bucket
-files only), under a file-count and byte gate; an in-memory index, or
-metadata over the gate, is read by Spark jobs. Either way they are
-memoized per ``Searcher`` generation.
+files only), under a file-count and byte gate; an in-memory or cached
+index, or metadata over the gate, is read by Spark jobs. Either way
+they are memoized per ``Searcher`` generation.
 
   - empty: a term or filter matches nothing → an empty literal
     LocalRelation, 0 jobs.
   - local (Σ df ≤ ``LOCAL_KERNEL_MAX_POSTINGS``): the block rows come
-    from :meth:`Searcher._local_rows`, which collects the pruned scan of
-    the terms it has not seen as Arrow (one JVM-only job, no Python
-    worker) and memoizes them per term, so a warm repeat runs no Spark
-    job at all. The rows are sorted by block_id and scored on the
-    driver; the top-k (or facet count) is reduced there too and handed
-    back as an Arrow LocalRelation. Block prefilters (rarest-term
-    blocks, the constant-score k lowest blocks) filter the rows in
-    pyarrow. A compound boolean query is local when Σ df over the UNION
-    of its clause terms fits the gate: one set of rows for that union,
-    every clause kernel on its tid slice, and the MUST/SHOULD/NOT
-    combine on the driver (:func:`_combine_arrow`) — at most one job.
+    from :meth:`Searcher._local_rows`, which reads the terms it has not
+    seen on the driver from the pinned postings files of their buckets
+    under the same gate (no Spark job, so a cold small query runs
+    none), else collects their pruned scan as Arrow (one JVM-only job,
+    no Python worker), and memoizes them per term, so a warm repeat
+    runs no Spark job either way. The rows are sorted by block_id and
+    scored on the driver; the top-k (or facet count) is reduced there
+    too and handed back as an Arrow LocalRelation. Block prefilters
+    (rarest-term blocks, the constant-score k lowest blocks) filter the
+    rows in pyarrow. A compound boolean query is local when Σ df over
+    the UNION of its clause terms fits the gate: one set of rows for
+    that union, every clause kernel on its tid slice, and the
+    MUST/SHOULD/NOT combine on the driver (:func:`_combine_arrow`) —
+    0 jobs over an index on disk, at most one with the Spark read.
   - exchange(n): the kernel runs in ``mapInArrow`` tasks; multi-term
     kernels first hash-repartition the COMPRESSED block rows by
     block_id (the only shuffle) at a width derived from Σ df, then
@@ -583,7 +586,7 @@ def _arrow_schema(ddl: str):
     import pyarrow as pa
 
     types = {"int": pa.int32(), "long": pa.int64(), "double": pa.float64(),
-             "string": pa.string()}
+             "string": pa.string(), "binary": pa.binary()}
     return pa.schema([(n, types[t]) for n, t in (f.split() for f in ddl.split(","))])
 
 
@@ -646,39 +649,49 @@ SCORER_POSTINGS_PER_PARTITION = 65_536
 LOCAL_KERNEL_MAX_POSTINGS = 65_536
 
 # Bound on the block rows one Searcher memoizes for the local regime
-# (Searcher._local_rows): Σ df of the memoized terms, least recently
-# used term evicted first. Sixteen local-sized queries' worth of
-# postings. The memo holds the compressed block rows: 3.3 bytes per
-# posting measured (perfbench query_small corpus, 5k docs, 13 terms,
-# 47k postings in 520 block rows), so the bound is ~3.5 MB per
-# Searcher.
+# (Searcher._local_rows; a cold term costs a driver read of its pinned
+# postings files, 0 jobs, or with the Spark read one job): Σ df of the
+# memoized terms, least recently used term evicted first. Sixteen
+# local-sized queries' worth of postings. The memo holds the compressed
+# block rows: 3.3 bytes per posting measured (perfbench query_small
+# corpus, 5k docs, 13 terms, 47k postings in 520 block rows), so the
+# bound is ~3.5 MB per Searcher.
 _LOCAL_ROWS_MAX_POSTINGS = 16 * LOCAL_KERNEL_MAX_POSTINGS
 
 
-# Gate of the driver read of index metadata (Searcher._pinned_table):
-# a cold query reads corpus stats and its terms' dfs with pyarrow from
-# the stats/dfreq files the tables pinned, instead of by Spark jobs,
-# while the table's pinned file count and the selected files' bytes
-# stay under these bounds. Crossover measured with
-# scripts/bench_metadata_read.py (BENCH/metadata_read_*.json; 4-vCPU
-# host, local[4], synth index + a 10% append, medians). These runs
-# still read each file's size (two more py4j round trips per file than
-# now), and the 100k run listed the files in one reply (a ~40 ms
-# stall), so they overstate the driver read's cost. The Spark reads it
-# replaces cost 50-60 ms (stats, 1 job) and 120-490 ms (dfs, 2 jobs).
-# - 1k docs (64 dfreq files of 1.3 KB): dfs of 1-32 terms, 2-64 files,
-#   driver 10-63 ms vs Spark 121-261 ms; stats 11 vs 53 ms.
-# - 100k docs (448 files of 2.4 KB): 14-448 files / 34 KB-1.09 MB,
-#   driver 88-566 ms vs Spark 177-643 ms.
-# - 1M docs (256 files of 23 KB): 8 files / 182 KB 98 vs 159 ms,
-#   32 / 734 KB 164 vs 267, 64 / 1.47 MB 336 vs 351 (parity),
-#   128 / 2.9 MB 786 vs 375.
-# So the byte bound sits below the measured parity, and the file bound
-# keeps the listing (32 paths per py4j reply) near 15 ms and covers the
-# 100k layout. Above the file bound the gate costs 2 round trips, above
-# the byte bound none more.
-_PINNED_MAX_FILES = 512
-_PINNED_MAX_BYTES = 1 << 20
+# Gate of the driver read of index files (Searcher._pinned_table): a
+# cold query reads corpus stats, its terms' dfs and (local regime) their
+# postings with pyarrow from the files the tables pinned, instead of by
+# Spark jobs, while the table's pinned file count and the selected
+# files' bytes stay under these bounds. The byte bound depends on how a
+# file is read (fsio.Fs.read_files): a ``file:`` URI by the local
+# filesystem, any other scheme in 6,000-byte py4j replies. Crossovers
+# measured with scripts/bench_metadata_read.py (4-vCPU host, local[4],
+# synth index + a 10% append, medians; the Spark reads cost 45-55 ms
+# for stats, 1 job, 124-1,007 ms for dfs, 2 jobs, 62-3,693 ms for
+# postings, 1 job).
+# - file: (BENCH/metadata_read_{1k,100k,1m}.json; every postings file
+#   holds one row group at each scale):
+#   - 1k docs (64 dfreq, 64 postings files): dfs of 1-32 terms driver
+#     10-24 ms vs Spark 124-249 ms; postings 14-388 KB 9-33 vs 62-164.
+#   - 100k (448 dfreq, 1,280 postings files): dfs 34 KB-1.09 MB 21-154
+#     vs 207-719 ms; postings 1.7-59 MB 52-1,224 vs 150-1,692.
+#   - 1M (1,152 dfreq, 3,072 postings files): dfs 0.2-7.1 MB 38-372 vs
+#     198-1,007 ms; postings 17.9 MB 181 vs 243, 37.8 MB 346 vs 314
+#     (parity), 155 MB 1,237 vs 1,339, 299 MB 2,222 vs 1,743.
+# - py4j (the same runs before reads of ``file:`` URIs went local, in
+#   the git history of those files): 1M dfreq 32 files / 734 KB 164 vs
+#   267 ms, 64 / 1.47 MB 336 vs 351 (parity), 128 / 2.9 MB 786 vs 375.
+# So each byte bound sits below its measured parity, and the file bound
+# covers the 1M layout: listing its 4,226 pinned files (32 paths per
+# py4j reply) takes 70 ms. Above the file bound the gate costs 2 round
+# trips. The bytes are estimated as the table's mean file size × files
+# selected, which is low for skewed files (a base segment beside a
+# small append), so the read also stops once the bytes actually read
+# pass the bound: a wrong estimate costs at most one bound of reading.
+_PINNED_MAX_FILES = 4096
+_PINNED_MAX_BYTES = 1 << 20  # read through py4j
+_PINNED_MAX_LOCAL_BYTES = 24 << 20  # read from a file: URI
 
 
 def _combine_stats(rows) -> tuple[int, float]:
@@ -1002,10 +1015,11 @@ class Searcher:
     it scores: corpus ``(N, avgdl)`` (:meth:`stats`), term dfs
     (:meth:`term_dfs`), fq doc sets, prefix/fuzzy expansions and the
     local regime's block rows (:meth:`_local_rows`). Over an index on
-    disk, stats and dfs are read on the driver from the parquet files
-    the tables pinned at ``read_index`` (:meth:`_pinned_table`), so they
-    cost no Spark job; an in-memory index, or one whose metadata is over
-    the driver-read gate, reads them with Spark.
+    disk, stats, dfs and those block rows are read on the driver from
+    the parquet files the tables pinned at ``read_index``
+    (:meth:`_pinned_table`), so they cost no Spark job; an in-memory or
+    cached index, or files over the driver-read gate, are read with
+    Spark.
 
     ``prune_cost_threshold``: block-max pruning pays a pass-1 job (~0.5-1s
     fixed on the measured host); the 32-way block-aligned decode runs
@@ -1038,14 +1052,15 @@ class Searcher:
     WHEN A QUERY RUNS: a local-regime query (Σ df ≤
     ``LOCAL_KERNEL_MAX_POSTINGS`` — see the module docstring) does its
     work when :meth:`topk` (or any query method) is CALLED: its block
-    rows are collected (only the terms not memoized yet) and scored
-    then, and the returned DataFrame is a LocalRelation whose
-    ``collect()`` runs no job. So a cold small query on a fresh Searcher
-    runs 1 Spark job (the postings collect; stats and dfs are driver
-    reads) and a warm repeat runs none. Prefix/fuzzy expansion and fq
-    doc sets still cost their own jobs on first use. Exchange-regime
-    queries stay lazy until ``collect()``. Either way a result
-    describes the index as of the call.
+    rows are read (only the terms not memoized yet) and scored then,
+    and the returned DataFrame is a LocalRelation whose ``collect()``
+    runs no job. So a cold small query on a fresh Searcher over an
+    index on disk runs 0 Spark jobs (stats, dfs and block rows are
+    driver reads; 1 job, the postings collect, when the block rows take
+    the Spark read) and a warm repeat runs none. Prefix/fuzzy
+    expansion and fq doc sets still cost their own jobs on first use.
+    Exchange-regime queries stay lazy until ``collect()``. Either way a
+    result describes the index as of the call.
     """
 
     # an fq matching at most this many docs ships as a sorted doc_id
@@ -1173,13 +1188,15 @@ class Searcher:
         """The local regime's block rows ``(tid, block_id, block_min_dl[,
         n], blob)`` of the terms in ``dfs`` (term → df) as one
         ``pa.Table`` — the only way a local query gets its rows. Rows
-        are memoized per term: the terms not memoized yet are collected
-        in ONE pruned scan (the query's one JVM job, none when every
-        term is memoized) and split by tid. The table is assembled from
-        the memo in one canonical order (tid, then block_id) on every
-        call, so a repeat scores bit-identically to the first call. The
-        memo keeps Σ df ≤ ``_LOCAL_ROWS_MAX_POSTINGS``, evicting the
-        least recently used term first."""
+        are memoized per term: the terms not memoized yet are read in
+        one go — on the driver from the pinned postings files of their
+        buckets (:meth:`_pinned_table`, no Spark job), else by ONE
+        pruned scan collected as Arrow (one JVM job) — and split by
+        tid. The table is assembled from the memo in one canonical order
+        (tid, then block_id, then the other columns) on every call and
+        either read, so a repeat scores bit-identically to the first
+        call. The memo keeps Σ df ≤ ``_LOCAL_ROWS_MAX_POSTINGS``,
+        evicting the least recently used term first."""
         import numpy as np
         import pyarrow as pa
 
@@ -1190,13 +1207,17 @@ class Searcher:
         self._rows_misses += len(missing)
         self._rows_hits += len(by_tid) - len(missing)
         if missing:
-            pos_cols = ["n"] if self.tables.cfg.positions else []
+            terms = list(missing.values())
+            pos = ", n int" if self.tables.cfg.positions else ""
+            ddl = f"tid long, block_id long, block_min_dl int{pos}, blob binary"
+            got = self._pinned_table("postings", ddl, _buckets_for(self.tables, terms))
             got = (
-                _term_postings(self.tables, list(missing.values()))
-                .select("tid", "block_id", "block_min_dl", *pos_cols, "blob")
-                .toArrow()
-                .sort_by([("tid", "ascending"), ("block_id", "ascending")])
+                _term_postings(self.tables, terms).select(*_arrow_schema(ddl).names).toArrow()
+                if got is None else _tid_slice(got, terms)
             )
+            # every column a sort key: rows of one (tid, block_id) from
+            # two segments come in file order, which differs per read
+            got = got.sort_by([(c, "ascending") for c in got.column_names])
             tids = got["tid"].to_numpy()
             for tid, t in missing.items():
                 lo = np.searchsorted(tids, tid, side="left")
@@ -1214,18 +1235,23 @@ class Searcher:
         return out
 
     def _pinned_table(self, name: str, ddl: str, buckets=None):
-        """``tables.<name>`` (``stats`` or ``dfreq``) read on the driver
-        as one ``pa.Table`` of the ``ddl`` columns, or None when the
-        caller keeps its Spark read: an in-memory table (no path), a
-        cached one (its plan shows no file), over ``_PINNED_MAX_FILES``
-        pinned files, or over ``_PINNED_MAX_BYTES`` selected. It reads
+        """``tables.<name>`` (``stats``, ``dfreq`` or ``postings``) read
+        on the driver as one ``pa.Table`` of the ``ddl`` columns — the
+        one driver reader of index files — or None when the caller keeps
+        its Spark read: an in-memory table (no path), a cached one (its
+        plan shows no file), over ``_PINNED_MAX_FILES`` pinned files, or
+        over ``_PINNED_MAX_BYTES`` selected (``_PINNED_MAX_LOCAL_BYTES``
+        for ``file:`` URIs) — estimated from the mean file size, and
+        checked again on the bytes actually read, which stop at the
+        bound (file sizes are skewed). It reads
         only the files the table's DataFrame pinned at ``read_index``
         (its ``inputFiles()``), so it sees exactly the files a Spark
         scan would. The list and the table's mean file size (from the
         relation's ``sizeInBytes``, which Spark summed at
         ``read_index``) are memoized per Searcher generation, so the
-        gate costs no round trip per file. ``buckets`` selects dfreq's
-        ``bucket=<b>/`` directories; none pinned gives an empty table.
+        gate costs no round trip per file. ``buckets`` selects the
+        ``bucket=<b>/`` directories (dfreq, postings); none pinned gives
+        an empty table.
         ``pq.ParquetFile`` reads a file in a quarter of the time
         ``pq.read_table`` takes (0.5 vs 2.1 ms, 1.3 KB dfreq file)."""
         import pyarrow as pa
@@ -1256,15 +1282,21 @@ class Searcher:
         if self._pinned[name] is None:
             return None
         files, file_bytes = self._pinned[name]
+        max_bytes = (
+            _PINNED_MAX_LOCAL_BYTES if files[0].startswith("file:") else _PINNED_MAX_BYTES
+        )
         if buckets is not None:
-            dirs = {f"/bucket={b}/" for b in buckets}
-            files = [f for f in files if f[f.rfind("/bucket="):f.rfind("/") + 1] in dirs]
-        if len(files) * file_bytes > _PINNED_MAX_BYTES:
+            dirs = {f"bucket={b}" for b in buckets}
+            files = [f for f in files if dirs.intersection(f.split("/"))]
+        if len(files) * file_bytes > max_bytes:
+            return None
+        blobs = self._fs().read_files(files, max_bytes)
+        if blobs is None:  # the mean size understated these files
             return None
         schema = _arrow_schema(ddl)
         parts = [
             pq.ParquetFile(pa.BufferReader(b)).read(columns=schema.names).cast(schema)
-            for b in self._fs().read_files(files)
+            for b in blobs
         ]
         return pa.concat_tables(parts) if parts else schema.empty_table()
 

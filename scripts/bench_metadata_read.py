@@ -1,10 +1,11 @@
 #!/usr/bin/env python
-"""Crossover of the two ways a cold ``Searcher`` reads its metadata:
-corpus stats and term dfs read with pyarrow on the driver from the
-files the stats/dfreq DataFrames pinned (``Searcher._pinned_table``),
-against the Spark jobs they replace (a ``collect()`` of stats, a
-``groupBy(term).sum(df)`` of dfreq). The bounds in
-``query/bm25.py`` (``_PINNED_MAX_FILES``, ``_PINNED_MAX_BYTES``) come
+"""Crossover of the two ways a cold ``Searcher`` reads an index on
+disk: corpus stats, term dfs and the local regime's postings read with
+pyarrow on the driver from the files the stats/dfreq/postings
+DataFrames pinned (``Searcher._pinned_table``), against the Spark jobs
+they replace (a ``collect()`` of stats, a ``groupBy(term).sum(df)`` of
+dfreq, the ``toArrow()`` of the pruned postings scan). The bounds in
+``query/bm25.py`` (``_PINNED_MAX_FILES``, ``_PINNED_MAX_*BYTES``) come
 from this measurement.
 
 Builds a ``synth_documents`` index of ``--docs`` docs (32 buckets,
@@ -13,14 +14,18 @@ appends a tenth more, so stats holds two rows and every dfreq bucket
 two files. Then, on a fresh ``read_index`` per sample (median of
 ``--reps``), for each read path:
 
-- ``list``: the pinned file count and the listing of both tables;
+- ``list``: the pinned file count and the listing of the three
+  tables, and the most row groups one postings file holds;
 - ``stats``: ``Searcher.stats()``;
 - ``dfs/<n>``: ``Searcher.term_dfs`` of ``n`` terms in ``n`` distinct
   buckets (the selected files and their bytes grow with ``n``);
+- ``postings/<n>``: ``Searcher._local_rows`` of ``n`` terms of df ≤
+  2,048 in ``n`` distinct buckets (Σ df stays within the local gate;
+  the selected postings files and their bytes grow with ``n``);
 - ``cold_topk``: a cold ``topk("hash join")`` end to end, its jobs.
 
 Each line gives ms, Spark jobs and py4j round trips; both paths must
-return the same values.
+return the same values (the same rows in the same order).
 
 Usage: python scripts/bench_metadata_read.py [--docs 1000] [--reps 8]
                                              [--out BENCH/metadata_read_1k.json]
@@ -36,9 +41,17 @@ import statistics
 import sys
 import tempfile
 import time
+from urllib.parse import unquote, urlsplit
+
+import pyarrow.parquet as pq
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+
+def local_path(uri: str) -> str:
+    """The local path of a ``file:`` URI as ``inputFiles()`` gives it."""
+    return unquote(urlsplit(uri).path)
 
 
 class RoundTrips:
@@ -88,22 +101,30 @@ def main() -> None:
                   bucket_group_size=32, resume=False)
     append_to_index(docs.where(F.col("doc_id") >= n_docs), path)
 
+    def by_bucket(rows):  # the first term of each bucket
+        out, seen = [], set()
+        for r in rows:
+            b = term_bucket_py(r["term"], cfg.n_buckets)
+            if b not in seen:
+                seen.add(b)
+                out.append(r["term"])
+        return out
+
     # query terms in distinct buckets, the most frequent first
-    terms, seen = [], set()
-    for r in (read_index(spark, path).dfreq.groupBy("term").agg(F.sum("df").alias("df"))
-              .orderBy(F.col("df").desc(), "term").limit(4000).collect()):
-        b = term_bucket_py(r["term"], cfg.n_buckets)
-        if b not in seen:
-            seen.add(b)
-            terms.append(r["term"])
+    summed = read_index(spark, path).dfreq.groupBy("term").agg(F.sum("df").alias("df"))
+    order = [F.col("df").desc(), "term"]
+    terms = by_bucket(summed.orderBy(*order).limit(4000).collect())
+    local_terms = by_bucket(summed.where(F.col("df") <= 2048).orderBy(*order).limit(4000).collect())
     bm25.topk(read_index(spark, path), "warmup scan", k=5).collect()
 
     trips = RoundTrips(spark)
-    forced = {"driver": (1 << 30, 1 << 40), "spark": (0, 0)}
-    saved = (bm25._PINNED_MAX_FILES, bm25._PINNED_MAX_BYTES)
+    gate = ("_PINNED_MAX_FILES", "_PINNED_MAX_BYTES", "_PINNED_MAX_LOCAL_BYTES")
+    forced = {"driver": (1 << 30, 1 << 40, 1 << 40), "spark": (0, 0, 0)}
+    saved = tuple(getattr(bm25, g) for g in gate)
 
     def run(mode, op):
-        bm25._PINNED_MAX_FILES, bm25._PINNED_MAX_BYTES = forced[mode]
+        for g, v in zip(gate, forced[mode]):
+            setattr(bm25, g, v)
         try:
             s = bm25.Searcher(read_index(spark, path))
             s._fs()  # made by a query's freshness check before any read
@@ -113,17 +134,25 @@ def main() -> None:
             dt, r1 = time.perf_counter() - t0, trips.n
             return val, dt, last_job() - j0, r1 - r0, s
         finally:
-            bm25._PINNED_MAX_FILES, bm25._PINNED_MAX_BYTES = saved
+            for g, v in zip(gate, saved):
+                setattr(bm25, g, v)
+
+    names = ("stats", "dfreq", "postings")
 
     def listing(s):  # the pinned lists alone: no file selected
-        s._pinned_table("stats", "n_docs long, avgdl double", [])
-        s._pinned_table("dfreq", "term string, df long", [])
-        return len(s._pinned["stats"][0]), len(s._pinned["dfreq"][0])
+        for name in names:
+            s._pinned_table(name, "tid long", [])
+        return {name: len(s._pinned[name][0]) for name in names}
 
+    local_dfs = bm25.Searcher(read_index(spark, path)).term_dfs(local_terms)
     ops = [("list", listing), ("stats", lambda s: s.stats())]
     for n in (1, 2, 4, 8, 16, 32):
         if n <= len(terms):
             ops.append((f"dfs/{n}", lambda s, n=n: s.term_dfs(terms[:n])))
+    for n in (1, 2, 4, 8, 16, 32):
+        if n <= len(local_terms):
+            dfs = {t: local_dfs[t] for t in local_terms[:n]}
+            ops.append((f"postings/{n}", lambda s, dfs=dfs: s._local_rows(dfs)))
     ops.append(("cold_topk", lambda s: s.topk("hash join", k=10).collect()))
 
     report = {"docs": n_docs + n_app, "reps": reps, "ops": {}}
@@ -140,16 +169,20 @@ def main() -> None:
                 "jobs": samples[-1][2],
                 "py4j": samples[-1][3],
             }
-        if name.startswith("dfs/"):
-            s = samples[-1][4]
-            n = int(name.split("/")[1])
-            buckets = {f"/bucket={term_bucket_py(t, cfg.n_buckets)}/" for t in terms[:n]}
-            files = [f for f in read_index(spark, path).dfreq.inputFiles()
-                     if f[f.rfind("/bucket="):f.rfind("/") + 1] in buckets]
+        if "/" in name:
+            kind, n = name.split("/")
+            table, chosen = ("dfreq", terms) if kind == "dfs" else ("postings", local_terms)
+            buckets = {f"bucket={term_bucket_py(t, cfg.n_buckets)}" for t in chosen[:int(n)]}
+            files = [f for f in getattr(read_index(spark, path), table).inputFiles()
+                     if buckets.intersection(f.split("/"))]
             row["files"] = len(files)
-            row["bytes"] = sum(s._fs().size(f) for f in files)
+            row["bytes"] = sum(os.path.getsize(local_path(f)) for f in files)
         if name == "list":
-            row["pinned_files"] = {"stats": vals["driver"][0], "dfreq": vals["driver"][1]}
+            row["pinned_files"] = vals["driver"]
+            row["postings_row_groups_max"] = max(
+                pq.ParquetFile(local_path(f)).metadata.num_row_groups
+                for f in read_index(spark, path).postings.inputFiles()
+            )
         elif vals.get("driver") != vals.get("spark"):
             raise SystemExit(f"{name}: driver {vals.get('driver')} != spark {vals.get('spark')}")
         report["ops"][name] = row

@@ -8,10 +8,11 @@ query kinds of perfbench's mix (a compound boolean ``search``,
 Each op prints two lines:
 
 - ``cold``: the first call on a fresh ``read_index`` (so a fresh
-  ``Searcher``). Corpus stats and term dfs are read on the driver from
-  the stats/dfreq files the tables pinned (no job); fq doc sets, prefix
-  expansions and postings block rows are collected by Spark jobs in
-  this call, so a cold small ``topk`` runs 1 job;
+  ``Searcher``). Corpus stats, term dfs and a local query's postings
+  block rows are read on the driver from the stats/dfreq/postings files
+  the tables pinned (no job), so a cold small ``topk`` runs 0 jobs; fq
+  doc sets and prefix expansions are collected by Spark jobs in this
+  call;
 - ``warm``: the third repeat on the same tables. A local-regime query
   (Σ df ≤ ``query/bm25.py:LOCAL_KERNEL_MAX_POSTINGS``) then finds its
   block rows, dfs and expansions memoized on the ``Searcher`` and runs
@@ -19,7 +20,7 @@ Each op prints two lines:
   and the result ``LocalRelation`` still cross py4j.
 
 ``plan`` times the query method itself; in the local regime that is
-where rows are collected (cold) and scored, and ``exec`` (the
+where rows are read (cold) and scored, and ``exec`` (the
 ``collect()`` of the returned LocalRelation) runs no job. Larger
 queries build a lazy plan in ``plan`` and run their kernels and
 shuffles in ``exec``. Zero-result queries run zero jobs. Round trips

@@ -27,13 +27,15 @@ def docs(spark):
 
 
 @pytest.fixture
-def collected_scans(monkeypatch):
+def collected_scans(monkeypatch, spark_reads):
     """Executed plans of the scans the driver collects (``toArrow``) —
     the local regime's scans run while a query is BUILT, so they never
-    show in the returned DataFrame's plan. A Searcher collects a term's
-    block rows only once, so the test starts with an empty Searcher
-    registry: its first query through a façade gets a fresh Searcher
-    and runs its scan."""
+    show in the returned DataFrame's plan. Over an index on disk the
+    block rows are a driver read of the pinned files, so the fixture
+    turns that read off (``spark_reads``) to pin the Spark scan. A
+    Searcher collects a term's block rows only once, so the test starts
+    with an empty Searcher registry: its first query through a façade
+    gets a fresh Searcher and runs its scan."""
     from pyspark.sql.classic.dataframe import DataFrame
 
     from oni_indexer_spark.query import bm25
@@ -60,9 +62,10 @@ def exchange_regime(monkeypatch):
 
 
 @pytest.fixture
-def spark_metadata(monkeypatch):
-    """Zero the driver-read gate: a Searcher reads corpus stats and term
-    dfs with Spark jobs, as an in-memory index does."""
+def spark_reads(monkeypatch):
+    """Zero the driver-read gate: a Searcher reads corpus stats, term
+    dfs and the local regime's postings with Spark jobs, as an in-memory
+    index does."""
     from oni_indexer_spark.query import bm25
 
     monkeypatch.setattr(bm25, "_PINNED_MAX_FILES", 0)

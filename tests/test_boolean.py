@@ -352,10 +352,10 @@ def test_must_block_pushdown_fires_and_stays_exact(
 
 def test_small_and_topk_prefilters_locally(spark, zzrare_tables):
     """A small AND query whose rarest term is selective filters its
-    collected rows to that term's blocks in pyarrow — no distinct or
-    broadcast job: on a fresh Searcher whose stats and dfs are known
-    the query runs 1 job, its warm repeat none, and both stay
-    oracle-exact."""
+    block rows to that term's blocks in pyarrow — no distinct or
+    broadcast job: on a fresh Searcher the query runs no job (its block
+    rows are a driver read of the pinned postings files), nor does its
+    warm repeat, and both stay oracle-exact."""
     from oni_indexer_spark.oracle import bm25_topk_sql
     from oni_indexer_spark.query.bm25 import Searcher
     from tests.conftest import jobs_run
@@ -363,7 +363,7 @@ def test_small_and_topk_prefilters_locally(spark, zzrare_tables):
     s = Searcher(zzrare_tables)
     s.stats(), s.term_dfs(["zzrare", "merge"])  # corpus stats and dfs only
     exp = _zzrare_oracle_rows(bm25_topk_sql("zzrare merge", k=10, mode="and"))
-    for want_jobs in (1, 0):
+    for want_jobs in (0, 0):
         rows, jobs = jobs_run(
             spark, lambda: s.topk("zzrare merge", k=10, mode="and").collect()
         )

@@ -15,15 +15,18 @@ Query plan contract (query/bm25.py docstring):
       * local (Σ df ≤ LOCAL_KERNEL_MAX_POSTINGS): the pruned scan is
         collected as Arrow — its plan has no Python node and no
         Exchange — the kernel and the top-k run on the driver, and the
-        result is a LocalRelation; a small top-k runs exactly 1 job,
-        also on a fresh Searcher (stats and dfs are driver reads of the
-        pinned stats/dfreq files), and its warm repeat none: the
-        Searcher memoizes the collected block rows per term. A compound
-        boolean query is local when Σ df over the union of its clause
-        terms fits the gate: ONE collected scan of that union, every
-        clause kernel and the MUST/SHOULD/NOT combine on the driver —
-        also exactly 1 job, none warm. A small constant-score prefix
-        decodes on the driver too;
+        result is a LocalRelation. Over an index on disk a small top-k
+        runs 0 jobs, also on a fresh Searcher: stats, dfs and the block
+        rows are driver reads of the files the tables pinned (only the
+        query buckets' files); with those reads off (an in-memory or
+        cached index, or one over the gate) it runs exactly 1 job, the
+        pruned scan collected as Arrow. Its warm repeat runs none: the
+        Searcher memoizes the block rows per term. A compound boolean
+        query is local when Σ df over the union of its clause terms fits
+        the gate: ONE set of block rows for that union, every clause
+        kernel and the MUST/SHOULD/NOT combine on the driver — also 0
+        jobs cold (1 with the Spark read), none warm. A small
+        constant-score prefix decodes on the driver too;
       * exchange(n) (forced in these tests by zeroing the gate): the
         kernel runs as MapInArrow; a single term never shuffles, a
         multi-term query has exactly ONE exchange — the hash
@@ -97,11 +100,12 @@ def test_query_plan_shape_above_coalesce_gate(disk_index, exchange_regime):
     assert "MapInArrow" in plan
 
 
-def test_small_topk_runs_one_job(spark, disk_index):
-    """A small top-k on a fresh Searcher whose stats and dfs are known
-    is exactly one Spark job — the scan collect; scoring, ranking and
-    the collect of the LocalRelation run none. Its warm repeat finds the
-    block rows memoized and runs no job at all."""
+def test_small_topk_runs_one_job(spark, disk_index, spark_reads):
+    """With the driver reads off, a small top-k on a fresh Searcher
+    whose stats and dfs are known is exactly one Spark job — the scan
+    collect; scoring, ranking and the collect of the LocalRelation run
+    none. Its warm repeat finds the block rows memoized and runs no job
+    at all."""
     from oni_indexer_spark.query.bm25 import Searcher
 
     s = Searcher(disk_index)
@@ -114,13 +118,13 @@ def test_small_topk_runs_one_job(spark, disk_index):
     assert jobs == 0
 
 
-def test_small_boolean_search_runs_one_job(spark, docs, disk_index):
-    """A small compound boolean query (MUST + NOT + SHOULD + a selective
-    filter) on a fresh Searcher whose stats, dfs and fq doc set are
-    known is exactly one Spark job: the collected scan of its clause
-    terms' union. The clause kernels, the combine, the ranking and the
-    collect of the LocalRelation run none; the warm repeat runs no
-    job."""
+def test_small_boolean_search_runs_one_job(spark, docs, disk_index, spark_reads):
+    """With the driver reads off, a small compound boolean query (MUST +
+    NOT + SHOULD + a selective filter) on a fresh Searcher whose stats,
+    dfs and fq doc set are known is exactly one Spark job: the collected
+    scan of its clause terms' union. The clause kernels, the combine,
+    the ranking and the collect of the LocalRelation run none; the warm
+    repeat runs no job."""
     from oni_indexer_spark.query.bm25 import Searcher
 
     lang = docs.select("lang").first()["lang"]
@@ -135,41 +139,64 @@ def test_small_boolean_search_runs_one_job(spark, docs, disk_index):
     assert jobs == 0
 
 
-def test_cold_small_topk_runs_one_job(spark, disk_index):
-    """A small top-k on a fresh Searcher with nothing warmed is one
-    Spark job, the postings collect: corpus stats and term dfs are read
-    on the driver from the stats/dfreq files the tables pinned."""
+def test_cold_small_topk_runs_no_job(spark, disk_index):
+    """A small top-k on a fresh Searcher with nothing warmed runs no
+    Spark job: corpus stats, term dfs and the block rows are read on the
+    driver from the stats/dfreq/postings files the tables pinned."""
     from oni_indexer_spark.query.bm25 import Searcher
 
     s = Searcher(disk_index)
     rows, jobs = jobs_run(spark, lambda: s.topk("hash join", k=10).collect())
     assert rows
-    assert jobs == 1
+    assert jobs == 0
 
 
-def test_cold_small_boolean_search_runs_one_job(spark, disk_index):
+def test_cold_small_boolean_search_runs_no_job(spark, disk_index):
     """A small compound boolean query without fq on a fresh Searcher
-    with nothing warmed is one Spark job: the collected scan of its
-    clause terms' union."""
+    with nothing warmed runs no Spark job: the block rows of its clause
+    terms' union are one driver read."""
     from oni_indexer_spark.query.bm25 import Searcher
 
     s = Searcher(disk_index)
     rows, jobs = jobs_run(spark, lambda: s.search("+hash -window merge", k=10).collect())
     assert rows
-    assert jobs == 1
+    assert jobs == 0
+
+
+def test_driver_postings_read_pins(spark, disk_index, monkeypatch):
+    """The driver read of a cold small top-k reads exactly the pinned
+    postings files of the query terms' buckets and runs no job."""
+    from oni_indexer_spark import fsio
+    from oni_indexer_spark.query.bm25 import Searcher, _buckets_for
+
+    reads = []
+    read_files = fsio.Fs.read_files
+
+    def spy(self, uris, max_bytes):
+        reads.extend(uris)
+        return read_files(self, uris, max_bytes)
+
+    monkeypatch.setattr(fsio.Fs, "read_files", spy)
+    s = Searcher(disk_index)
+    rows, jobs = jobs_run(spark, lambda: s.topk("hash join", k=10).collect())
+    assert rows and jobs == 0
+    buckets = {f"bucket={b}" for b in _buckets_for(disk_index, ["hash", "join"])}
+    pinned = disk_index.postings.inputFiles()
+    want = sorted(f for f in pinned if buckets.intersection(f.split("/")))
+    assert 0 < len(want) < len(pinned)
+    assert sorted(f for f in reads if "/postings/" in f) == want
 
 
 def test_cold_prefix_topk_jobs(spark, disk_index):
-    """A cold ``prefix_topk("s")`` runs 3 jobs: its dictionary
+    """A cold ``prefix_topk("s")`` runs 2 jobs: its dictionary
     expansion still scans dfreq with Spark (an aggregate and its
-    TakeOrdered: 2 jobs), then the postings collect. Its corpus stats
-    are a driver read."""
+    TakeOrdered). Its corpus stats and block rows are driver reads."""
     from oni_indexer_spark.query.bm25 import Searcher
 
     s = Searcher(disk_index)
     rows, jobs = jobs_run(spark, lambda: s.prefix_topk("s", k=10).collect())
     assert rows
-    assert jobs == 3
+    assert jobs == 2
 
 
 def test_warm_prefix_topk_runs_no_job(spark, disk_index):
