@@ -11,8 +11,9 @@ same artifacts natively as Spark tables:
 - ``doclen(doc_id, repo, path, lang, dl, content_sha256, seg)``  (doc
   store + length norms + the per-row sha256 invariant from BASELINE.json)
 - ``dfreq(term, df, cf)``  (document frequency / collection frequency)
-- ``stats(n_docs, avgdl)``  (one row per build/append/overwrite batch;
-  readers take the weighted sum — overwrite appends signed corrections)
+- ``stats(n_docs, avgdl)``  (one row per build/append batch; a segment
+  rewrite — overwrite, delete, compact — leaves one consolidated row;
+  readers take the weighted sum)
 
 Scale design (the part Lucene's segment merge does for free and Spark
 must do explicitly):
@@ -58,6 +59,7 @@ from __future__ import annotations
 
 import json
 from dataclasses import dataclass
+from functools import reduce
 from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -388,11 +390,10 @@ def _postings_blocks(tf: DataFrame, cfg: IndexConfig) -> DataFrame:
 
 def _postings_blocks_tid(slim: DataFrame, cfg: IndexConfig) -> DataFrame:
     """Encode already-hashed (tid, doc_id, tf, dl [, positions]) rows
-    into block rows — the shared tail of full builds, appends, segment
-    compaction and C11 segment rewrites (the latter two feed it decoded
-    survivor postings that no longer have term strings; on a positional
-    index those rows carry the decoded positions so the re-encode is
-    lossless)."""
+    into block rows — the shared tail of full builds, appends and
+    :func:`_rewrite_segments` (which feeds it decoded survivor postings
+    that no longer have term strings; on a positional index those rows
+    carry the decoded positions so the re-encode is lossless)."""
     has_pos = "positions" in slim.columns
     if cfg.positions and not has_pos:
         raise ValueError("positional index: encoder input must carry positions")
@@ -415,31 +416,35 @@ def _dfreq_table(tf: DataFrame) -> DataFrame:
 
 
 def _merge_dfreq(
-    dfreq_old: DataFrame, killed: DataFrame, tf_new: DataFrame | None = None
+    dfreq_old: DataFrame,
+    killed: DataFrame | None = None,
+    tf_new: DataFrame | None = None,
 ) -> DataFrame:
-    """The exact dfreq after a mutation, one row per term: the old rows
-    (an appended index holds one per segment of a term) plus the added
+    """The exact dfreq after a segment rewrite, one row per term: the old
+    rows (an appended index holds one per segment of a term) plus the added
     docs' ``tf_new`` rows are SUMMED per term first, then the removed
     docs' decoded postings ``killed`` are subtracted once; terms whose
-    df reaches 0 are dropped. Shared by overwrite_docs and delete_docs."""
+    df reaches 0 are dropped. Used by :func:`_rewrite_segments`."""
     rows = dfreq_old if tf_new is None else dfreq_old.unionByName(_dfreq_table(tf_new))
-    dec = killed.groupBy("tid").agg(
-        F.count(F.lit(1)).alias("df_dec"), F.sum("tf").alias("cf_dec")
+    merged = rows.groupBy("term", "bucket").agg(
+        F.sum("df").alias("df"), F.sum("cf").alias("cf")
     )
-    zero = F.lit(0)
-    return (
-        rows.groupBy("term", "bucket")
-        .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
-        .withColumn("tid", F.xxhash64("term"))
-        .join(dec, "tid", "left")
-        .select(
-            "term",
-            "bucket",
-            (F.col("df") - F.coalesce(F.col("df_dec"), zero)).alias("df"),
-            (F.col("cf") - F.coalesce(F.col("cf_dec"), zero)).alias("cf"),
+    if killed is not None:
+        dec = killed.groupBy("tid").agg(
+            F.count(F.lit(1)).alias("df_dec"), F.sum("tf").alias("cf_dec")
         )
-        .where(F.col("df") > 0)
-    )
+        zero = F.lit(0)
+        merged = (
+            merged.withColumn("tid", F.xxhash64("term"))
+            .join(dec, "tid", "left")
+            .select(
+                "term",
+                "bucket",
+                (F.col("df") - F.coalesce(F.col("df_dec"), zero)).alias("df"),
+                (F.col("cf") - F.coalesce(F.col("cf_dec"), zero)).alias("cf"),
+            )
+        )
+    return merged.where(F.col("df") > 0)
 
 
 def build_index(docs: DataFrame, cfg: IndexConfig | None = None) -> IndexTables:
@@ -752,9 +757,7 @@ def append_to_index(docs_new: DataFrame, path: str, batch_id: str | None = None)
     (tests/test_append.py).
     """
     spark = docs_new.sparkSession
-    _replay_pending_swap(path, spark)
-    lin = L.Lineage(spark, path)
-    cfg = _cfg_from_meta(lin.read_meta(), path)
+    lin, cfg = _open_writer(path, spark)
     new_min = docs_new.agg(F.min("doc_id")).collect()[0][0]
     if new_min is None:
         return
@@ -810,12 +813,31 @@ def append_to_index(docs_new: DataFrame, path: str, batch_id: str | None = None)
         dfreq_fut.result()
         n_docs = doclen_fut.result()
     tf.unpersist()
-    lin.finish(stage, t0, docs_tokenized=n_docs)
-    lin.bump_generation()
-    # searchers memoize N/avgdl/df; the index just grew under them
+    _commit(lin, path, stage, t0, docs_tokenized=n_docs)
+
+
+def _open_writer(path: str, spark: SparkSession) -> tuple[L.Lineage, IndexConfig]:
+    """Every writer's first step: finish a crashed writer's pending swap,
+    then read the index config (an old format fails loudly here)."""
+    _replay_pending_swap(path, spark)
+    lin = L.Lineage(spark, path)
+    return lin, _cfg_from_meta(lin.read_meta(), path)
+
+
+def _commit(lin: L.Lineage, path: str, stage: str, t0: float, **metrics: int) -> None:
+    """Every writer's last step: record ``stage`` done, move the generation
+    token, and drop the memoized N/avgdl/df of Searchers over the index
+    that just changed under them."""
     from oni_indexer_spark.query.bm25 import invalidate_searchers
 
+    lin.finish(stage, t0, **metrics)
+    lin.bump_generation()
     invalidate_searchers(path)
+
+
+def _segs_of(ids: DataFrame, cfg: IndexConfig) -> list[int]:
+    """The doc-range segs holding the doc_ids of ``ids``."""
+    return [r[0] for r in ids.select(_seg_of(F.col("doc_id"), cfg)).distinct().collect()]
 
 
 def overwrite_docs(
@@ -830,41 +852,17 @@ def overwrite_docs(
     new ones (added); after this call, queries answer exactly as a fresh
     build over the updated corpus (tests/test_overwrite.py).
 
-    Write amplification is bounded by the seg partition level: only the
-    (bucket, seg) postings directories and seg doclen directories whose
-    doc-ranges contain changed docs are rewritten (merged data staged to
-    sibling ``.next`` dirs, then swapped in — see the inline note on why
-    NOT dynamic partition overwrite) — the Lucene segment-rewrite
-    analogue, everything else is untouched. Exactness bookkeeping:
-
-    - postings: affected segs decode → survivors (anti-join changed ids)
-      union the new docs' postings → re-encode. Block-max metadata of
-      rewritten blocks is recomputed; other blocks keep theirs (bounds
-      are avgdl-independent, still valid as avgdl drifts).
-    - dfreq: exact correction — decrements from the decoded old postings
-      of changed docs, increments from the new tf table; terms reaching
-      df=0 are dropped. Swapped in via a staging dir.
-    - stats: two appended correction rows (−n_removed at the removed
-      docs' avgdl, +n_new at theirs); Searcher's weighted sum stays
-      exact.
-
-    Crash safety (raw-parquet snapshot-swap, the Iceberg-commit analogue):
-    every rewritten table is first STAGED side-by-side (``postings.next``,
-    ``doclen.next``, ``dfreq.next``, ``stats.next``) while the live index
-    keeps answering queries; then a durable swap manifest
-    (``_pending_swap.json``) is written and the swap — per-directory
-    delete+rename — is applied by :func:`_apply_swap`. A crash BEFORE the
-    manifest leaves the live index untouched (stale ``.next`` dirs are
-    overwritten by the next attempt); a crash DURING the swap is healed by
-    replaying the manifest (idempotent: each staged dir is renamed at most
-    once) — ``read_index`` and the mutators replay it automatically.
-    ``_fault_after_stage`` is a test hook simulating a crash right after
-    the manifest write (tests/test_overwrite.py crash-injection).
+    Selection: the segs holding any of ``docs_new``'s doc_ids. Each is
+    rewritten by :func:`_rewrite_segments` without the old version of
+    those ids and with ``docs_new`` added; every other seg directory is
+    left untouched (write amplification bounded by the seg level, the
+    Lucene segment-rewrite analogue). The lineage stage is
+    ``overwrite_<batch_id>`` (default: the smallest new doc_id), so a
+    replayed batch is a no-op. ``_fault_after_stage`` is the core's
+    crash-injection hook.
     """
     spark = docs_new.sparkSession
-    _replay_pending_swap(path, spark)
-    lin = L.Lineage(spark, path)
-    cfg = _cfg_from_meta(lin.read_meta(), path)
+    lin, cfg = _open_writer(path, spark)
     ids_row = docs_new.agg(
         F.min("doc_id").alias("lo"), F.count(F.lit(1)).alias("n")
     ).collect()[0]
@@ -874,95 +872,14 @@ def overwrite_docs(
     if lin.is_done(stage):
         return
     t0 = lin.start(stage)
-
-    from oni_indexer_spark.query.bm25 import _decoded, invalidate_searchers
-
-    segs = [
-        r["s"]
-        for r in docs_new.select(_seg_of(F.col("doc_id"), cfg).alias("s")).distinct().collect()
-    ]
-    changed = docs_new.select("doc_id").distinct()
-
-    # --- old state of the affected segments
-    doclen_all = spark.read.parquet(f"{path}/doclen")
-    doclen_seg = doclen_all.where(F.col("seg").isin(segs))
-    rem = doclen_seg.join(changed, "doc_id", "left_semi").agg(
-        F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl")
-    ).collect()[0]
-    n_removed, avgdl_removed = int(rem["n"]), float(rem["avgdl"] or 0.0)
-
-    # decoded/tokenized ONCE, consumed twice each (guide §1.2): without
-    # the persists the dfreq and postings .next writes re-ran the full
-    # blob decode of the affected segs AND the tokenize of the new docs;
-    # bounded by the affected segs / the overwrite batch respectively.
-    from pyspark import StorageLevel
-
-    post_seg = spark.read.parquet(f"{path}/postings").where(F.col("seg").isin(segs))
-    old_rows = _decoded(post_seg, cfg).persist(StorageLevel.MEMORY_AND_DISK)
-    survivors = old_rows.join(changed, "doc_id", "left_anti")
-    killed = old_rows.join(changed, "doc_id", "left_semi")
-
-    # --- dfreq: exact decrement/increment, staged then swapped
-    tf_new = _tf_table(docs_new, cfg).persist(StorageLevel.MEMORY_AND_DISK)
-    _merge_dfreq(spark.read.parquet(f"{path}/dfreq"), killed, tf_new).write.mode(
-        "overwrite"
-    ).partitionBy("bucket").parquet(f"{path}/dfreq.next")
-
-    # --- postings + doclen: stage the merged affected segs side-by-side.
-    # NOT dynamic-overwrite on the live dirs: a (bucket, seg) dir whose
-    # every posting belonged to changed docs would produce no new rows,
-    # and dynamic overwrite only replaces partitions PRESENT in the new
-    # data — the stale dir would survive. The staged write is also what
-    # makes the mutation crash-safe: the live index is untouched (and
-    # still serving queries) until the manifest-driven swap below, and
-    # writing to a sibling dir closes the read-your-sources hazard that
-    # previously needed a localCheckpoint.
-    pos_cols = ["positions"] if cfg.positions else []
-    new_slim = tf_new.select(
-        F.xxhash64("term").alias("tid"), "doc_id", "tf", "dl", *pos_cols
+    ids, n_new = docs_new.select("doc_id"), int(ids_row["n"])
+    n_before, n_after = _rewrite_segments(
+        spark, path, cfg, _segs_of(ids, cfg), ids, docs_new, _fault_after_stage
     )
-    blocks = _postings_blocks_tid(
-        survivors.select("tid", "doc_id", "tf", "dl", *pos_cols).unionByName(new_slim),
-        cfg,
+    _commit(
+        lin, path, stage, t0,
+        docs_tokenized=n_new, docs_removed=n_before + n_new - n_after,
     )
-    blocks.write.mode("overwrite").partitionBy("bucket", "seg").parquet(
-        f"{path}/postings.next"
-    )
-    old_rows.unpersist()
-    keep_cols = list(doclen_seg.columns)
-    # new docs' doclen: dl from the PERSISTED tf (no third tokenize —
-    # same derivation the build uses), and the write carries an
-    # Observation so the stats row no longer re-runs _doclen_table
-    from pyspark.sql import Observation
-
-    nobs = Observation(f"overwrite_new_stats_{stage}")
-    new_doclen = (
-        _doclen_from_tf(docs_new, tf_new, cfg)
-        .select(*keep_cols)
-        .observe(nobs, F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl"))
-    )
-    doclen_merged = doclen_seg.join(changed, "doc_id", "left_anti").unionByName(
-        new_doclen
-    )
-    doclen_merged.write.mode("overwrite").partitionBy("seg").parquet(
-        f"{path}/doclen.next"
-    )
-    tf_new.unpersist()
-
-    # --- stats correction rows (staged; appended to stats/ by the swap)
-    rows = [(int(nobs.get["n"]), float(nobs.get["avgdl"] or 0.0))]
-    if n_removed:
-        rows.append((-n_removed, avgdl_removed))
-    _stats_df(spark, rows).write.mode("overwrite").parquet(f"{path}/stats.next")
-
-    swap_fs = _fs_for(path, spark)
-    _write_swap_manifest(path, segs, cfg.n_buckets, swap_fs)
-    if _fault_after_stage:  # crash-injection point (tests/test_overwrite.py)
-        raise RuntimeError("injected crash: swap manifest written, swap not applied")
-    _apply_swap(path, swap_fs)
-    lin.finish(stage, t0, docs_tokenized=int(ids_row["n"]), docs_removed=n_removed)
-    lin.bump_generation()
-    invalidate_searchers(path)
 
 
 def delete_docs(
@@ -983,110 +900,37 @@ def delete_docs(
     call, queries answer exactly as a fresh build over the remaining
     corpus. Returns the number of docs removed.
 
-    Same bounded write amplification and crash safety as
-    :func:`overwrite_docs` (this is its subtractive half): only the
-    (bucket, seg) directories containing condemned docs are rewritten —
-    survivors decode → re-encode to staged ``.next`` dirs; dfreq gets
-    exact decrements (terms reaching df=0 dropped); stats gets one
-    ``(-n_removed, avgdl_removed)`` correction row; a seg whose every
-    doc is condemned is removed via the manifest's ``deletes`` side.
-    The durable ``_pending_swap.json`` → :func:`_apply_swap` sequence
-    makes a crash at any point replayable while the live index keeps
-    serving."""
-    from oni_indexer_spark.query.bm25 import _decoded, _fq_keep, invalidate_searchers
+    Selection: the segs holding a condemned doc. Each is rewritten by
+    :func:`_rewrite_segments` without the condemned docs (a seg left
+    empty is removed by the swap); every other seg is untouched. The
+    lineage stage is ``delete_<batch_id>`` (default: the smallest
+    condemned doc_id). ``_fault_after_stage`` is the core's
+    crash-injection hook."""
+    from oni_indexer_spark.query.bm25 import _fq_keep
 
     spark = spark or SparkSession.getActiveSession()
-    _replay_pending_swap(path, spark)
-    lin = L.Lineage(spark, path)
-    cfg = _cfg_from_meta(lin.read_meta(), path)
+    lin, cfg = _open_writer(path, spark)
     if doc_ids is None and fq is None:
         raise ValueError("delete_docs needs doc_ids and/or fq")
-
-    doclen_all = spark.read.parquet(f"{path}/doclen")
-    parts = []
-    if fq is not None:
-        parts.append(_fq_keep(doclen_all, fq).select("doc_id"))
-    if doc_ids is not None:
-        if isinstance(doc_ids, DataFrame):
-            parts.append(
-                doclen_all.join(doc_ids.select("doc_id"), "doc_id", "left_semi")
-                .select("doc_id")
-            )
-        else:
-            parts.append(
-                doclen_all.where(
-                    F.col("doc_id").isin([int(i) for i in doc_ids])
-                ).select("doc_id")
-            )
-    changed = parts[0]
-    for p_ in parts[1:]:
-        changed = changed.unionByName(p_)
-    changed = changed.distinct()
-    cond = doclen_all.join(changed, "doc_id", "left_semi")
-
-    rem = cond.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.avg("dl").alias("avgdl"),
-        F.min("doc_id").alias("lo"),
-    ).collect()[0]
-    n_removed, avgdl_removed = int(rem["n"]), float(rem["avgdl"] or 0.0)
+    doclen = spark.read.parquet(f"{path}/doclen")
+    parts = [] if fq is None else [_fq_keep(doclen, fq)]
+    if isinstance(doc_ids, DataFrame):
+        parts.append(doclen.join(doc_ids.select("doc_id"), "doc_id", "left_semi"))
+    elif doc_ids is not None:
+        parts.append(doclen.where(F.col("doc_id").isin([int(i) for i in doc_ids])))
+    gone = reduce(DataFrame.unionByName, [p.select("doc_id") for p in parts]).distinct()
+    rem = gone.agg(F.count(F.lit(1)).alias("n"), F.min("doc_id").alias("lo")).collect()[0]
+    n_removed = int(rem["n"])
     if n_removed == 0:
         return 0
     stage = f"delete_{batch_id if batch_id is not None else rem['lo']}"
     if lin.is_done(stage):
         return n_removed
     t0 = lin.start(stage)
-
-    segs = [
-        r["s"]
-        for r in changed.select(_seg_of(F.col("doc_id"), cfg).alias("s"))
-        .distinct()
-        .collect()
-    ]
-
-    # decoded ONCE, consumed twice (dfreq decrement via `killed`, postings
-    # re-encode via `survivors`): without the persist each .next write
-    # re-ran the full blob decode of the affected segs — the delete's
-    # dominant cost (guide §1.2: don't compute things you throw away).
-    # MEMORY_AND_DISK: bounded by the affected segs (the same bound as
-    # the write amplification), spills instead of OOMing on a huge seg.
-    from pyspark import StorageLevel
-
-    post_seg = spark.read.parquet(f"{path}/postings").where(F.col("seg").isin(segs))
-    old_rows = _decoded(post_seg, cfg).persist(StorageLevel.MEMORY_AND_DISK)
-    survivors = old_rows.join(changed, "doc_id", "left_anti")
-    killed = old_rows.join(changed, "doc_id", "left_semi")
-
-    # dfreq: exact decrement (the subtractive half of overwrite's merge)
-    _merge_dfreq(spark.read.parquet(f"{path}/dfreq"), killed).write.mode(
-        "overwrite"
-    ).partitionBy("bucket").parquet(f"{path}/dfreq.next")
-
-    pos_cols = ["positions"] if cfg.positions else []
-    blocks = _postings_blocks_tid(
-        survivors.select("tid", "doc_id", "tf", "dl", *pos_cols), cfg
+    _rewrite_segments(
+        spark, path, cfg, _segs_of(gone, cfg), gone, None, _fault_after_stage
     )
-    blocks.write.mode("overwrite").partitionBy("bucket", "seg").parquet(
-        f"{path}/postings.next"
-    )
-    old_rows.unpersist()
-    doclen_seg = doclen_all.where(F.col("seg").isin(segs))
-    doclen_seg.join(changed, "doc_id", "left_anti").write.mode(
-        "overwrite"
-    ).partitionBy("seg").parquet(f"{path}/doclen.next")
-
-    _stats_df(spark, [(-n_removed, avgdl_removed)]).write.mode(
-        "overwrite"
-    ).parquet(f"{path}/stats.next")
-
-    swap_fs = _fs_for(path, spark)
-    _write_swap_manifest(path, segs, cfg.n_buckets, swap_fs)
-    if _fault_after_stage:  # crash-injection point (tests/test_overwrite.py)
-        raise RuntimeError("injected crash: swap manifest written, swap not applied")
-    _apply_swap(path, swap_fs)
-    lin.finish(stage, t0, docs_removed=n_removed)
-    lin.bump_generation()
-    invalidate_searchers(path)
+    _commit(lin, path, stage, t0, docs_removed=n_removed)
     return n_removed
 
 
@@ -1095,6 +939,7 @@ def compact_index(
     spark: SparkSession | None = None,
     batch_id: str | None = None,
     segs: list[int] | None = None,
+    _fault_after_stage: bool = False,
 ) -> dict:
     """Merge appended/streamed segments into a consolidated layout — the
     half of Lucene's model the reference gets for free from Solr's
@@ -1106,133 +951,164 @@ def compact_index(
     scan/prune layout, and boundary blocks split across appends decode
     as multiple rows).
 
-    What it does (all staged side-by-side, then atomically swapped via
-    the same durable-manifest machinery as :func:`overwrite_docs`, so
-    the live index keeps answering queries throughout and a crash at any
-    point is replayable):
-
-    - **postings**: decode → re-encode through the build's own
-      sort-based blocked encoder, then repartition the COMPRESSED block
-      rows by (bucket, seg) so each partition directory lands as one
-      tid-sorted file — boundary blocks merge into single rows and
-      row-group min/max stats on tid become tight again.
-    - **doclen**: rewritten one file per seg, sorted by doc_id (tight
-      min/max for id lookups).
-    - **dfreq**: per-segment rows summed to one row per term.
-    - **stats**: the per-segment rows (including overwrite's signed
-      correction rows) collapse to a single weighted row
-      (``stats_mode: replace`` in the swap manifest).
-
-    ``segs``: compact only these doc-range segments (postings + doclen;
-    dfreq/stats are global and always consolidated). Default = all —
-    the Lucene force-merge analogue, O(index) cost and ~2x transient
-    space like any merge; at north-star scale run it per seg-range batch
-    so each swap manifest stays bounded.
+    Selection: ``segs`` (default all — the Lucene force-merge analogue,
+    O(index) cost and ~2x transient space like any merge; at north-star
+    scale pass seg-range batches so each swap manifest stays bounded).
+    Each is rewritten by :func:`_rewrite_segments` with no doc removed or
+    added, which leaves one file per postings (bucket, seg) and doclen
+    seg directory, one row per term in dfreq and one stats row.
+    ``_fault_after_stage`` is the core's crash-injection hook.
 
     Returns a metrics dict (segments, files before/after). Queries
     against the compacted index are exactly those against the
     uncompacted one (tests/test_append.py), because decode→encode is a
     lossless round-trip, block-max metadata is recomputed from the same
-    postings, and the weighted stats row reproduces the same (N, avgdl).
+    postings, and the combined stats row reproduces the same (N, avgdl).
     """
     spark = spark or SparkSession.getActiveSession()
-    _replay_pending_swap(path, spark)
-    lin = L.Lineage(spark, path)
-    cfg = _cfg_from_meta(lin.read_meta(), path)
+    lin, cfg = _open_writer(path, spark)
     n_compacts = sum(1 for r in lin.records() if r["stage"].startswith("compact_"))
     stage = f"compact_{batch_id if batch_id is not None else n_compacts}"
     if lin.is_done(stage):
         return {}
     t0 = lin.start(stage)
-
-    postings = spark.read.parquet(f"{path}/postings")
-    doclen = spark.read.parquet(f"{path}/doclen")
+    tables = [spark.read.parquet(f"{path}/{t}") for t in ("postings", "doclen")]
     if segs is None:
-        segs = [r["seg"] for r in doclen.select("seg").distinct().collect()]
-    files_before = len(postings.inputFiles()) + len(doclen.inputFiles())
-
-    target = max(spark.sparkContext.defaultParallelism, 1)
-    n_pairs = max(1, min(4096, len(segs) * cfg.n_buckets))
-
-    # --- postings: decode the affected segs and push them back through
-    # the build's blocked encoder (merges split boundary blocks), then a
-    # cheap second shuffle of the COMPRESSED rows clusters each
-    # (bucket, seg) directory into one sorted file.
-    from oni_indexer_spark.query.bm25 import _decoded
-
-    post_seg = postings.where(F.col("seg").isin(segs))
-    rows = _decoded(post_seg, cfg)
-    pos_cols = ["positions"] if cfg.positions else []
-    blocks = _postings_blocks_tid(
-        rows.select("tid", "doc_id", "tf", "dl", *pos_cols), cfg
+        segs = [r["seg"] for r in tables[1].select("seg").distinct().collect()]
+    files_before = sum(len(t.inputFiles()) for t in tables)
+    _rewrite_segments(spark, path, cfg, segs, fault_after_stage=_fault_after_stage)
+    spark.catalog.refreshByPath(path)
+    files_after = sum(
+        len(spark.read.parquet(f"{path}/{t}").inputFiles()) for t in ("postings", "doclen")
     )
-    (
-        blocks.repartition(n_pairs, "bucket", "seg")
-        .sortWithinPartitions("tid", "block_id")
-        .write.mode("overwrite")
-        .partitionBy("bucket", "seg")
-        .parquet(f"{path}/postings.next")
-    )
+    metrics = {
+        "segments_compacted": len(segs),
+        "files_before": files_before,
+        "files_after": files_after,
+    }
+    _commit(lin, path, stage, t0, **metrics)
+    return metrics
 
-    # --- doclen: one sorted file per seg
-    doclen_seg = doclen.where(F.col("seg").isin(segs))
-    (
-        doclen_seg.repartition(max(1, min(len(segs), target)), "seg")
-        .sortWithinPartitions("seg", "doc_id")
-        .write.mode("overwrite")
-        .partitionBy("seg")
-        .parquet(f"{path}/doclen.next")
-    )
 
-    # --- dfreq: sum the per-segment rows (terms whose df net out to zero
-    # after overwrite corrections are already gone — overwrite swaps in a
-    # consolidated dfreq — but keep the guard for safety)
+def _rewrite_segments(
+    spark: SparkSession,
+    path: str,
+    cfg: IndexConfig,
+    segs: list[int],
+    removed: DataFrame | None = None,
+    docs_new: DataFrame | None = None,
+    fault_after_stage: bool = False,
+) -> tuple[int, int]:
+    """Rewrite the doc-range segments ``segs`` without the docs whose
+    doc_id is in ``removed`` and with the documents ``docs_new`` added
+    (every new doc must fall in ``segs``) — the one write behind
+    overwrite_docs, delete_docs and compact_index, as Lucene's merge
+    rewrites a segment and drops its deleted docs in the same pass.
+
+    The old postings of ``segs`` are decoded once; the survivors and the
+    new docs' postings go back through the build's blocked encoder, so
+    boundary blocks split by appends merge into one row and block-max
+    metadata is recomputed (blocks of other segs keep theirs: bounds are
+    avgdl-independent). Every table is staged in one layout beside the
+    live one (``<table>.next``), which keeps answering queries:
+
+    - postings: one tid-sorted file per (bucket, seg) — the encoder's
+      compressed rows are shuffled once more, cheaply, to cluster them;
+    - doclen: one doc_id-sorted file per seg;
+    - dfreq: :func:`_merge_dfreq`'s exact counts, one file per bucket;
+    - stats: one row, the live rows plus this rewrite's change to
+      ``segs`` (their doc count and avgdl before and after, observed on
+      the doclen write) combined by ``_combine_stats``.
+
+    Not dynamic partition overwrite on the live dirs: a (bucket, seg)
+    whose every posting was removed produces no new rows, and dynamic
+    overwrite only replaces partitions present in the new data. Instead a
+    durable swap manifest records every move and delete before any live
+    dir changes, and :func:`_apply_swap` applies it: a crash before the
+    manifest leaves the index untouched (stale ``.next`` dirs are
+    overwritten by the next attempt), a crash after it is replayed by the
+    next reader or writer. ``fault_after_stage`` raises right after the
+    manifest write (the crash-injection tests). Returns the doc counts of
+    ``segs`` before and after."""
+    from pyspark import StorageLevel
+    from pyspark.sql import Observation
+
+    from oni_indexer_spark.query.bm25 import _combine_stats, _decoded
+
+    pos = ["positions"] if cfg.positions else []
+    postings = spark.read.parquet(f"{path}/postings").where(F.col("seg").isin(segs))
+    decoded = kept = _decoded(postings, cfg)
+    killed, tf_new = None, None
+    if removed is not None:
+        # decoded once, read twice (the dfreq decrement and the survivors);
+        # MEMORY_AND_DISK: bounded by the rewritten segs, spills rather
+        # than OOMs. A compaction reads it once, so it streams instead:
+        # at 1M docs it is the whole index.
+        decoded.persist(StorageLevel.MEMORY_AND_DISK)
+        killed = decoded.join(removed, "doc_id", "left_semi")
+        kept = decoded.join(removed, "doc_id", "left_anti")
+    slim = kept.select("tid", "doc_id", "tf", "dl", *pos)
+    if docs_new is not None:
+        # tokenized once, read three times (dfreq, postings, doclen's dl)
+        tf_new = _tf_table(docs_new, cfg).persist(StorageLevel.MEMORY_AND_DISK)
+        slim = slim.unionByName(
+            tf_new.select(F.xxhash64("term").alias("tid"), "doc_id", "tf", "dl", *pos)
+        )
     (
-        spark.read.parquet(f"{path}/dfreq")
-        .groupBy("term", "bucket")
-        .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
-        .where(F.col("df") > 0)
+        _merge_dfreq(spark.read.parquet(f"{path}/dfreq"), killed, tf_new)
         .repartition(cfg.n_buckets, "bucket")
         .write.mode("overwrite")
         .partitionBy("bucket")
         .parquet(f"{path}/dfreq.next")
     )
-
-    # --- stats: single weighted row, replacing the per-segment rows
-    stats_rows = spark.read.parquet(f"{path}/stats").collect()
-    n_total = sum(int(r["n_docs"]) for r in stats_rows)
-    total_dl = sum(int(r["n_docs"]) * float(r["avgdl"]) for r in stats_rows)
-    _stats_df(
-        spark, [(n_total, (total_dl / n_total) if n_total else 0.0)]
-    ).write.mode("overwrite").parquet(f"{path}/stats.next")
-
-    swap_fs = _fs_for(path, spark)
-    _write_swap_manifest(path, segs, cfg.n_buckets, swap_fs, stats_mode="replace")
-    _apply_swap(path, swap_fs)
-
-    spark.catalog.refreshByPath(path)
-    files_after = len(spark.read.parquet(f"{path}/postings").inputFiles()) + len(
-        spark.read.parquet(f"{path}/doclen").inputFiles()
+    # the sort leads with the write's partition columns: it meets the
+    # writer's required ordering, so the writer adds no sort of its own
+    (
+        _postings_blocks_tid(slim, cfg)
+        .repartition(max(1, min(4096, len(segs) * cfg.n_buckets)), "bucket", "seg")
+        .sortWithinPartitions("bucket", "seg", "tid", "block_id")
+        .write.mode("overwrite")
+        .partitionBy("bucket", "seg")
+        .parquet(f"{path}/postings.next")
     )
-    lin.finish(
-        stage,
-        t0,
-        segments_compacted=len(segs),
-        files_before=files_before,
-        files_after=files_after,
+    if killed is not None:
+        decoded.unpersist()
+    dl_stats = (F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl"))
+    before, after = Observation(), Observation()
+    doclen = spark.read.parquet(f"{path}/doclen").where(F.col("seg").isin(segs))
+    cols = doclen.columns
+    doclen = doclen.observe(before, *dl_stats)
+    if removed is not None:
+        doclen = doclen.join(removed, "doc_id", "left_anti")
+    if docs_new is not None:
+        doclen = doclen.unionByName(_doclen_from_tf(docs_new, tf_new, cfg).select(*cols))
+    (
+        doclen.observe(after, *dl_stats)
+        .repartition(max(1, min(len(segs), spark.sparkContext.defaultParallelism)), "seg")
+        .sortWithinPartitions("seg", "doc_id")
+        .write.mode("overwrite")
+        .partitionBy("seg")
+        .parquet(f"{path}/doclen.next")
     )
-    lin.bump_generation()
-    from oni_indexer_spark.query.bm25 import invalidate_searchers
+    if tf_new is not None:
+        tf_new.unpersist()
+    n_before, n_after = int(before.get["n"]), int(after.get["n"])
+    rows = spark.read.parquet(f"{path}/stats").collect() + [
+        (n_after, after.get["avgdl"] or 0.0),
+        (-n_before, before.get["avgdl"] or 0.0),
+    ]
+    _stats_df(spark, [_combine_stats(rows)]).write.mode("overwrite").parquet(
+        f"{path}/stats.next"
+    )
+    fs = _fs_for(path, spark)
+    _write_swap_manifest(path, segs, cfg.n_buckets, fs)
+    if fault_after_stage:
+        raise RuntimeError("injected crash: swap manifest written, swap not applied")
+    _apply_swap(path, fs)
+    return n_before, n_after
 
-    invalidate_searchers(path)
-    return {
-        "segments_compacted": len(segs),
-        "files_before": files_before,
-        "files_after": files_after,
-    }
 
-
-# --- overwrite swap machinery: stage → durable manifest → idempotent swap
+# --- segment-rewrite swap machinery: stage → durable manifest → idempotent swap
 #
 # All I/O goes through the Hadoop FileSystem API (fsio.Fs) — the swap
 # must work where the index actually lives at north-star scale
@@ -1251,14 +1127,12 @@ def _fs_for(path: str, spark: SparkSession | None = None):
     return Fs(path, spark)
 
 
-def _write_swap_manifest(
-    path: str, segs: list, n_buckets: int, fs, stats_mode: str = "append"
-) -> None:
+def _write_swap_manifest(path: str, segs: list, n_buckets: int, fs) -> None:
     """Record, BEFORE any live-dir mutation, exactly which directories the
     swap will replace (staged dir exists → move) or remove (no staged
-    counterpart → a (bucket, seg) whose every posting was overwritten
-    away). Written via tmp + rename so a torn manifest is never observed
-    on an atomic-rename filesystem; a LOST manifest (non-atomic store) is
+    counterpart → a (bucket, seg) whose every posting was removed).
+    Written via tmp + rename so a torn manifest is never observed on an
+    atomic-rename filesystem; a LOST manifest (non-atomic store) is
     equivalent to a crash before the manifest — live index untouched."""
     moves: list[list[str]] = []  # [staged_rel, live_rel]
     deletes: list[str] = []  # live_rel with no replacement
@@ -1276,7 +1150,7 @@ def _write_swap_manifest(
                 moves.append([staged, rel])
             else:
                 deletes.append(rel)
-    man = {"moves": moves, "deletes": deletes, "stats_mode": stats_mode}
+    man = {"moves": moves, "deletes": deletes}
     fs.write_bytes_atomic(_swap_manifest_path(path), json.dumps(man).encode())
 
 
@@ -1293,16 +1167,16 @@ def _checked_rename(fs, src: str, dst: str) -> None:
 
 
 def _apply_swap(path: str, fs) -> None:
-    """Apply (or re-apply after a crash) a pending overwrite swap. Every
-    step is idempotent: deletes are of dirs that are never recreated;
-    each staged dir is renamed at most once (skipped when already moved);
-    staged stats part-files move individually (unique part names) —
-    appended by default, or replacing the stats dir when the manifest
-    says ``stats_mode: replace`` (compaction collapses the per-segment
-    rows to one); dfreq.next replaces dfreq only while it still exists.
-    Renames are return-checked (:func:`_checked_rename`), and the
-    manifest is removed LAST, so any prefix of this function can be
-    replayed."""
+    """Apply (or re-apply after a crash) a pending segment-rewrite swap.
+    Every step is idempotent: deletes are of dirs that are never
+    recreated; each staged dir is renamed at most once (skipped when
+    already moved); stats.next and dfreq.next replace stats and dfreq
+    only while they still exist. A manifest that says ``stats_mode:
+    append`` was written by an earlier engine, whose overwrite and delete
+    staged signed correction rows: those part-files move individually
+    into stats (unique part names). Renames are return-checked
+    (:func:`_checked_rename`), and the manifest is removed LAST, so any
+    prefix of this function can be replayed."""
     mpath = _swap_manifest_path(path)
     if not fs.exists(mpath):
         return
@@ -1319,17 +1193,17 @@ def _apply_swap(path: str, fs) -> None:
             _checked_rename(fs, staged, live)
     stats_next = f"{base}/stats.next"
     if fs.is_dir(stats_next):
-        if man.get("stats_mode") == "replace":
-            # whole-dir swap: at-most-once rename, so a replay after a
-            # crash mid-step never deletes already-moved part files
-            fs.delete(f"{base}/stats")
-            _checked_rename(fs, stats_next, f"{base}/stats")
-        else:
+        if man.get("stats_mode") == "append":
             fs.mkdirs(f"{base}/stats")
             for name, is_dir, _m, _s in fs.list_status(stats_next):
                 if not is_dir and name.startswith("part-"):
                     _checked_rename(fs, f"{stats_next}/{name}", f"{base}/stats/{name}")
             fs.delete(stats_next)
+        else:
+            # whole-dir swap: at-most-once rename, so a replay after a
+            # crash mid-step never deletes already-moved part files
+            fs.delete(f"{base}/stats")
+            _checked_rename(fs, stats_next, f"{base}/stats")
     dfreq_next = f"{base}/dfreq.next"
     if fs.is_dir(dfreq_next):
         fs.delete(f"{base}/dfreq")
@@ -1343,7 +1217,7 @@ def _apply_swap(path: str, fs) -> None:
 
 
 def _replay_pending_swap(path: str, spark: SparkSession | None = None) -> None:
-    """Self-heal hook: finish a crashed overwrite's swap before reading
+    """Self-heal hook: finish a crashed segment rewrite's swap before reading
     or mutating the index (no-op when no manifest is pending)."""
     fs = _fs_for(path, spark)
     if fs.exists(_swap_manifest_path(path)):
@@ -1351,7 +1225,7 @@ def _replay_pending_swap(path: str, spark: SparkSession | None = None) -> None:
 
 
 def read_index(spark: SparkSession, path: str) -> IndexTables:
-    # self-heal: an overwrite_docs that crashed mid-swap left a durable
+    # self-heal: a segment rewrite that crashed mid-swap left a durable
     # swap manifest; replaying it is idempotent and restores consistency
     _replay_pending_swap(path, spark)
     cfg = _cfg_from_meta(L.Lineage(spark, path).read_meta(), path)

@@ -5,7 +5,6 @@ from oni_indexer_spark.query.bm25 import (  # noqa: F401
     search,
     snippet_topk,
     topk,
-    topk_direct,
 )
 from oni_indexer_spark.query.facets import (  # noqa: F401
     facet_counts,

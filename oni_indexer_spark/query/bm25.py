@@ -65,11 +65,6 @@ from oni_indexer_spark.analyzer import query_terms
 from oni_indexer_spark.index.build import IndexConfig, IndexTables
 
 
-def idf_expr(df_col: Column, n_docs: int) -> Column:
-    """Lucene BM25 idf: ln(1 + (N - df + 0.5)/(df + 0.5))."""
-    return F.log(1.0 + (F.lit(float(n_docs)) - df_col + 0.5) / (df_col + 0.5))
-
-
 def tfn_expr(tf: Column, dl: Column, avgdl: float, k1: float, b: float) -> Column:
     return (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * dl / F.lit(avgdl)))
 
@@ -696,8 +691,9 @@ _PINNED_MAX_LOCAL_BYTES = 24 << 20  # read from a file: URI
 
 def _combine_stats(rows) -> tuple[int, float]:
     """``(N, avgdl)`` from stats rows ``(n_docs, avgdl)``: one row per
-    build/append batch, plus signed correction rows from overwrite and
-    delete. N is the integer sum and avgdl ``fsum(n·avgdl) / N``, so the
+    build/append batch (a segment rewrite leaves one row; indexes written
+    by earlier engines may hold signed correction rows from overwrite and
+    delete). N is the integer sum and avgdl ``fsum(n·avgdl) / N``, so the
     result does not depend on file or row order."""
     import math
 
@@ -2438,55 +2434,6 @@ def _blockmax_prune(
         return p, tau  # no block falls below τ — floor-only pruning
     keep = bounds.where(F.col("ub") >= guard).select("block_id")
     return p.join(F.broadcast(keep), "block_id", "left_semi"), tau
-
-
-def topk_direct(
-    docs: DataFrame,
-    query: str,
-    k: int = 10,
-    mode: str = "or",
-    fq: dict[str, str] | None = None,
-    k1: float = 1.2,
-    b: float = 0.75,
-    analyzer: str = "code",
-) -> DataFrame:
-    """BM25 top-k computed straight from the documents table (no
-    materialized index) — one declarative plan, used as the in-engine
-    cross-check for the index path and as the SQL-oracle twin.
-    """
-    from oni_indexer_spark.analyzer import analyzer_tokens
-
-    terms = query_terms(query, analyzer)
-    spark = docs.sparkSession
-    if not terms:
-        return _empty_literal(spark, "rank int, doc_id long, score double")
-    # Solr fq semantics: corpus stats (N, avgdl, df) are global; the
-    # filter only restricts which docs may appear in the result.
-    base = docs
-    toks = base.select("doc_id", analyzer_tokens("content", analyzer).alias("toks")).select(
-        "doc_id", F.size("toks").alias("dl"), F.explode("toks").alias("term")
-    )
-    tf = toks.groupBy("doc_id", "dl", "term").agg(F.count(F.lit(1)).alias("tf"))
-    dlt = base.select("doc_id", F.size(analyzer_tokens("content", analyzer)).alias("dl"))
-    srow = dlt.agg(F.count(F.lit(1)).alias("n"), F.avg("dl").alias("a")).collect()[0]
-    n_docs, avgdl = int(srow["n"]), float(srow["a"] or 0.0)
-    qt = tf.where(F.col("term").isin(terms))
-    dfreq = qt.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    scored = (
-        qt.join(F.broadcast(dfreq), "term")
-        .withColumn(
-            "s", idf_expr(F.col("df"), n_docs) * tfn_expr(F.col("tf"), F.col("dl"), avgdl, k1, b)
-        )
-        .groupBy("doc_id")
-        .agg(F.sum("s").alias("score"), F.count(F.lit(1)).alias("n_terms_hit"))
-    )
-    if mode == "and":
-        scored = scored.where(F.col("n_terms_hit") == len(set(terms)))
-    if fq:
-        scored = scored.join(
-            _fq_keep(docs, fq).select("doc_id"), "doc_id", "left_semi"
-        )
-    return _ranked(spark, scored.select("doc_id", "score"), k)
 
 
 def topk_fields(

@@ -34,14 +34,6 @@ def facet_counts(
     )
 
 
-def filter_query(df: DataFrame, filters: dict[str, str]) -> DataFrame:
-    """Solr ``fq`` drill-down: conjunction of exact matches (C9)."""
-    out = df
-    for c, v in filters.items():
-        out = out.where(F.col(c) == v)
-    return out
-
-
 def id_lookup(df: DataFrame, doc_id: int) -> DataFrame:
     """Exact-id record view (C10) — min/max + bloom skipping at scale."""
     return df.where(F.col("doc_id") == doc_id)

@@ -1,6 +1,5 @@
-"""End-to-end BM25 correctness: the index path (build → postings → topk),
-the direct declarative path, and the DuckDB oracle must be rank-identical
-with scores equal to 1e-6 — the golden-results gate from BASELINE.json
+"""End-to-end BM25 correctness: the index path (build → postings → topk)
+and the DuckDB oracle must be rank-identical with scores equal to 1e-6 — the golden-results gate from BASELINE.json
 (analogue of the reference's golden-file tests,
 test/resolve-items.spec.js:35-46)."""
 
@@ -9,7 +8,7 @@ import pytest
 
 from oni_indexer_spark.index import IndexConfig, build_index
 from oni_indexer_spark.oracle import bm25_topk_sql
-from oni_indexer_spark.query import topk, topk_direct
+from oni_indexer_spark.query import topk
 from tests.conftest import SF_SMOKE
 
 QUERIES = [
@@ -35,6 +34,13 @@ def _oracle(query, k, mode, fq_lang):
     return con.execute(sql).fetchall()
 
 
+def _assert_matches_oracle(got, query, k, mode="or", fq_lang=None):
+    exp = [(r[0], r[1], round(r[2], 6)) for r in _oracle(query, k, mode, fq_lang)]
+    assert [(g[0], g[1]) for g in got] == [(e[0], e[1]) for e in exp], "rank/doc mismatch"
+    for g, e in zip(got, exp):
+        assert abs(g[2] - e[2]) < 1e-6
+
+
 @pytest.fixture(scope="module")
 def tables(docs):
     t = build_index(docs, IndexConfig(block_size=64, n_buckets=8))
@@ -54,20 +60,7 @@ def _rows(df):
 def test_index_path_matches_oracle(tables, query, k, mode, fq_lang):
     fq = {"lang": fq_lang} if fq_lang else None
     got = _rows(topk(tables, query, k=k, mode=mode, fq=fq))
-    exp = [(r[0], r[1], round(r[2], 6)) for r in _oracle(query, k, mode, fq_lang)]
-    assert [(g[0], g[1]) for g in got] == [(e[0], e[1]) for e in exp], "rank/doc mismatch"
-    for g, e in zip(got, exp):
-        assert abs(g[2] - e[2]) < 1e-6
-
-
-@pytest.mark.parametrize("query,k,mode,fq_lang", QUERIES)
-def test_direct_path_matches_index_path(docs, tables, query, k, mode, fq_lang):
-    fq = {"lang": fq_lang} if fq_lang else None
-    a = _rows(topk(tables, query, k=k, mode=mode, fq=fq))
-    b = _rows(topk_direct(docs, query, k=k, mode=mode, fq=fq))
-    assert [(x[0], x[1]) for x in a] == [(x[0], x[1]) for x in b]
-    for x, y in zip(a, b):
-        assert abs(x[2] - y[2]) < 1e-9
+    _assert_matches_oracle(got, query, k, mode, fq_lang)
 
 
 def test_index_invariants(docs, tables):
@@ -103,12 +96,10 @@ def test_blockaligned_carry_across_tiny_arrow_batches(spark, docs):
     spark.conf.set(key, "2")
     try:
         t = build_index(docs, IndexConfig(block_size=16, n_buckets=4))
-        a = _rows(topk(t, "the scan join", k=25, prune=False))
-        b = _rows(topk_direct(docs, "the scan join", k=25))
-        assert a == b
-        a2 = _rows(topk(t, "hash join", k=10, mode="and"))
-        b2 = _rows(topk_direct(docs, "hash join", k=10, mode="and"))
-        assert a2 == b2
+        got = _rows(topk(t, "the scan join", k=25, prune=False))
+        _assert_matches_oracle(got, "the scan join", 25)
+        got = _rows(topk(t, "hash join", k=10, mode="and"))
+        _assert_matches_oracle(got, "hash join", 10, "and")
     finally:
         spark.conf.set(key, old)
 

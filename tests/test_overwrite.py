@@ -3,7 +3,10 @@ changed docs, every query answers EXACTLY like a fresh build over the
 updated corpus — postings, dfreq, doclen sha256 and stats all corrected —
 and only the affected seg directories were rewritten."""
 
+import glob
+import json
 import os
+import shutil
 import tempfile
 
 import pytest
@@ -11,8 +14,11 @@ from pyspark.sql import functions as F
 
 from oni_indexer_spark.index import (
     IndexConfig,
+    append_to_index,
     build_index,
     build_to_path,
+    compact_index,
+    delete_docs,
     overwrite_docs,
     read_index,
 )
@@ -20,6 +26,8 @@ from oni_indexer_spark.query import topk
 
 # tiny segs so a 256-doc corpus spans several: seg_docs = 16*4 = 64
 CFG = IndexConfig(block_size=16, n_buckets=4, seg_blocks=4)
+# the segs holding the fixture's overwritten docs 0 and 200
+AFFECTED_SEGS = sorted({i // CFG.seg_docs for i in range(0, 256, 200)})
 
 
 def _corpus(spark, marker=""):
@@ -38,6 +46,17 @@ def _rows(df):
     return [(r["rank"], r["doc_id"], round(r["score"], 6)) for r in df.collect()]
 
 
+def _assert_one_layout(spark, p, segs):
+    """The layout every segment rewrite leaves: one data file in each
+    rewritten postings (bucket, seg) and doclen seg directory, and one
+    stats row."""
+    dirs = [d for s in segs for d in glob.glob(f"{p}/postings/bucket=*/seg={s}")]
+    assert dirs, segs
+    for d in dirs + [f"{p}/doclen/seg={s}" for s in segs]:
+        assert len([f for f in os.listdir(d) if f.startswith("part-")]) == 1, d
+    assert read_index(spark, p).stats.count() == 1
+
+
 @pytest.fixture(scope="module")
 def paths(spark):
     base = tempfile.mkdtemp(prefix="ovr_")
@@ -45,8 +64,7 @@ def paths(spark):
     build_to_path(_corpus(spark), p, CFG, bucket_group_size=4)
     changed = _corpus(spark, marker="needle_mark").where(F.col("doc_id") % 200 == 0)
     # capture pre-state of an UNaffected seg dir for the amplification check
-    affected_segs = {i // CFG.seg_docs for i in range(0, 256, 200)}
-    untouched = next(s for s in range(256 // CFG.seg_docs) if s not in affected_segs)
+    untouched = next(s for s in range(256 // CFG.seg_docs) if s not in AFFECTED_SEGS)
     d = f"{p}/doclen/seg={untouched}"
     before = {f: os.path.getmtime(os.path.join(d, f)) for f in os.listdir(d)}
     overwrite_docs(changed, p)
@@ -82,6 +100,11 @@ def test_dfreq_and_stats_exact(spark, paths):
     ).hexdigest()
 
 
+def test_rewritten_segs_one_layout(spark, paths):
+    p, _, _ = paths
+    _assert_one_layout(spark, p, AFFECTED_SEGS)
+
+
 def test_unaffected_segs_not_rewritten(paths):
     p, untouched, before = paths
     d = f"{p}/doclen/seg={untouched}"
@@ -97,31 +120,60 @@ def test_overwrite_idempotent_on_replay(spark, paths):
     assert disk.stats.agg(F.sum("n_docs")).collect()[0][0] == 256
 
 
-def test_crash_after_stage_self_heals(spark):
-    """Crash-injection: overwrite dies right after the swap manifest is
-    written (nothing swapped yet). read_index replays the pending swap
-    and the index answers exactly like a fresh build over the updated
-    corpus — no restore from source needed."""
-    import json
-    import shutil
-
-    base = tempfile.mkdtemp(prefix="ovr_crash_")
+@pytest.mark.parametrize("mutator", ["overwrite", "delete", "compact"])
+def test_crash_after_stage_self_heals(spark, mutator):
+    """Crash-injection: each segment rewrite dies right after the swap
+    manifest is written (nothing swapped yet), on an index with one
+    append (so compact has segments to merge). read_index replays the
+    pending swap and the index answers exactly like a fresh build over
+    the resulting corpus — no restore from source needed."""
+    base = tempfile.mkdtemp(prefix=f"crash_{mutator}_")
     p = f"{base}/idx"
-    build_to_path(_corpus(spark), p, CFG, bucket_group_size=4)
-    changed = _corpus(spark, marker="crash_mark").where(F.col("doc_id") % 200 == 0)
+    corpus = _corpus(spark)
+    build_to_path(corpus.where(F.col("doc_id") < 192), p, CFG, bucket_group_size=4)
+    append_to_index(corpus.where(F.col("doc_id") >= 192), p)
+    after = corpus
     with pytest.raises(RuntimeError, match="injected crash"):
-        overwrite_docs(changed, p, _fault_after_stage=True)
+        if mutator == "overwrite":
+            after = _corpus(spark, marker="crash_mark")
+            changed = after.where(F.col("doc_id") % 200 == 0)
+            overwrite_docs(changed, p, _fault_after_stage=True)
+        elif mutator == "delete":
+            after = corpus.where(~F.col("doc_id").isin(1, 2, 3, 200))
+            delete_docs(p, spark, doc_ids=[1, 2, 3, 200], _fault_after_stage=True)
+        else:
+            compact_index(p, spark, _fault_after_stage=True)
     man = f"{p}/_pending_swap.json"
-    assert os.path.exists(man)
     with open(man) as fh:
-        m = json.load(fh)
-    assert m["moves"]  # staged dirs were recorded before any mutation
+        assert json.load(fh)["moves"]  # staged dirs recorded before any mutation
     disk = read_index(spark, p)  # replays the swap
     assert not os.path.exists(man)
     assert not os.path.exists(f"{p}/postings.next")
-    fresh = build_index(_corpus(spark, marker="crash_mark"), CFG)
-    for q in ["crash_mark", "alpha", "tok_100"]:
+    fresh = build_index(after, CFG)
+    for q in ["crash_mark", "alpha", "tok_1 tok_100", "gamma beta_3"]:
         assert _rows(topk(disk, q, k=10)) == _rows(topk(fresh, q, k=10)), q
+    shutil.rmtree(base, ignore_errors=True)
+
+
+def test_replay_appends_staged_stats_rows(spark):
+    """A swap manifest that says ``stats_mode: append`` (an earlier
+    engine's overwrite/delete staged signed correction rows) may still be
+    pending when this engine opens the index: the replay adds the staged
+    rows to stats instead of replacing it."""
+    base = tempfile.mkdtemp(prefix="ovr_stats_append_")
+    p = f"{base}/idx"
+    build_to_path(_corpus(spark), p, CFG, bucket_group_size=4)
+    live = [tuple(r) for r in read_index(spark, p).stats.collect()]
+    spark.createDataFrame([(-1, 5.0)], "n_docs long, avgdl double").coalesce(
+        1
+    ).write.parquet(f"{p}/stats.next")
+    man = f"{p}/_pending_swap.json"
+    with open(man, "w") as fh:
+        json.dump({"moves": [], "deletes": [], "stats_mode": "append"}, fh)
+    disk = read_index(spark, p)  # replays the swap
+    assert not os.path.exists(man)
+    assert not os.path.exists(f"{p}/stats.next")
+    assert sorted(tuple(r) for r in disk.stats.collect()) == sorted(live + [(-1, 5.0)])
     shutil.rmtree(base, ignore_errors=True)
 
 
@@ -129,9 +181,6 @@ def test_crash_mid_swap_replay_idempotent(spark):
     """Crash-injection mid-swap: some manifest steps already applied
     (a target dir deleted, one staged dir already renamed). Replaying the
     manifest must not delete swapped-in data or double-apply anything."""
-    import json
-    import shutil
-
     from oni_indexer_spark.index.build import _apply_swap, _fs_for
 
     base = tempfile.mkdtemp(prefix="ovr_crash2_")
@@ -159,9 +208,6 @@ def test_crash_mid_swap_replay_idempotent(spark):
 def test_mutators_reject_old_format(spark):
     """ADVICE r2: append/overwrite into a v1/v2-format index must fail
     loudly instead of writing v3-layout files into an old layout."""
-    import json
-    import shutil
-
     base = tempfile.mkdtemp(prefix="ovr_fmt_")
     p = f"{base}/idx"
     build_to_path(_corpus(spark), p, CFG, bucket_group_size=4)
@@ -235,29 +281,7 @@ def test_delete_docs_matches_filtered_oracle(spark, docs, tmp_path):
 
     n_docs, _ = searcher_for(t).stats()
     assert n_docs == 500 - 10 - n_fr
-
-
-def test_delete_docs_crash_replay(spark, docs, tmp_path):
-    """Crash after the swap manifest: read_index replays the swap and
-    the deletion is complete (same guarantee as overwrite's)."""
-    import pytest as _pytest
-
-    from oni_indexer_spark.index import (
-        IndexConfig,
-        build_to_path,
-        delete_docs,
-        read_index,
-    )
-    from oni_indexer_spark.query import topk
-
-    p = str(tmp_path / "delcrash")
-    build_to_path(docs, p, IndexConfig(block_size=64, n_buckets=8),
-                  bucket_group_size=8, resume=False)
-    with _pytest.raises(RuntimeError, match="injected crash"):
-        delete_docs(p, spark, doc_ids=[1, 2, 3], _fault_after_stage=True)
-    t = read_index(spark, p)  # replays _pending_swap.json
-    hits = {r["doc_id"] for r in topk(t, "the", k=1000).collect()}
-    assert not hits & {1, 2, 3}
+    _assert_one_layout(spark, p, [0])  # one seg holds the whole corpus
 
 
 def test_delete_docs_requires_predicate(spark, docs, tmp_path):
